@@ -1,28 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // See Verify.scala: InferFiltersFromGenerate pessimizes explode over
-      // derived arrays (text tokenize/shingle pipelines).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // NOT set (r15, measured): spark.sql.join.preferSortMergeJoin=false
-      // + adaptive.maxShuffledHashJoinLocalMapThreshold — the guide-§3.1
-      // blanket SHJ experiment regressed the simhash/minhash band
-      // self-joins 2-9x (duplicate-heavy build keys blow up the
-      // per-partition hash maps: q_dedup15 1.3 s -> 11.3 s) while the
-      // scattered wins elsewhere were within run noise. Join strategy
-      // stays a per-site decision (explicit broadcast/size-adaptive
-      // picks in the operators).
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // offline stage: index build (see SparkEntry.prepare) — timed apart so
     // per-query numbers measure query latency, not one-time index builds

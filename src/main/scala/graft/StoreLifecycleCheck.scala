@@ -31,13 +31,7 @@ object StoreLifecycleCheck {
   private val NAll = 400L
 
   private def session(appName: String): SparkSession =
-    SparkSession.builder()
-      .master("local[4]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession.builder(4).appName(appName).getOrCreate()
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: StoreLifecycleCheck <storeRoot>")

@@ -38,13 +38,7 @@ import graft.streaming.StreamOps
 object StreamingCheck {
 
   private def session(): SparkSession =
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-check")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession.builder(4).appName("graft-streaming-check").getOrCreate()
 
   private def canon(df: DataFrame): Seq[Seq[String]] = {
     val cols = df.columns.sorted.toIndexedSeq

@@ -55,116 +55,86 @@ object GraphOps {
     val verts = e0.select(col("__src").as("vertex"))
       .union(e0.select(col("__dst").as("vertex")))
       .distinct().localCheckpoint()
-    // the vertex-table size decides the per-iteration join strategy —
-    // see [[maybeBroadcast]] (a checkpointed RDD reports no stats, so
-    // the planner can never pick the broadcast itself)
+    // the vertex-table size decides the per-iteration join strategy (a
+    // checkpointed RDD reports no stats, so the planner can never pick
+    // the broadcast itself)
     val nV = verts.count()
-    // SIZE-ADAPTIVE LOCAL EVALUATION (r16 — the connectedComponents
-    // rationale applied to the rank loop): when the WHOLE edge list fits
-    // the session's broadcast budget, every iteration already pulls a
+    val base = (100L - dampingPct) * 10000L
+    // SIZE-ADAPTIVE LOCAL EVALUATION (the connectedComponents rationale
+    // applied to the rank loop): when the WHOLE edge list fits the
+    // session's broadcast budget, every iteration already pulls a
     // vertex-sized table to the driver to broadcast it — collecting the
     // edges ONCE and running the exact integer recurrence locally is
     // bit-identical (integer sums are order-independent; Long wrap and
     // truncating div match Spark's non-ANSI semantics) and strictly less
     // driver traffic. Bigger graphs keep the distributed loop; -1
     // disables the local path (law-spec'd equal on random graphs).
-    localLongPairs(e0, nV) match {
-      case Some(edgeArr) =>
-        return localPageRankFrame(e0.sparkSession, edgeArr, iterations,
-          dampingPct, seedBase = None)
-      case None => ()
-    }
+    SizeAdaptive.localLongPairs(e0)
+      .map(localRank(e0.sparkSession, _, iterations, dampingPct,
+        Set.empty, _ => base, _ => 1000000L))
+      .getOrElse(rankLoop(e0, verts.withColumn("__base", lit(base)),
+        lit(1000000L), nV, iterations, dampingPct))
+  }
+
+  /** The distributed iteration behind [[pageRank]] and
+    * [[personalizedPageRank]]: `teleport` is (vertex, __base) over the
+    * whole vertex set (nV rows), `init` the starting rank per teleport
+    * row; each iteration computes
+    * pr'(v) = __base(v) + (d · Σ_{u→v} (pr(u) div outdeg(u))) div 100. */
+  private def rankLoop(e0: DataFrame, teleport: DataFrame, init: Column,
+                       nV: Long, iterations: Int, dampingPct: Int): DataFrame = {
     // outdeg is static across iterations — join it into the edge table
     // ONCE (window count on the materialized edges: no second join per
     // iteration, the per-iteration plan is edge⋈pr + one aggregation)
     val e = e0.withColumn("__outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("__src")))
       .localCheckpoint()
-    val basePr = lit((100L - dampingPct) * 10000L)
-    var pr = verts.withColumn("pr_micro", lit(1000000L))
+    var pr = teleport.select(col("vertex"), init.as("pr_micro"))
     for (_ <- 1 to iterations) {
       // contributions: pr(u) div outdeg(u) routed along each edge, then
       // partially aggregated map-side by groupBy(dst) — one shuffle/iter
       // (broadcast rank side when it fits: the edge table is then never
       // sorted or shuffled inside the loop)
       val contrib = e
-        .join(maybeBroadcast(
+        .join(SizeAdaptive.maybeBroadcast(
           pr.select(col("vertex").as("__src"), col("pr_micro")), nV), Seq("__src"))
         .select(col("__dst"), expr("pr_micro div __outdeg").as("__c"))
         .groupBy("__dst").agg(sum(col("__c")).as("__s"))
-      pr = verts
-        .join(maybeBroadcast(contrib.withColumnRenamed("__dst", "vertex"), nV),
-          Seq("vertex"), "left_outer")
+      pr = teleport
+        .join(SizeAdaptive.maybeBroadcast(
+          contrib.withColumnRenamed("__dst", "vertex"), nV), Seq("vertex"), "left_outer")
         .select(col("vertex"),
-          (basePr + expr(s"($dampingPct * coalesce(__s, 0L)) div 100"))
+          (col("__base") + expr(s"($dampingPct * coalesce(__s, 0L)) div 100"))
             .cast("long").as("pr_micro"))
       // shuffle path: truncate lineage so the per-iteration plan stays
       // O(1). Broadcast path: skip it — each pr_i appears exactly once
       // (inside iteration i+1's broadcast build), so the unrolled plan is
       // linear with no recomputation, and the materialization barrier per
       // iteration costs more than it saves.
-      if (nV > broadcastRowCap(pr)) pr = pr.localCheckpoint()
+      if (nV > SizeAdaptive.broadcastRowCap(pr)) pr = pr.localCheckpoint()
     }
     pr
   }
 
-  /** Broadcast `df` when a conservative estimate of its built hash
-    * relation (~100 B/row) fits under the session's
-    * autoBroadcastJoinThreshold; otherwise return it unchanged (the
-    * shuffle path). The iterative operators' per-round frames are
-    * localCheckpointed RDDs with NO size statistics, so Spark's own
-    * broadcast pick can never fire on them — this re-derives the same
-    * decision from a row count the caller already has, and scales the
-    * same way (a billion-vertex graph falls back to the shuffle path
-    * exactly as the planner would). */
-  private def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
-    SizeAdaptive.maybeBroadcast(df, rows)
-
-  // ---- size-adaptive local evaluation (r16) -----------------------------
-  // Gate + collect for the iterative loops' local twins: `df` must be a
-  // two-long-column frame (edge / adjacency pairs). Collected only when
-  // BOTH the known row bound and the frame's own count fit the session's
-  // broadcast budget — the same ~100 B/row autoBroadcastJoinThreshold
-  // derivation the loops' per-round broadcasts use, so the decision
-  // scales exactly as the planner's would (and -1 disables it).
-  private def localLongPairs(df: DataFrame, knownBound: Long): Option[Array[(Long, Long)]] = {
-    val cap = SizeAdaptive.broadcastRowCap(df)
-    if (knownBound > cap) return None
-    val n = df.count()
-    if (n > cap) return None
-    val spark = df.sparkSession
-    import spark.implicits._
-    Some(df.as[(Long, Long)].collect())
-  }
-
-  /** Driver-local twin of the [[pageRank]] / [[personalizedPageRank]]
-    * iteration over a collected edge array — bit-identical to the
-    * distributed loop: contributions are `pr div outdeg` per edge row,
-    * summed per destination (Long sums — order-independent), update
-    * `base + (d·Σ) div 100` with the same Long wrap and truncating-div
-    * semantics. `seedBase = None` is uniform PageRank (init 1e6, base
-    * (100−d)·1e4); `Some((seeds, base))` is the personalized form (init =
-    * teleport vector, base only on seeds, seeds join the vertex set). */
-  private def localPageRankFrame(spark: org.apache.spark.sql.SparkSession,
-                                 edges: Array[(Long, Long)], iterations: Int,
-                                 dampingPct: Int,
-                                 seedBase: Option[(Set[Long], Long)]): DataFrame = {
+  /** Driver-local twin of [[rankLoop]] over a collected edge array —
+    * bit-identical to the distributed loop: contributions are
+    * `pr div outdeg` per edge row, summed per destination (Long sums —
+    * order-independent), update `base + (d·Σ) div 100` with the same Long
+    * wrap and truncating-div semantics. The vertex set is the edge
+    * endpoints plus `seeds`. */
+  private def localRank(spark: org.apache.spark.sql.SparkSession,
+                        edges: Array[(Long, Long)], iterations: Int,
+                        dampingPct: Int, seeds: Set[Long],
+                        base: Long => Long, init: Long => Long): DataFrame = {
     import spark.implicits._
     val outdeg = new java.util.HashMap[Long, Long]()
     edges.foreach { case (s, _) => outdeg.merge(s, 1L, (a, b) => a + b) }
     val vertSet = collection.mutable.LinkedHashSet.empty[Long]
     edges.foreach { case (s, d) => vertSet += s; vertSet += d }
-    seedBase.foreach { case (seeds, _) => seeds.foreach(vertSet += _) }
+    vertSet ++= seeds
     val verts = vertSet.toArray.sorted
-    def base(v: Long): Long = seedBase match {
-      case None => (100L - dampingPct) * 10000L
-      case Some((seeds, b)) => if (seeds.contains(v)) b else 0L
-    }
     val pr = new java.util.HashMap[Long, Long]()
-    verts.foreach(v => pr.put(v, seedBase match {
-      case None => 1000000L
-      case Some(_) => base(v)
-    }))
+    verts.foreach(v => pr.put(v, init(v)))
     for (_ <- 1 to iterations) {
       val contrib = new java.util.HashMap[Long, Long]()
       edges.foreach { case (s, d) =>
@@ -176,11 +146,6 @@ object GraphOps {
     }
     verts.map(v => (v, pr.get(v))).toSeq.toDF("vertex", "pr_micro")
   }
-
-  /** Max row count [[maybeBroadcast]] will broadcast for this session
-    * (r16: one shared derivation — see [[SizeAdaptive.broadcastRowCap]]). */
-  private def broadcastRowCap(df: DataFrame): Long =
-    SizeAdaptive.broadcastRowCap(df)
 
   /** Canonical undirected simple-graph edge list: each edge once as
     * (lo, hi) with lo < hi, self-loops dropped, parallel edges collapsed.
@@ -302,72 +267,62 @@ object GraphOps {
     require(k >= 1, s"k must be >= 1, got $k")
     var cur = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
     var n = cur.count()
-    // size-adaptive local evaluation (r16 — see [[pageRank]]): the peel
-    // loop over a collected edge array, identical round semantics
-    // including the maxRounds fail-fast and the partial-peel contract
-    localLongPairs(cur, n) match {
-      case Some(edges0) =>
-        val spark = cur.sparkSession
-        import spark.implicits._
-        var es = edges0
-        var localDone = es.isEmpty
-        var r = 0
-        def degrees(a: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
-          val m = new java.util.HashMap[Long, Long]()
-          a.foreach { case (lo, hi) =>
-            m.merge(lo, 1L, (x, y) => x + y); m.merge(hi, 1L, (x, y) => x + y)
-          }
-          m
+    // size-adaptive local evaluation (see [[pageRank]]): the peel loop
+    // over a collected edge array, identical round semantics including
+    // the maxRounds fail-fast and the partial-peel contract
+    val (done, remaining, cores) = SizeAdaptive.localLongPairs(cur, Some(n)).map { edges0 =>
+      val spark = cur.sparkSession
+      import spark.implicits._
+      def degrees(a: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
+        val m = new java.util.HashMap[Long, Long]()
+        a.foreach { case (lo, hi) =>
+          m.merge(lo, 1L, (x, y) => x + y); m.merge(hi, 1L, (x, y) => x + y)
         }
-        while (!localDone && r < maxRounds) {
-          val deg = degrees(es)
-          val next = es.filter { case (lo, hi) =>
-            deg.get(lo) >= k && deg.get(hi) >= k
-          }
-          localDone = next.length == es.length
-          es = next
-          r += 1
-        }
-        if (!localDone && requireConverged)
-          throw new IllegalStateException(
-            s"kCore did not converge within maxRounds = $maxRounds (edges " +
-              s"still shrinking: ${es.length} remain). The partial peel is a " +
-              "SUPERSET of the k-core; raise maxRounds, or pass " +
-              s"requireConverged = false if the $maxRounds-round partial " +
-              "peel is the intended semantic.")
+        m
+      }
+      var es = edges0
+      var localDone = es.isEmpty
+      var r = 0
+      while (!localDone && r < maxRounds) {
         val deg = degrees(es)
-        val out = collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        deg.forEach { (v, d2) => if (d2 >= k) out += ((v, d2)) }
-        return out.sortBy(_._1).toSeq.toDF("vertex", "core_degree")
-      case None => ()
-    }
-    var done = n == 0L
-    var rounds = 0
-    while (!done && rounds < maxRounds) {
-      val keep = undirectedDegrees(cur).where(col("__deg") >= k)
-        .select(col("vertex")).localCheckpoint()
-      // keep has at most 2n rows (one per edge endpoint) — size-adaptive
-      // broadcast keeps the edge table unshuffled inside the peel loop
-      val next = cur
-        .join(maybeBroadcast(keep.withColumnRenamed("vertex", "__lo"), 2 * n),
-          Seq("__lo"), "left_semi")
-        .join(maybeBroadcast(keep.withColumnRenamed("vertex", "__hi"), 2 * n),
-          Seq("__hi"), "left_semi")
-        .localCheckpoint()
-      val m = next.count()
-      done = m == n // no edge removed => every remaining degree >= k
-      cur = next
-      n = m
-      rounds += 1
+        val next = es.filter { case (lo, hi) => deg.get(lo) >= k && deg.get(hi) >= k }
+        localDone = next.length == es.length
+        es = next
+        r += 1
+      }
+      val out = collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      degrees(es).forEach { (v, d) => if (d >= k) out += ((v, d)) }
+      (localDone, es.length.toLong, out.sortBy(_._1).toSeq.toDF("vertex", "core_degree"))
+    }.getOrElse {
+      var done = n == 0L
+      var rounds = 0
+      while (!done && rounds < maxRounds) {
+        val keep = undirectedDegrees(cur).where(col("__deg") >= k)
+          .select(col("vertex")).localCheckpoint()
+        // keep has at most 2n rows (one per edge endpoint) — size-adaptive
+        // broadcast keeps the edge table unshuffled inside the peel loop
+        val next = cur
+          .join(SizeAdaptive.maybeBroadcast(keep.withColumnRenamed("vertex", "__lo"), 2 * n),
+            Seq("__lo"), "left_semi")
+          .join(SizeAdaptive.maybeBroadcast(keep.withColumnRenamed("vertex", "__hi"), 2 * n),
+            Seq("__hi"), "left_semi")
+          .localCheckpoint()
+        val m = next.count()
+        done = m == n // no edge removed => every remaining degree >= k
+        cur = next
+        n = m
+        rounds += 1
+      }
+      (done, n, undirectedDegrees(cur).where(col("__deg") >= k)
+        .select(col("vertex"), col("__deg").as("core_degree")))
     }
     if (!done && requireConverged)
       throw new IllegalStateException(
         s"kCore did not converge within maxRounds = $maxRounds (edges still " +
-          s"shrinking: $n remain). The partial peel is a SUPERSET of the " +
+          s"shrinking: $remaining remain). The partial peel is a SUPERSET of the " +
           "k-core; raise maxRounds, or pass requireConverged = false if the " +
           s"$maxRounds-round partial peel is the intended semantic.")
-    undirectedDegrees(cur).where(col("__deg") >= k)
-      .select(col("vertex"), col("__deg").as("core_degree"))
+    cores
   }
 
   /** Link prediction over the undirected simple graph: for every
@@ -470,59 +425,58 @@ object GraphOps {
       .localCheckpoint()
     var labels = nbrs.select(col("vertex")).distinct()
       .select(col("vertex"), col("vertex").as("label")).localCheckpoint()
-    val nV = labels.count() // size-adaptive join pick, see maybeBroadcast
-    // size-adaptive local evaluation (r16 — see [[pageRank]]): the
-    // synchronous update rule over a collected adjacency is deterministic
-    // (argmax = max over (count, −label), exactly the aggregation below)
-    localLongPairs(nbrs, nV) match {
-      case Some(adjArr) =>
-        val spark = nbrs.sparkSession
-        import spark.implicits._
-        val verts = {
-          val s = collection.mutable.LinkedHashSet.empty[Long]
-          adjArr.foreach { case (v, n) => s += v; s += n }
-          s.toArray.sorted
+    val nV = labels.count() // size-adaptive join pick
+    // size-adaptive local evaluation (see [[pageRank]]): the synchronous
+    // update rule over a collected adjacency is deterministic (argmax =
+    // max over (count, −label), exactly the aggregation below)
+    SizeAdaptive.localLongPairs(nbrs).map { adjArr =>
+      val spark = nbrs.sparkSession
+      import spark.implicits._
+      val verts = {
+        val s = collection.mutable.LinkedHashSet.empty[Long]
+        adjArr.foreach { case (v, n) => s += v; s += n }
+        s.toArray.sorted
+      }
+      val lab = new java.util.HashMap[Long, Long]()
+      verts.foreach(v => lab.put(v, v))
+      for (_ <- 1 to rounds) {
+        val next = new java.util.HashMap[Long, Long]()
+        val counts = new java.util.HashMap[(Long, Long), Long]()
+        adjArr.foreach { case (v, n) =>
+          counts.merge((v, lab.get(n)), 1L, (a, b) => a + b)
         }
-        val lab = new java.util.HashMap[Long, Long]()
-        verts.foreach(v => lab.put(v, v))
-        for (_ <- 1 to rounds) {
-          val next = new java.util.HashMap[Long, Long]()
-          val counts = new java.util.HashMap[(Long, Long), Long]()
-          adjArr.foreach { case (v, n) =>
-            counts.merge((v, lab.get(n)), 1L, (a, b) => a + b)
-          }
-          val best = new java.util.HashMap[Long, (Long, Long)]() // v -> (cnt, -label)
-          counts.forEach { (k, c) =>
-            val (v, l) = k
-            val cand = (c, -l)
-            val cur = best.get(v)
-            if (cur == null || Ordering[(Long, Long)].gt(cand, cur))
-              best.put(v, cand)
-          }
-          verts.foreach { v =>
-            val b = best.get(v)
-            next.put(v, if (b == null) lab.get(v) else -b._2)
-          }
-          lab.clear(); lab.putAll(next)
+        val best = new java.util.HashMap[Long, (Long, Long)]() // v -> (cnt, -label)
+        counts.forEach { (k, c) =>
+          val (v, l) = k
+          val cand = (c, -l)
+          val cur = best.get(v)
+          if (cur == null || Ordering[(Long, Long)].gt(cand, cur))
+            best.put(v, cand)
         }
-        return verts.map(v => (v, lab.get(v))).toSeq.toDF("vertex", "label")
-      case None => ()
+        verts.foreach { v =>
+          val b = best.get(v)
+          next.put(v, if (b == null) lab.get(v) else -b._2)
+        }
+        lab.clear(); lab.putAll(next)
+      }
+      verts.map(v => (v, lab.get(v))).toSeq.toDF("vertex", "label")
+    }.getOrElse {
+      for (_ <- 1 to rounds) {
+        // arg-max as a second AGGREGATION, not a window: max of the struct
+        // (count, -label) is exactly (count desc, label asc) — two partial-
+        // aggregated shuffles per round instead of a shuffle + per-vertex
+        // sort. (Labels are vertex ids >= 0, so negation cannot overflow.)
+        labels = nbrs
+          .join(SizeAdaptive.maybeBroadcast(
+            labels.select(col("vertex").as("__nbr"), col("label")), nV), Seq("__nbr"))
+          .groupBy("vertex", "label").agg(count(lit(1)).as("__cnt"))
+          .groupBy("vertex")
+          .agg(max(struct(col("__cnt"), (-col("label")).as("__nl"))).as("__m"))
+          .select(col("vertex"), (-col("__m.__nl")).as("label"))
+          .localCheckpoint()
+      }
+      labels
     }
-    for (_ <- 1 to rounds) {
-      // arg-max as a second AGGREGATION, not a window: max of the struct
-      // (count, -label) is exactly (count desc, label asc) — two partial-
-      // aggregated shuffles per round instead of a shuffle + per-vertex
-      // sort. (Labels are vertex ids >= 0, so negation cannot overflow.)
-      labels = nbrs
-        .join(maybeBroadcast(
-          labels.select(col("vertex").as("__nbr"), col("label")), nV), Seq("__nbr"))
-        .groupBy("vertex", "label").agg(count(lit(1)).as("__cnt"))
-        .groupBy("vertex")
-        .agg(max(struct(col("__cnt"), (-col("label")).as("__nl"))).as("__m"))
-        .select(col("vertex"), (-col("__m.__nl")).as("label"))
-        .localCheckpoint()
-    }
-    labels
   }
 
   /** Personalized PageRank — [[pageRank]] with the teleport mass pinned to
@@ -556,42 +510,20 @@ object GraphOps {
     val nS = sd.count()
     require(nS > 0, "seed set must be non-empty")
     val base = ((100L - dampingPct) * 10000L * nV) / nS
-    // size-adaptive local evaluation — see [[pageRank]] (r16)
-    localLongPairs(e0, nV) match {
-      case Some(edgeArr) =>
-        import org.apache.spark.sql.Encoders
-        val seedSet = sd.as(Encoders.scalaLong).collect().toSet
-        return localPageRankFrame(e0.sparkSession, edgeArr, iterations,
-          dampingPct, seedBase = Some((seedSet, base)))
-      case None => ()
-    }
-    // static outdeg folded into the edges once — see [[pageRank]]
-    val e = e0.withColumn("__outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__src")))
-      .localCheckpoint()
-    val teleport = verts
-      .join(sd.withColumn("__isSeed", lit(1)), Seq("vertex"), "left_outer")
-      .select(col("vertex"),
-        when(col("__isSeed").isNotNull, lit(base)).otherwise(lit(0L))
-          .as("__base"))
-      .localCheckpoint()
-    var pr = teleport.select(col("vertex"), col("__base").as("pr_micro"))
-    for (_ <- 1 to iterations) {
-      // same size-adaptive join strategy as [[pageRank]]
-      val contrib = e
-        .join(maybeBroadcast(
-          pr.select(col("vertex").as("__src"), col("pr_micro")), nV), Seq("__src"))
-        .select(col("__dst"), expr("pr_micro div __outdeg").as("__c"))
-        .groupBy("__dst").agg(sum(col("__c")).as("__s"))
-      pr = teleport
-        .join(maybeBroadcast(contrib.withColumnRenamed("__dst", "vertex"), nV),
-          Seq("vertex"), "left_outer")
+    // size-adaptive local evaluation and the shared loop — see [[pageRank]]
+    SizeAdaptive.localLongPairs(e0).map { edgeArr =>
+      val seedSet = sd.as(org.apache.spark.sql.Encoders.scalaLong).collect().toSet
+      def seedBase(v: Long) = if (seedSet.contains(v)) base else 0L
+      localRank(e0.sparkSession, edgeArr, iterations, dampingPct, seedSet,
+        seedBase, seedBase)
+    }.getOrElse {
+      val teleport = verts
+        .join(sd.withColumn("__isSeed", lit(1)), Seq("vertex"), "left_outer")
         .select(col("vertex"),
-          (col("__base") + expr(s"($dampingPct * coalesce(__s, 0L)) div 100"))
-            .cast("long").as("pr_micro"))
-      // see [[pageRank]]: checkpoint only on the shuffle path
-      if (nV > broadcastRowCap(pr)) pr = pr.localCheckpoint()
+          when(col("__isSeed").isNotNull, lit(base)).otherwise(lit(0L))
+            .as("__base"))
+        .localCheckpoint()
+      rankLoop(e0, teleport, col("__base"), nV, iterations, dampingPct)
     }
-    pr
   }
 }

@@ -553,7 +553,13 @@ object NearDup {
     * round truncates the growing lineage, which is what keeps iterative
     * DataFrame algorithms viable at scale.
     * Returns (v, component) for every vertex mentioned in `pairs`, where
-    * component = min vertex id reachable. */
+    * component = min vertex id reachable.
+    *
+    * `maxIter` bounds only the distributed star-contraction loop, which
+    * throws when it runs out of rounds. An edge list small enough for the
+    * local union-find (see the size-adaptive branch below) is solved
+    * exactly in one pass: that path always converges and never reads
+    * `maxIter`. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
@@ -567,16 +573,6 @@ object NearDup {
         least(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint()
 
-    // size-adaptive broadcast of the per-round mins table (r15; shared
-    // helper r16): the rounds run over localCheckpointed frames with no
-    // statistics, so the planner can never pick the broadcast itself;
-    // `bound` is a proven upper bound on the mins row count (see call
-    // sites). Threshold = autoBroadcastJoinThreshold / ~100 B per built
-    // hash-relation row — the planner's own decision re-derived; big
-    // graphs keep the shuffle.
-    def maybeBroadcast(df: DataFrame, bound: Long): DataFrame =
-      SizeAdaptive.maybeBroadcast(df, bound)
-
     // LARGE-STAR: per vertex u over the SYMMETRIZED adjacency, m =
     // min(N(u) ∪ {u}); every strictly-larger neighbor v > u re-points to m.
     // Min is algebraic, so the hot component-root key collapses map-side;
@@ -586,8 +582,9 @@ object NearDup {
       val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy("u").agg(min("v").as("__mn"))
         .select(col("u").as("__u"), least(col("__mn"), col("u")).as("__m"))
-      // mins has one row per distinct u of sym: <= 2·|e|
-      sym.join(maybeBroadcast(mins, 2 * eCount), col("u") === col("__u"))
+      // mins has one row per distinct u of sym: <= 2·|e| (size-adaptive
+      // broadcast: the rounds' checkpointed frames carry no statistics)
+      sym.join(SizeAdaptive.maybeBroadcast(mins, 2 * eCount), col("u") === col("__u"))
         .where(col("v") > col("u"))
         .select(col("v").as("u"), col("__m").as("v")) // m <= u < v: stays hi→lo
         .distinct()
@@ -599,7 +596,7 @@ object NearDup {
     def smallStar(e: DataFrame, eBound: Long): DataFrame = {
       val mins = e.groupBy("u").agg(min("v").as("__m"))
         .select(col("u").as("__u"), col("__m"))
-      e.join(maybeBroadcast(mins, eBound), col("u") === col("__u"))
+      e.join(SizeAdaptive.maybeBroadcast(mins, eBound), col("u") === col("__u"))
         .select(col("v").as("a"), col("__m").as("b"))
         .where(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("u"),
@@ -620,30 +617,19 @@ object NearDup {
       verts.join(members, col("v") === col("__mv"), "left_outer")
         .select(col("v"), coalesce(col("__comp"), col("v")).as("component"))
 
-    // SIZE-ADAPTIVE LOCAL CONTRACTION (r16): when the deduplicated edge
-    // list fits the session's broadcast budget (the same ~100 B/row
-    // derivation the loop's own maybeBroadcast uses), the star-contraction
-    // rounds are pure scheduling overhead — each round ALREADY pulls a
-    // mins table of comparable size to the driver to broadcast it, plus
-    // 4+ exchanges and 2 actions, for O(log n) rounds. Collecting the
-    // edges ONCE and running the min-label union-find locally moves
-    // strictly less data to the driver than one round's broadcast builds,
-    // and the resulting label table (≤ 2·|E| rows) re-enters the plan as
-    // a broadcast — the decision the planner itself would make for a
-    // relation this size. A graph over the threshold keeps the
-    // distributed loop exactly as before (spec-pinned equal on random
-    // graphs; the threshold follows autoBroadcastJoinThreshold, so
-    // cluster configs scale it, and -1 disables it entirely).
-    val integralIds = init.schema("u").dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false // non-integral ids: the long round-trip would be lossy
-    }
-    if (integralIds && prevCount <= SizeAdaptive.broadcastRowCap(init)) {
-      val edges = init.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)].collect()
+    // SIZE-ADAPTIVE LOCAL CONTRACTION: when the deduplicated edge list
+    // fits the session's broadcast budget, the star-contraction rounds
+    // are pure scheduling overhead — each round ALREADY pulls a mins
+    // table of comparable size to the driver to broadcast it, plus 4+
+    // exchanges and 2 actions, for O(log n) rounds. Collecting the edges
+    // ONCE and running the min-label union-find locally moves strictly
+    // less data to the driver than one round's broadcast builds, and the
+    // resulting label table (≤ 2·|E| rows) re-enters the plan as a
+    // broadcast — the decision the planner itself would make for a
+    // relation this size. A graph over the threshold, or with
+    // non-integral ids (the long round-trip would be lossy), keeps the
+    // distributed loop (spec-pinned equal on random graphs).
+    SizeAdaptive.localLongPairs(init, Some(prevCount)).map { edges =>
       // union-to-min: the larger root is always re-pointed at the smaller,
       // so each tree's final root IS the component's minimum id (the same
       // min-reachable-vertex fixpoint the star contraction converges to).
@@ -672,38 +658,38 @@ object NearDup {
       val members = labels.toDF("__mv", "__comp")
         .select(col("__mv").cast(vType).as("__mv"),
           col("__comp").cast(vType).as("__comp"))
-      return labelled(maybeBroadcast(members, 2 * prevCount))
+      labelled(SizeAdaptive.maybeBroadcast(members, 2 * prevCount))
+    }.getOrElse {
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        // large-star emits <= |sym| = 2·|cur| rows pre-distinct, so the
+        // small-star mins bound is 2·prevCount
+        val next = smallStar(largeStar(cur, prevCount), 2 * prevCount)
+          .localCheckpoint()
+        val nextCount = next.count()
+        // Exact set-equality convergence (both sides are distinct): equal
+        // cardinality + empty next∖cur ⇒ identical edge sets. At the
+        // fixpoint the graph is a forest of stars centered at each
+        // component's minimum — no probabilistic hash compare, a false
+        // "converged" would silently split clusters.
+        converged = nextCount == prevCount && next.exceptAll(cur).isEmpty
+        prevCount = nextCount
+        cur = next
+        i += 1
+      }
+      // Fail fast rather than return half-merged clusters: un-converged
+      // labels would flow into dedupByComponents* as SPLIT clusters — extra
+      // survivors, i.e. silently incomplete dedup. O(log n) rounds cover
+      // even a path-shaped component of 2^maxIter vertices, so hitting the
+      // cap at the default means something pathological, and the caller
+      // must decide, not inherit wrong labels.
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter large-star/" +
+          "small-star rounds; raise maxIter (the edge set was still moving)")
+      labelled(cur.select(col("u").as("__mv"), col("v").as("__comp")))
     }
-
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // large-star emits <= |sym| = 2·|cur| rows pre-distinct, so the
-      // small-star mins bound is 2·prevCount
-      val next = smallStar(largeStar(cur, prevCount), 2 * prevCount)
-        .localCheckpoint()
-      val nextCount = next.count()
-      // Exact set-equality convergence (both sides are distinct): equal
-      // cardinality + empty next∖cur ⇒ identical edge sets. At the
-      // fixpoint the graph is a forest of stars centered at each
-      // component's minimum — no probabilistic hash compare, a false
-      // "converged" would silently split clusters.
-      converged = nextCount == prevCount && next.exceptAll(cur).isEmpty
-      prevCount = nextCount
-      cur = next
-      i += 1
-    }
-    // Fail fast rather than return half-merged clusters: un-converged
-    // labels would flow into dedupByComponents* as SPLIT clusters — extra
-    // survivors, i.e. silently incomplete dedup. O(log n) rounds cover
-    // even a path-shaped component of 2^maxIter vertices, so hitting the
-    // cap at the default means something pathological, and the caller
-    // must decide, not inherit wrong labels.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter large-star/" +
-        "small-star rounds; raise maxIter (the edge set was still moving)")
-    labelled(cur.select(col("u").as("__mv"), col("v").as("__comp")))
   }
 
   /** Keep one representative (min id) per near-dup cluster; documents in

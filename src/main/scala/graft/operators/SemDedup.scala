@@ -56,14 +56,19 @@ object SemDedup {
     * `round` BIT-EXACTLY (java.math.BigDecimal.valueOf + HALF_UP is
     * Spark's own double-round codegen); law-spec'd blocked == join form.
     * Requires each cell's vectors to fit in task memory — the
-    * [[pairsWithinCells]] bounded-cell contract, unchanged. */
+    * [[pairsWithinCells]] bounded-cell contract, unchanged. The kernel
+    * carries ids as longs, so non-integral ids (strings, decimals) run
+    * the join form instead; rows sharing an id never pair with each
+    * other, as in the join form's strict `id_a < id_b`. */
   def pairsWithinCellsBlocked(indexed: DataFrame, idCol: String,
                               vecCol: String, minSim: Double): DataFrame = {
+    val idType = indexed.schema(idCol).dataType
+    if (!SizeAdaptive.integral(idType))
+      return pairsWithinCells(indexed, idCol, vecCol, minSim)
     val spark = indexed.sparkSession
     import spark.implicits._
     val g = math.min(16, math.max(1, math.ceil(
       math.sqrt(2.0 * spark.sparkContext.defaultParallelism)).toInt))
-    val idType = indexed.schema(idCol).dataType
     val rows = indexed.select(col("__cluster").cast("long").as("__blk"),
         col(idCol).cast("long").as("__id"), col(vecCol).as("__vec"))
       .withColumn("__c", pmod(col("__id"), lit(g.toLong)).cast("int"))
@@ -85,7 +90,7 @@ object SemDedup {
             .sortBy(_._1)
         val out = Seq.newBuilder[(Long, Long)]
         def emit(ia: Long, va: Array[Float], ib: Long, vb: Array[Float]): Unit = {
-          if (va != null && vb != null && va.length == vb.length) {
+          if (ia != ib && va != null && vb != null && va.length == vb.length) {
             var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
             while (i < va.length) {
               val u = va(i).toDouble; val v = vb(i).toDouble

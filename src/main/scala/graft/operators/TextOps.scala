@@ -421,10 +421,15 @@ object TextOps {
     // Shingles are hashed to 64-bit longs BEFORE the distinct (r16, guide
     // §2.3 "narrower types"): the distinct's shuffle, the cap's count
     // pass and the intersection self-join all key on an 8-byte long
-    // instead of a ~20-30 byte string. 64-bit collisions are negligible
-    // ⇒ per-source distinct sets and shared counts are identical to the
-    // string formulation the oracle runs (the exactJaccardPairs
-    // argument, applied to the source-overlap matrix).
+    // instead of a ~20-30 byte string. Collision assumption: xxhash64 is
+    // treated as injective on the distinct shingles. For N distinct
+    // shingle strings the chance that ANY two share a hash is at most
+    // N(N-1)/2^65 — 2.7e-8 at N = 1e6, 2.7e-4 at N = 1e8. A collision
+    // would merge two shingles: a source's size drops by one and a shared
+    // count can rise by one. Below that bound, per-source distinct sets
+    // and shared counts are identical to the string formulation the
+    // oracle runs (the exactJaccardPairs argument, applied to the
+    // source-overlap matrix).
     val sh = NearDup.dropCrowdedBuckets(
       NearDup.withShingles(
           docs.select(col(groupCol), text.as("__txt")), col("__txt"), shingleN)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{IndexStore, NearDup}
 
@@ -16,12 +15,7 @@ import graft.operators.{IndexStore, NearDup}
 object StoreProbeMain {
   def main(args: Array[String]): Unit = {
     val Array(root, expectedRows, dupId, dupText) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-store-probe")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(2).appName("graft-store-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       import spark.implicits._

@@ -211,6 +211,24 @@ class DedupNearDupSpec extends SparkSpec {
     }
   }
 
+  test("connected components: string ids take the distributed loop and label by min id") {
+    // Non-integral ids would not survive the local path's long round-trip,
+    // so the gate sends them to the star-contraction loop. maxIter bounds
+    // only that loop: maxIter = 0 throws there, while integral ids of the
+    // same small graph take the local union-find and never read it.
+    val pairs = Seq(("b", "a"), ("c", "b"), ("x", "y"), ("q", "q"))
+      .toDF("id_a", "id_b")
+    val cc = NearDup.connectedComponents(pairs).as[(String, String)].collect().toMap
+    assert(cc === Map("a" -> "a", "b" -> "a", "c" -> "a",
+      "x" -> "x", "y" -> "x", "q" -> "q"))
+    assertThrows[IllegalStateException] {
+      NearDup.connectedComponents(pairs, maxIter = 0).collect()
+    }
+    val ints = Seq((2L, 1L), (3L, 2L), (8L, 9L)).toDF("id_a", "id_b")
+    assert(NearDup.connectedComponents(ints, maxIter = 0).as[(Long, Long)]
+      .collect().toMap === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 8L, 9L -> 8L))
+  }
+
   test("dedupByComponentsBest keeps the highest-quality member, not the min id") {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
     val docs = Seq((1L, 10L), (2L, 99L), (3L, 99L), (5L, 7L), (6L, 50L), (9L, 1L))

@@ -62,6 +62,31 @@ class SemDedupSpec extends SparkSpec {
     }
   }
 
+  private val e1 = Array(1f, 0f, 0f, 0f)
+  private val e2 = Array(0f, 1f, 0f, 0f)
+
+  test("pairsWithinCellsBlocked: string ids run the join form") {
+    // the tile kernel carries ids as longs; a string id cannot ride it
+    val byName = Seq(("b", 0, e1), ("a", 0, e1), ("c", 0, e2), ("y", 1, e2), ("x", 1, e2))
+      .toDF("doc", "__cluster", "vec")
+    val pairs = SemDedup.pairsWithinCellsBlocked(byName, "doc", "vec", 0.9)
+      .as[(String, String)].collect().sorted.toSeq
+    assert(pairs === Seq(("a", "b"), ("x", "y")))
+  }
+
+  test("pairsWithinCellsBlocked: a repeated id never pairs with itself") {
+    // every other row pair is emitted once, exactly as the join form's
+    // strict id_a < id_b does
+    val repeated = Seq((5L, 0, e1), (5L, 0, e1), (7L, 0, e1), (9L, 0, e2))
+      .toDF("vec_id", "__cluster", "vec")
+    val blocked = SemDedup.pairsWithinCellsBlocked(repeated, "vec_id", "vec", 0.9)
+      .as[(Long, Long)].collect().sorted.toSeq
+    val joinForm = SemDedup.pairsWithinCells(repeated, "vec_id", "vec", 0.9)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(blocked === Seq((5L, 7L), (5L, 7L)))
+    assert(blocked === joinForm)
+  }
+
   test("survivors: losers removed, exactly one survivor per component") {
     val (indexed0, _) = IvfAnn.buildIndex(emb, "embedding", numClusters = 8)
     val indexed = indexed0.localCheckpoint()

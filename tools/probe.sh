@@ -19,14 +19,16 @@ ok_runs = 0
 for i in range(1, runs + 1):
     p = os.path.join(tmp, f"run{i}.json")
     if not os.path.exists(p) or os.path.getsize(p) == 0: continue
-    # parse per line and take the LAST metric line (ADVICE r15: a log
-    # with >1 metric line made json.load on the whole file raise)
+    # parse per line and take the LAST metric line that carries a
+    # per-query map (a log can hold several metric lines, and not every
+    # one has a "queries" key)
     d = None
     for line in open(p):
         line = line.strip()
         if line.startswith('{"metric"'):
-            try: d = json.loads(line)
-            except json.JSONDecodeError: pass
+            try: m = json.loads(line)
+            except json.JSONDecodeError: continue
+            if isinstance(m, dict) and "queries" in m: d = m
     if d is None: continue
     ok_runs += 1
     for k, v in d["queries"].items():
