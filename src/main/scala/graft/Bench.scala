@@ -1,5 +1,25 @@
 package graft
+
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
+
+  /** The timed pass: each query built and counted once, in order. Returns
+    * every query's wall seconds and the names of those whose run threw —
+    * a failed query keeps its elapsed time in the first list, so the
+    * `queries` map stays complete, and is named in the second. */
+  def timedPass(spark: SparkSession, sfDir: String,
+                ordered: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val runs = ordered.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
+      (name, (System.nanoTime() - t0) / 1e9, ok)
+    }
+    (runs.map { case (n, t, _) => n -> t }, runs.collect { case (n, _, false) => n })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -8,7 +28,7 @@ object Bench {
     // offline stage: index build (see SparkEntry.prepare) — timed apart so
     // per-query numbers measure query latency, not one-time index builds
     val s0 = System.nanoTime()
-    try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
+    try SparkEntry.prepare(spark, sfDir) catch { case NonFatal(_) => () }
     val setupSec = (System.nanoTime() - s0) / 1e9
     // sorted order: per-query times are comparable across runs/rounds
     // (map iteration order would move shared-intermediate build costs
@@ -30,18 +50,15 @@ object Bench {
     // pass below measures steady-state latency.
     val w0 = System.nanoTime()
     ordered.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      try { fn(spark, sfDir).count() } catch { case NonFatal(_) => () }
     }
     val warmupSec = (System.nanoTime() - w0) / 1e9
-    val results = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val (results, failed) = timedPass(spark, sfDir, ordered)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val fs = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,"warmup_sec":$warmupSec,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,"warmup_sec":$warmupSec,"queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
     println(line)
     // Persist the COMPLETE per-query map (r10 verdict: the driver's bench
     // artifact keeps only a 2000-char log tail, so the cross-round

@@ -185,7 +185,7 @@ object StreamingCheck {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) =>
           graft.streaming.StreamingSearch.processBatch(
-            b, postStore, queriesDf, batchId = Some(id))
+            b, postStore, queriesDf, batchId = id)
           ()
         }.start()
       sq.awaitTermination()

@@ -1642,7 +1642,6 @@ object AcidTable {
                   expectations: Seq[(String, org.apache.spark.sql.Column)],
                   onViolation: String = "fail",
                   strategy: String = "cow",
-                  strKey: Boolean = false,
                   statsCols: Seq[String] = Nil,
                   quarantineToken: Option[String] = None)
       : (Long, Int, Int, Long, Option[Long]) = {
@@ -1655,12 +1654,9 @@ object AcidTable {
       require(n.nonEmpty && !n.contains(","),
         s"expectation name '$n' must be nonempty and comma-free")
     }
-    def merge(df: DataFrame): (Long, Int, Int) = (strategy, strKey) match {
-      case ("cow", false) => mergeCow(df, root, keyCol, statsCols)
-      case ("cow", true) => mergeCowStr(df, root, keyCol, statsCols)
-      case ("mor", false) => mergeMor(df, root, keyCol, statsCols)
-      case ("mor", true) => mergeMorStr(df, root, keyCol, statsCols)
-    }
+    def merge(df: DataFrame): (Long, Int, Int) =
+      if (strategy == "cow") mergeCow(df, root, keyCol, statsCols)
+      else mergeMor(df, root, keyCol, statsCols)
     val violArr = array(expectations.map { case (n, c) =>
       when(coalesce(c, lit(true)) === lit(false), lit(n))
     }: _*)
@@ -1696,45 +1692,28 @@ object AcidTable {
     } finally { marked.unpersist(); () }
   }
 
-  /** Copy-on-write UPSERT (round 12): apply `updates` keyed by the long
-    * column `keyCol` — rows whose key exists are replaced, new keys are
-    * inserted — rewriting ONLY the files whose `keyCol` min/max range can
-    * contain a touched key. Untouched files are carried into the next
-    * manifest BY REFERENCE (verbatim lines), so a 1k-row upsert into a
-    * 100 TB table rewrites kilofiles, not the table. Correctness does not
-    * depend on stats: a file without `keyCol` stats is conservatively
-    * rewritten. `updates` must carry the table's schema. Returns
-    * (published version, files rewritten, files kept). */
-  def mergeCow(updates: DataFrame, root: String, keyCol: String,
-               statsCols: Seq[String] = Nil): (Long, Int, Int) =
-    mergeCowImpl(updates, root, keyCol, statsCols, strKey = false)
-
-  /** [[mergeCow]] for a STRING key (round 12 cont.) — the reference's
-    * actual daily workload is per-SYMBOL re-fetch + upsert
-    * (`...py:38-44` loops symbols), and symbols are strings. Touched
-    * files are located through the manifest's string stats; comparisons
-    * are UTF-8 byte order end-to-end (the parquet footer order, and
-    * Spark's own UTF8String order inside the locate join). */
-  def mergeCowStr(updates: DataFrame, root: String, keyCol: String,
-                  statsCols: Seq[String] = Nil): (Long, Int, Int) =
-    mergeCowImpl(updates, root, keyCol, statsCols, strKey = true)
-
   /** Files whose `keyCol` stats range can contain a key of `updates`,
     * decided DISTRIBUTED: broadcast the (small, manifest-sized) stats
     * table against the update keys, so a billion-row update set never
     * lands on the driver. Files lacking stats on `keyCol` are always
-    * touched (safety over savings). Returns (touched, untouched). */
+    * touched (safety over savings). A STRING key (the reference's daily
+    * workload is a per-SYMBOL re-fetch + upsert, `...py:38-44`) is
+    * located through the manifest's string stats, compared in UTF-8 byte
+    * order end-to-end (the parquet footer order, and Spark's own
+    * UTF8String order inside the locate join); any other key as a long.
+    * Returns (touched, untouched). */
   private def locateTouched(updates: DataFrame, keyCol: String,
-                            entries: Seq[Entry],
-                            strKey: Boolean): (Seq[Entry], Seq[Entry]) = {
+                            entries: Seq[Entry]): (Seq[Entry], Seq[Entry]) = {
     val spark = updates.sparkSession
+    val stringKey =
+      updates.schema(keyCol).dataType == org.apache.spark.sql.types.StringType
     val (statless, withStats) =
-      if (strKey) entries.partition(_.strStatFor(keyCol).isEmpty)
+      if (stringKey) entries.partition(_.strStatFor(keyCol).isEmpty)
       else entries.partition(_.statFor(keyCol).isEmpty)
     val touchedStatted: Set[String] = if (withStats.isEmpty) Set.empty else {
       import spark.implicits._
       val (statsDf, keyExpr) =
-        if (strKey)
+        if (stringKey)
           (withStats.map { e =>
             val s = e.strStatFor(keyCol).get; (e.path, s.min, s.max)
           }.toDF("__path", "__min", "__max"),
@@ -1754,12 +1733,21 @@ object AcidTable {
       statlessPaths.contains(e.path) || touchedStatted.contains(e.path))
   }
 
-  private def mergeCowImpl(updates: DataFrame, root: String, keyCol: String,
-                           statsCols: Seq[String],
-                           strKey: Boolean): (Long, Int, Int) =
+  /** Copy-on-write UPSERT (round 12): apply `updates` keyed by `keyCol`
+    * — rows whose key exists are replaced, new keys are inserted —
+    * rewriting ONLY the files whose `keyCol` min/max range can contain a
+    * touched key (located by [[locateTouched]], which reads the key's
+    * type). Untouched files are carried into the next manifest BY
+    * REFERENCE (verbatim lines), so a 1k-row upsert into a 100 TB table
+    * rewrites kilofiles, not the table. Correctness does not depend on
+    * stats: a file without `keyCol` stats is conservatively rewritten.
+    * `updates` must carry the table's schema. Returns (published
+    * version, files rewritten, files kept). */
+  def mergeCow(updates: DataFrame, root: String, keyCol: String,
+               statsCols: Seq[String] = Nil): (Long, Int, Int) =
     cowCommit(updates.sparkSession, root, "merge", statsCols) { (cur, entries) =>
       val spark = updates.sparkSession
-      val (touched, untouched) = locateTouched(updates, keyCol, entries, strKey)
+      val (touched, untouched) = locateTouched(updates, keyCol, entries)
       val cdcRows =
         if (!cdcEnabled(spark, root)) None
         else Some(mergeChangeRows(spark, root, cur, touched, updates, keyCol))
@@ -1845,8 +1833,8 @@ object AcidTable {
     }
   }
 
-  /** MERGE-ON-READ UPSERT (round 13): apply `updates` keyed by the long
-    * column `keyCol` without rewriting any data file — the update rows
+  /** MERGE-ON-READ UPSERT (round 13): apply `updates` keyed by
+    * `keyCol` without rewriting any data file — the update rows
     * land as NEW files, and every old file whose stats range can contain
     * an update key gets a deletion-vector mask of the update keys
     * (replaced rows are masked where they sit; keys that turn out to be
@@ -1854,14 +1842,24 @@ object AcidTable {
     * [[mergeCow]] answer; OPTIMIZE folds the masks away. Returns
     * (version, filesMasked, filesRewritten=0). */
   def mergeMor(updates: DataFrame, root: String, keyCol: String,
-               statsCols: Seq[String] = Nil): (Long, Int, Int) =
-    mergeMorImpl(updates, root, keyCol, statsCols, strKey = false)
-
-  /** [[mergeMor]] for a STRING key — touched files are located through
-    * the manifest's string stats in UTF-8 byte order, as [[mergeCowStr]]. */
-  def mergeMorStr(updates: DataFrame, root: String, keyCol: String,
-                  statsCols: Seq[String] = Nil): (Long, Int, Int) =
-    mergeMorImpl(updates, root, keyCol, statsCols, strKey = true)
+               statsCols: Seq[String] = Nil): (Long, Int, Int) = {
+    val spark = updates.sparkSession
+    foldConflictingDvs(spark, root, keyCol, statsCols)
+    val cur = currentVersion(spark, root)
+    val (_, entries) = readManifest(spark, root, cur)
+    val (touched, _) = locateTouched(updates, keyCol, entries)
+    val newData = newEntries(updates, root, statsCols)
+    val cdc =
+      if (!cdcEnabled(spark, root)) Nil
+      else writeCdc(
+        mergeChangeRows(spark, root, cur, touched, updates, keyCol), root)
+    if (touched.isEmpty) // pure insert: no mask needed — a plain append
+      (commitRebase(spark, root, "merge", Nil, newData, cdc = cdc)._1, 0, 0)
+    else {
+      val mask = updates.select(col(keyCol).as("__dvk")).distinct().coalesce(1)
+      morCommit(spark, root, "merge", keyCol, touched, mask, newData, cdc)
+    }
+  }
 
   /** Fold-on-demand for CROSS-COLUMN deletion vectors (round 14 —
     * VERDICT r13 #8): a MOR commit keyed on `keyCol` cannot layer a mask
@@ -1893,26 +1891,6 @@ object AcidTable {
     }
   }
 
-  private def mergeMorImpl(updates: DataFrame, root: String, keyCol: String,
-                           statsCols: Seq[String],
-                           strKey: Boolean): (Long, Int, Int) = {
-    val spark = updates.sparkSession
-    foldConflictingDvs(spark, root, keyCol, statsCols)
-    val cur = currentVersion(spark, root)
-    val (_, entries) = readManifest(spark, root, cur)
-    val (touched, _) = locateTouched(updates, keyCol, entries, strKey)
-    val newData = newEntries(updates, root, statsCols)
-    val cdc =
-      if (!cdcEnabled(spark, root)) Nil
-      else writeCdc(
-        mergeChangeRows(spark, root, cur, touched, updates, keyCol), root)
-    if (touched.isEmpty) // pure insert: no mask needed — a plain append
-      (commitRebase(spark, root, "merge", Nil, newData, cdc = cdc)._1, 0, 0)
-    else {
-      val mask = updates.select(col(keyCol).as("__dvk")).distinct().coalesce(1)
-      morCommit(spark, root, "merge", keyCol, touched, mask, newData, cdc)
-    }
-  }
 
   /** The logical delta of an upsert, Delta CDF shape: replaced old rows
     * as `update_preimage`, their replacements as `update_postimage`,

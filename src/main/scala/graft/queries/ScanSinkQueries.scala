@@ -535,7 +535,7 @@ object ScanSinkQueries extends QueryModule {
       val root = s"${System.getProperty("java.io.tmpdir")}/graft_acidstrmor/" +
         s"${s.sparkContext.applicationId}/${new java.io.File(d).getName}"
       val (_, maxk) = buildStrRoot(s, d, root)
-      val (v, masked, rewritten) = AcidTable.mergeMorStr(
+      val (v, masked, rewritten) = AcidTable.mergeMor(
         strUpsertFrame(s, d, maxk), root, "name",
         statsCols = Seq("name", "k"))
       (root, v, maxk, masked, rewritten)
@@ -551,7 +551,7 @@ object ScanSinkQueries extends QueryModule {
       (String, Long, Long, Int, Int) =
     Memo.cached(s, s"acidstrmerge|$d") {
       val (root, _, maxk) = acidStrRoot(s, d)
-      val (v, rewritten, kept) = AcidTable.mergeCowStr(
+      val (v, rewritten, kept) = AcidTable.mergeCow(
         strUpsertFrame(s, d, maxk), root, "name",
         statsCols = Seq("name", "k"))
       (root, v, maxk, rewritten, kept)

@@ -13,7 +13,7 @@ import graft.operators.AcidTable
   * reference's re-download-everything daily run
   * (`data_collection/dags/stock_data_airflow_local_aws_s3.py:38-39`).
   * Round 13 adds the same contract as a REAL Structured Streaming source
-  * ([[graft.sources.AcidSource]], `spark.readStream.format("graft-acid")`)
+  * ([[graft.sources.AcidSource]], the `graft-acid` stream format)
   * — this driver-loop form stays for callers that want the increment as
   * a batch DataFrame with full relational surface.
   *

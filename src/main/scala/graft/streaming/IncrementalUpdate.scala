@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** The reference's own stated future: "daily stock data updates"
@@ -86,9 +84,7 @@ object IncrementalUpdate {
   def mergeBatch(incoming: DataFrame, storeDir: String,
                  partitionCols: Seq[String], keyCols: Seq[String]): Unit = {
     val spark = incoming.sparkSession
-    val exists = new Path(storeDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(new Path(storeDir))
-    val merged = if (exists) {
+    val merged = if (BatchStore.exists(spark, storeDir)) {
       val existing = spark.read.parquet(storeDir)
         .where(touchedPartitionFilter(incoming, partitionCols))
       upsert(existing, incoming, keyCols)
@@ -106,22 +102,15 @@ object IncrementalUpdate {
       .parquet(storeDir)
   }
 
-  /** Drain the incoming directory into the store: file-source readStream →
-    * foreachBatch merge, AvailableNow (process the backlog, then stop).
-    * Re-runnable: the checkpoint remembers which files were consumed, and
-    * the merge itself is idempotent under replay. */
+  /** Drain the incoming directory into the store ([[BatchStore.drain]]),
+    * one [[mergeBatch]] per micro-batch. Re-runnable: the checkpoint
+    * remembers which files were consumed, and the merge itself is
+    * idempotent under replay. */
   def run(spark: SparkSession, incomingDir: String, schema: StructType,
           storeDir: String, checkpoint: String,
           partitionCols: Seq[String] = Seq("company", "year"),
-          keyCols: Seq[String] = Seq("company", "Date")): Unit = {
-    val q = spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, storeDir, partitionCols, keyCols)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+          keyCols: Seq[String] = Seq("company", "Date")): Unit =
+    BatchStore.drain(spark, incomingDir, schema, checkpoint) { (batch, _) =>
+      mergeBatch(batch, storeDir, partitionCols, keyCols)
+    }
 }

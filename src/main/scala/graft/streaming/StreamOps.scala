@@ -9,7 +9,7 @@ import graft.util.Det
   * reference's own stated future is "daily stock data updates"
   * (`README.md:49`); here the same `events` schema is consumed
   * incrementally. Each windowed transform below is ONE function applied to
-  * either a batch DataFrame or a `readStream` DataFrame — identical column
+  * either a batch DataFrame or a streaming DataFrame — identical column
   * expressions, so the batch twin registered in `SparkEntry.queries` is
   * oracle-checked while the streaming path reuses the exact logic
   * (MemoryStream unit tests cover watermark/dedup behavior).

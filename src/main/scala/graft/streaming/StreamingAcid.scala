@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import graft.operators.AcidTable
 
@@ -16,7 +15,7 @@ import graft.operators.AcidTable
   * micro-batch id, recorded in the published manifest, so a replayed
   * batch (failure after the commit, before the checkpoint advanced)
   * finds its own token and no-ops instead of double-appending. This is
-  * the manifest-layer mirror of `StreamingDedup`'s per-batch-id
+  * the manifest-layer mirror of [[BatchStore]]'s per-batch-id
   * subdirectory overwrite — there the STORE layout is the idempotency
   * record, here the MANIFEST is (data files are never overwritten, so
   * the replayed batch's orphan files stay invisible until a vacuum).
@@ -30,18 +29,10 @@ object StreamingAcid {
     * version per micro-batch. AvailableNow + checkpoint — re-runnable as
     * new files land. */
   def run(spark: SparkSession, incomingDir: String, schema: StructType,
-          tableRoot: String, checkpoint: String): Unit = {
-    val q = spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        AcidTable.commitAppendOnce(batch, tableRoot, s"stream-batch-$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+          tableRoot: String, checkpoint: String): Unit =
+    BatchStore.drain(spark, incomingDir, schema, checkpoint) { (batch, batchId) =>
+      AcidTable.commitAppendOnce(batch, tableRoot, s"stream-batch-$batchId")
+    }
 
   /** [[run]] with write-time EXPECTATIONS (round 13 — the Delta Live
     * Tables composition: streaming ingestion + CHECK expectations +
@@ -54,18 +45,10 @@ object StreamingAcid {
   def runExpect(spark: SparkSession, incomingDir: String, schema: StructType,
                 tableRoot: String, checkpoint: String,
                 expectations: Seq[(String, org.apache.spark.sql.Column)])
-      : Unit = {
-    val q = spark.readStream.schema(schema).parquet(incomingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        AcidTable.commitAppendExpect(batch, tableRoot, expectations,
-          onViolation = "quarantine",
-          token = Some(s"stream-batch-$batchId"))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      : Unit =
+    BatchStore.drain(spark, incomingDir, schema, checkpoint) { (batch, batchId) =>
+      AcidTable.commitAppendExpect(batch, tableRoot, expectations,
+        onViolation = "quarantine",
+        token = Some(s"stream-batch-$batchId"))
+    }
 }

@@ -1,62 +1,32 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
 
 /** Engagement-dashboard maintenance under continuous ingestion: the
   * streaming composition of q_sess4 (WAU / trailing-4-week MAU /
   * stickiness). Each micro-batch of raw events is reduced to its distinct
   * (user_id, wk) pairs — the SUFFICIENT STATISTIC for every engagement
-  * metric, tiny next to the events — which append to a store; the
+  * metric, tiny next to the events — which are written to a store; the
   * dashboard recomputes from the merged pair set. Raw events are read
   * once, at arrival, and never again.
   *
-  * Convergence is simpler than the search/dedup twins: WAU and MAU are
-  * COUNT(DISTINCT user) aggregates, which duplicate (user, wk) pairs
-  * CANNOT change — so even the one-shot append path converges under
-  * replay without a stored-side dedup, and the merged store equals a
-  * full recompute over the union of all ingested events by construction
-  * (the spec asserts it). The per-batch-id overwrite layout is still
-  * provided so replayed batches don't grow the store unboundedly.
-  * At cluster scale the store is partitioned by `wk`, and a dashboard
-  * refresh prunes to the weeks the new batch touched (each batch can
-  * only change weeks in [min wk, max wk + 3]).
+  * WAU and MAU are COUNT(DISTINCT user) aggregates, which duplicate
+  * (user, wk) pairs CANNOT change, so the merged store equals a full
+  * recompute over the union of all ingested events by construction (the
+  * spec asserts it); the [[BatchStore]] protocol keeps replayed batches
+  * from growing the store. At cluster scale the store is partitioned by
+  * `wk`, and a dashboard refresh prunes to the weeks the new batch
+  * touched (each batch can only change weeks in [min wk, max wk + 3]).
   */
 object StreamingEngagement {
 
-  /** One micro-batch: appends the batch's (user_id, wk) pairs to the
-    * store and returns the full (week, wau, mau, stickiness) table over
-    * the merged activity set. */
-  def processBatch(newEvents: DataFrame, storeDir: String,
-                   userCol: String = "user_id", tsCol: String = "ts",
-                   batchId: Option[Long] = None): DataFrame = {
-    val spark = newEvents.sparkSession
-    val uw = Sessionize.userWeeks(newEvents, userCol, tsCol)
-      .localCheckpoint() // reused (merge, write) — reduce the events once
-    val exists = new Path(storeDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(new Path(storeDir))
-    val stored =
-      if (exists) {
-        val all = spark.read.parquet(storeDir)
-        StoreLayout.check(all, storeDir, batchId)
-        val prior = batchId match {
-          case Some(id) =>
-            all.where(!(col("batch") <=> lit(id))) // replay: drop own prior append
-          case None => all
-        }
-        prior.select(col("user_id"), col("wk"))
-      }
-      else uw.limit(0)
-    val merged = stored.unionByName(uw)
-    // Materialize before the store write: on replay the overwrite below
-    // replaces files the lazy plan would still reference.
-    val out = Sessionize.engagementFromUserWeeks(merged).localCheckpoint()
-    batchId match {
-      case Some(id) => uw.write.mode("overwrite").parquet(s"$storeDir/batch=$id")
-      case None     => uw.write.mode("append").parquet(storeDir)
+  /** One micro-batch: writes the batch's (user_id, wk) pairs to the store
+    * as batch `batchId` and returns the full (week, wau, mau, stickiness)
+    * table over the merged activity set. */
+  def processBatch(newEvents: DataFrame, storeDir: String, batchId: Long,
+                   userCol: String = "user_id", tsCol: String = "ts"): DataFrame =
+    BatchStore.step(Sessionize.userWeeks(newEvents, userCol, tsCol), storeDir, batchId) {
+      (uw, stored) => Sessionize.engagementFromUserWeeks(stored.unionByName(uw))
     }
-    out
-  }
 }

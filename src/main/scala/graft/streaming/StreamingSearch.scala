@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Bm25
@@ -8,16 +7,15 @@ import graft.operators.Bm25
 /** Search-index maintenance under continuous ingestion: the streaming
   * composition of `Bm25.incrementalPostings` (q_srch4's batch form). Each
   * micro-batch of documents is (1) tokenized into postings — batch-local
-  * work, the indexed corpus is never re-read; (2) appended to the postings
-  * store; (3) scored against the standing query set over the merged index.
+  * work, the indexed corpus is never re-read; (2) scored against the
+  * standing query set over the merged index; (3) written to the postings
+  * store.
   * Because tf/dl are per-(doc, term) local and df/N/avgdl re-derive from
   * the merged postings at query time (`Bm25.scoreMicro`), the merged index
   * EQUALS a full rebuild after every batch — the spec asserts scores
   * byte-identical to a from-scratch index of the union corpus.
   *
-  * Replay idempotence mirrors [[StreamingDedup.processBatch]]: with a
-  * `batchId` the postings write targets a `batch=<id>` subdirectory with
-  * overwrite, and the stored side excludes THIS batch's prior append, so
+  * The postings store follows the [[BatchStore]] protocol, so
   * at-least-once delivery converges to exactly-once index state and
   * exactly-once score output. At cluster scale the store is bucketed by
   * `term` (the inverted-index layout), and per-query scoring prunes to the
@@ -25,49 +23,14 @@ import graft.operators.Bm25
   */
 object StreamingSearch {
 
-  /** One micro-batch: appends the batch's postings to the store and
-    * returns (query_id, doc_id, score_micro) over the merged index.
-    * `queries`: the standing (query_id, term) set — tiny, broadcast by
-    * the scorer. */
+  /** One micro-batch: writes the batch's postings to the store as batch
+    * `batchId` and returns (query_id, doc_id, score_micro) over the merged
+    * index. `queries`: the standing (query_id, term) set — tiny, broadcast
+    * by the scorer. */
   def processBatch(newDocs: DataFrame, postingsDir: String, queries: DataFrame,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   batchId: Option[Long] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val newPost = Bm25.postings(newDocs, idCol, col(textCol))
-      .localCheckpoint() // reused (merge, write) — tokenize once
-    val exists = new Path(postingsDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(new Path(postingsDir))
-    val stored =
-      if (exists) {
-        val all = spark.read.parquet(postingsDir)
-        StoreLayout.check(all, postingsDir, batchId)
-        val prior = batchId match {
-          case Some(id) =>
-            // exclude THIS batch's own surviving append (replay) — other
-            // batches' postings stay, including other versions of an id
-            all.where(!(col("batch") <=> lit(id)))
-          case None =>
-            // one-shot append path: replayed appends leave byte-identical
-            // duplicate posting rows, which would DOUBLE tf contributions;
-            // distinct the stored side so replays converge (same caveat as
-            // StreamingDedup's one-shot path)
-            all.select(col("doc_id"), col("term"), col("tf"), col("dl")).distinct()
-              .join(newPost.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-        }
-        prior.select(col("doc_id"), col("term"), col("tf"), col("dl"))
-      }
-      else newPost.limit(0)
-    val merged = stored.unionByName(
-      newPost.select(col("doc_id"), col("term"), col("tf"), col("dl")))
-    // Materialize before the store write: on replay the overwrite below
-    // replaces files the lazy scoring plan would still reference.
-    val scores = Bm25.scoreMicro(merged, queries).localCheckpoint()
-    batchId match {
-      case Some(id) =>
-        newPost.write.mode("overwrite").parquet(s"$postingsDir/batch=$id")
-      case None =>
-        newPost.write.mode("append").parquet(postingsDir)
+                   batchId: Long,
+                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    BatchStore.step(Bm25.postings(newDocs, idCol, col(textCol)), postingsDir, batchId) {
+      (newPost, stored) => Bm25.scoreMicro(stored.unionByName(newPost), queries)
     }
-    scores
-  }
 }

@@ -344,7 +344,7 @@ class DeterminismSpec extends SparkSpec {
     }
     val updates = rows.take(40).map { case (n, _) => (n, -3L) } ++
       Seq(("zzzz" + key(), 77L))
-    val (_, rewritten, kept) = AcidTable.mergeCowStr(
+    val (_, rewritten, kept) = AcidTable.mergeCow(
       updates.toDF("name", "v"), root, "name", statsCols = Seq("name"))
     assert(rewritten + kept ==
       AcidTable.entriesOf(spark, root,

@@ -84,7 +84,7 @@ class AcidMorSpec extends SparkSpec {
     AcidTable.commitAppend(
       Seq(("é-key", 3L), ("😀-key", 4L)).toDF("name", "v").coalesce(1),
       root, statsCols = Seq("name"))
-    val (v, masked, rewritten) = AcidTable.mergeMorStr(
+    val (v, masked, rewritten) = AcidTable.mergeMor(
       Seq(("beta", 22L), ("zeta", 5L)).toDF("name", "v").coalesce(1),
       root, "name", statsCols = Seq("name"))
     assert(rewritten === 0)

@@ -417,7 +417,7 @@ class AcidTableSpec extends SparkSpec {
     // update one band-2 name; insert a name past every band's max
     val updates = Seq(("id#0012", 999L), ("id#9999", 31L)).toDF("name", "k")
     val (v, rewritten, kept) =
-      AcidTable.mergeCowStr(updates, root, "name", statsCols = Seq("name", "k"))
+      AcidTable.mergeCow(updates, root, "name", statsCols = Seq("name", "k"))
     assert(v === 4L && rewritten === 1 && kept === 2,
       "only file 2 ([id#0011,id#0020]) can contain the touched names")
     val got = AcidTable.read(spark, root)

@@ -142,7 +142,7 @@ class AcidSourceSpec extends SparkSpec {
     AcidTable.commitAppend(
       Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("name", "v").coalesce(1),
       root2, statsCols = Seq("name"))
-    AcidTable.mergeMorStr(Seq(("b", 22L)).toDF("name", "v").coalesce(1),
+    AcidTable.mergeMor(Seq(("b", 22L)).toDF("name", "v").coalesce(1),
       root2, "name", statsCols = Seq("name"))
     assert(spark.read.format("graft-acid").option("root", root2).load()
       .select("name", "v").as[(String, Long)].collect().toSet ===

@@ -55,7 +55,7 @@ class StreamingAudioDedupSpec extends SparkSpec {
     // replayed micro-batch: identical candidates, no duplicate store rows
     val replayed = StreamingDedup.processAudioBatch(
         Seq((2L, wav(100)), (3L, wav(300))).toDF("doc_id", "payload"),
-        store, batchId = Some(1L))
+        store, batchId = 1L)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(replayed === Set((0L, 2L)),
       s"replay must re-emit exactly the original pairs, got $replayed")
@@ -67,10 +67,10 @@ class StreamingAudioDedupSpec extends SparkSpec {
     val store = Files.createTempDirectory("graft_scq_store").toString + "/h"
     StreamingDedup.processAudioBatch(
       Seq((0L, wav(100)), (1L, wav(200))).toDF("doc_id", "payload"),
-      store, batchId = Some(0L), spectral = true)
+      store, batchId = 0L, spectral = true)
     val pairs = StreamingDedup.processAudioBatch(
         Seq((2L, wav(100)), (3L, wav(300))).toDF("doc_id", "payload"),
-        store, batchId = Some(1L), spectral = true)
+        store, batchId = 1L, spectral = true)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((0L, 2L)),
       s"bit-identical late dup must pair under the cq fingerprint, got $pairs")
@@ -87,11 +87,11 @@ class StreamingAudioDedupSpec extends SparkSpec {
     val qdir = Files.createTempDirectory("graft_saudq_q").toString + "/q"
     StreamingDedup.processAudioBatch(
       Seq((0L, wav(100)), (1L, wav(200))).toDF("doc_id", "payload"),
-      store, batchId = Some(0L), quarantineDir = Some(qdir))
+      store, batchId = 0L, quarantineDir = Some(qdir))
     val pairs = StreamingDedup.processAudioBatch(
         Seq((2L, wav(100)), (3L, "not audio".getBytes("UTF-8")), (4L, wav(400)))
           .toDF("doc_id", "payload"),
-        store, batchId = Some(1L), quarantineDir = Some(qdir))
+        store, batchId = 1L, quarantineDir = Some(qdir))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((0L, 2L)), s"good rows still dedup, got $pairs")
     assert(spark.read.parquet(qdir).select("doc_id").as[Long].collect().toSeq === Seq(3L))

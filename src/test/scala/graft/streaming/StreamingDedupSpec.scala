@@ -47,7 +47,7 @@ class StreamingDedupSpec extends SparkSpec {
     val batch2 = Seq((2L, base), (3L, "yet another unrelated document body entirely " * 4))
       .toDF("doc_id", "text")
     val replayed = StreamingDedup.processBatch(batch2, bands,
-        batchId = Some(1L))
+        batchId = 1L)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(replayed === Set((0L, 2L)), s"replay must re-emit exactly the original pairs, got $replayed")
     assert(!replayed.exists(p => p._1 == p._2), "no self-pairs on replay")
@@ -70,10 +70,10 @@ class StreamingDedupSpec extends SparkSpec {
       (0L, 4L, Array(0.9f, 0.1f, 0f, 0f)),  // near ids 1 and 2
       (1L, 5L, Array(0f, -1f, 0f, 0f)),     // anti-parallel to id 3
       (0L, 6L, Array(0f, 0f, 1f, 0f)))      // orthogonal to cell 0
-    val c1 = StreamingDedup.processEmbeddingBatch(day1, cells, batchId = Some(0L))
+    val c1 = StreamingDedup.processEmbeddingBatch(day1, cells, batchId = 0L)
       .as[(Long, Long)].collect().toSet
     assert(c1 === Set((1L, 2L)), s"day-1 new×new only, got $c1")
-    val c2 = StreamingDedup.processEmbeddingBatch(day2, cells, batchId = Some(1L))
+    val c2 = StreamingDedup.processEmbeddingBatch(day2, cells, batchId = 1L)
       .as[(Long, Long)].collect().toSet
     assert(c2 === Set((1L, 4L), (2L, 4L)), s"new×stored pairs, got $c2")
 
@@ -85,7 +85,7 @@ class StreamingDedupSpec extends SparkSpec {
     assert(c2 === full.filter(p => day2Ids(p._1) || day2Ids(p._2)))
 
     // replay of batch 1 (same batchId): identical output, store unchanged
-    val replay = StreamingDedup.processEmbeddingBatch(day2, cells, batchId = Some(1L))
+    val replay = StreamingDedup.processEmbeddingBatch(day2, cells, batchId = 1L)
       .as[(Long, Long)].collect().toSet
     assert(replay === c2, "replay must emit the original candidate set")
     assert(spark.read.parquet(cells).count() === 6,
@@ -106,19 +106,19 @@ class StreamingDedupSpec extends SparkSpec {
       (0L, 4L, Array(0.9f, 0.1f, 0f, 0f)),   // cell 0: links to 1, 2
       (1L, 5L, Array(0.01f, 1f, 0f, 0f)))    // cell 1: links to 3
     val e1 = StreamingDedup.processGraphBatch(day1, cells, edges, m = 2,
-      batchId = Some(0L))
+      batchId = 0L)
     // batch 0 on an empty store: within-batch links only
     assert(e1.select("src", "dst").as[(Long, Long)].collect().toSet ===
       Set((1L, 2L), (2L, 1L)), "cell-0 pair links both ways; singleton cell 1 has none")
     val e2 = StreamingDedup.processGraphBatch(day2, cells, edges, m = 2,
-        batchId = Some(1L))
+        batchId = 1L)
       .select("src", "dst").as[(Long, Long)].collect().toSet
     // new-src lists hit stored members; every forward edge is mirrored
     assert(e2 === Set((4L, 1L), (4L, 2L), (1L, 4L), (2L, 4L),
       (5L, 3L), (3L, 5L)), s"got $e2")
     // replay of batch 1: identical edges, stores unchanged (no second copy)
     val replay = StreamingDedup.processGraphBatch(day2, cells, edges, m = 2,
-        batchId = Some(1L))
+        batchId = 1L)
       .select("src", "dst").as[(Long, Long)].collect().toSet
     assert(replay === e2, "replay must emit the original edge set")
     assert(spark.read.parquet(cells).count() === 5)
@@ -139,10 +139,10 @@ class StreamingDedupSpec extends SparkSpec {
     val bands = Files.createTempDirectory("graft_sdedup_rebands").toString + "/b"
     val other = "completely different content about spark engines " * 4
     StreamingDedup.processBatch(
-      Seq((5L, base), (6L, other)).toDF("doc_id", "text"), bands, batchId = Some(0L))
+      Seq((5L, base), (6L, other)).toDF("doc_id", "text"), bands, batchId = 0L)
     val pairs = StreamingDedup.processBatch(
       Seq((5L, "a totally rewritten second version of this document " * 4),
-          (7L, base)).toDF("doc_id", "text"), bands, batchId = Some(1L))
+          (7L, base)).toDF("doc_id", "text"), bands, batchId = 1L)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((5L, 7L)),
       s"new doc must pair with the STORED version of the recurring id, got $pairs")

@@ -53,7 +53,7 @@ class StreamingImageDedupSpec extends SparkSpec {
     // replayed micro-batch: identical candidates, no duplicate store rows
     val replayed = StreamingDedup.processImageBatch(
         Seq((2L, png(100)), (3L, png(300))).toDF("doc_id", "payload"),
-        store, batchId = Some(1L))
+        store, batchId = 1L)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(replayed === Set((0L, 2L)),
       s"replay must re-emit exactly the original pairs, got $replayed")
@@ -67,11 +67,11 @@ class StreamingImageDedupSpec extends SparkSpec {
     // batch 2 mixes a dup of a stored image, garbage bytes, and a fresh one
     StreamingDedup.processImageBatch(
       Seq((0L, png(100)), (1L, png(200))).toDF("doc_id", "payload"),
-      store, batchId = Some(0L), quarantineDir = Some(qdir))
+      store, batchId = 0L, quarantineDir = Some(qdir))
     val pairs = StreamingDedup.processImageBatch(
         Seq((2L, png(100)), (3L, "junk bytes".getBytes("UTF-8")), (4L, png(400)))
           .toDF("doc_id", "payload"),
-        store, batchId = Some(1L), quarantineDir = Some(qdir))
+        store, batchId = 1L, quarantineDir = Some(qdir))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((0L, 2L)), s"good rows still dedup, got $pairs")
     val quar = spark.read.parquet(qdir)
@@ -85,7 +85,7 @@ class StreamingImageDedupSpec extends SparkSpec {
     StreamingDedup.processImageBatch(
       Seq((2L, png(100)), (3L, "junk bytes".getBytes("UTF-8")), (4L, png(400)))
         .toDF("doc_id", "payload"),
-      store, batchId = Some(1L), quarantineDir = Some(qdir))
+      store, batchId = 1L, quarantineDir = Some(qdir))
     assert(spark.read.parquet(qdir).count() === 1, "replay rewrites the quarantine batch")
   }
 
@@ -94,7 +94,7 @@ class StreamingImageDedupSpec extends SparkSpec {
     intercept[org.apache.spark.SparkException] {
       StreamingDedup.processImageBatch(
         Seq((0L, "junk".getBytes("UTF-8"))).toDF("doc_id", "payload"),
-        store, batchId = Some(0L))
+        store, batchId = 0L)
     }
   }
 }

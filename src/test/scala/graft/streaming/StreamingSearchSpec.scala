@@ -36,11 +36,11 @@ class StreamingSearchSpec extends SparkSpec {
     val b2 = corpus.drop(3).toDF("doc_id", "text")
 
     val s1 = scoresOf(StreamingSearch.processBatch(b1, store, queries,
-      batchId = Some(0L)))
+      batchId = 0L))
     assert(s1 === fullScores(Set(1L, 2L, 3L)))
 
     val s2 = scoresOf(StreamingSearch.processBatch(b2, store, queries,
-      batchId = Some(1L)))
+      batchId = 1L))
     assert(s2 === fullScores(corpus.map(_._1).toSet),
       "after batch 2 the merged index must equal indexing all six docs")
   }
@@ -49,26 +49,17 @@ class StreamingSearchSpec extends SparkSpec {
     val store = Files.createTempDirectory("graft_ssearch_rp").toString + "/p"
     val b1 = corpus.take(3).toDF("doc_id", "text")
     val b2 = corpus.drop(3).toDF("doc_id", "text")
-    StreamingSearch.processBatch(b1, store, queries, batchId = Some(0L))
+    StreamingSearch.processBatch(b1, store, queries, batchId = 0L)
     val first = scoresOf(StreamingSearch.processBatch(b2, store, queries,
-      batchId = Some(1L)))
+      batchId = 1L))
     // crash-after-write replay: same batch id again
     val replay = scoresOf(StreamingSearch.processBatch(b2, store, queries,
-      batchId = Some(1L)))
+      batchId = 1L))
     assert(replay === first)
     // the store holds each (doc, term) posting exactly once
     val stored = spark.read.parquet(store)
       .groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
       .where(col("n") > 1).count()
     assert(stored === 0L)
-  }
-
-  test("one-shot path (no batchId): re-appending an overlapping corpus converges") {
-    val store = Files.createTempDirectory("graft_ssearch_os").toString + "/p"
-    val b1 = corpus.take(4).toDF("doc_id", "text")
-    StreamingSearch.processBatch(b1, store, queries)
-    val again = scoresOf(StreamingSearch.processBatch(b1, store, queries))
-    assert(again === fullScores(Set(1L, 2L, 3L, 4L)),
-      "distinct-on-read must collapse the duplicate append instead of doubling tf")
   }
 }
