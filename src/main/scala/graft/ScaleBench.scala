@@ -431,7 +431,7 @@ object ScaleBench {
       timed("png_decode_dhash", nDocs) {
         Multimodal.imageDHashes(media).count()
       }
-      // auto-routes narrow below NearDup.WideHashThreshold, WIDE at 100x
+      // auto-routes narrow below the wide-band row threshold, WIDE at 100x
       // (500k docs): the 2^16-bucket chunk ceiling BASELINE names is
       // escaped by the same 3-of-6-block tables the text path uses
       timed("image_neardup_pairs", nDocs) {

@@ -114,10 +114,10 @@ object StoreLifecycleCheck {
       val allMedia = Multimodal.syntheticPngNearDups(
         s2.range(NAll).toDF("doc_id"), "doc_id", width = 16, height = 16)
       val newHashes = Multimodal.imageDHashes(
-        allMedia.where(col("doc_id") >= NOld))
+        allMedia.where(col("doc_id") >= NOld)).localCheckpoint()
       val storedH = IndexStore.readDHashes(s2, root)
       require(storedH.count() == NOld, "reloaded dhash store has wrong row count")
-      val incImg = Multimodal.incrementalImageNearDups(newHashes, storedH)
+      val incImg = NearDup.incrementalFingerprintPairs(newHashes, storedH, "doc_id", "dhash")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val allH = Multimodal.imageDHashes(allMedia).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -136,10 +136,10 @@ object StoreLifecycleCheck {
       val allAudio = AudioWav.syntheticWavNearDups(
         s2.range(NAll).toDF("doc_id"), "doc_id", nSamples = 3600)
       val newAHashes = AudioWav.audioHashes(
-        allAudio.where(col("doc_id") >= NOld))
+        allAudio.where(col("doc_id") >= NOld)).localCheckpoint()
       val storedA = IndexStore.readAudioHashes(s2, root)
       require(storedA.count() == NOld, "reloaded audio hash store has wrong row count")
-      val incAud = AudioWav.incrementalAudioNearDups(newAHashes, storedA)
+      val incAud = NearDup.incrementalFingerprintPairs(newAHashes, storedA, "doc_id", "ahash")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val allA = AudioWav.audioHashes(allAudio).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -425,21 +425,12 @@ object AudioWav {
   }
 
   /** Audio near-dup pairs over the constant-Q fingerprint — the same
-    * hash-agnostic pigeonhole band join as [[audioNearDupPairs]] (exact
-    * at Hamming ≤ 3, bucket-local, auto-WIDE past the corpus threshold),
-    * with [[constantQHash64]] in place of the Haar time hash. */
+    * hash-agnostic pigeonhole band join as [[audioNearDupPairs]], with
+    * [[constantQHash64]] in place of the Haar time hash. */
   def audioNearDupPairsCq(binDf: DataFrame, maxHamming: Int = 3,
-                          wide: Option[Boolean] = None,
-                          maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize): DataFrame = {
-    import graft.operators.NearDup
-    require(maxHamming <= 3,
-      s"audioNearDupPairsCq's pigeonhole band tables are exact only for maxHamming <= 3, got $maxHamming")
-    val hashes = constantQHashes(binDf).localCheckpoint()
-    val useWide = wide.getOrElse(hashes.count() >= NearDup.WideHashThreshold)
-    val sh = hashes.withColumnRenamed("cqhash", "simhash")
-    if (useWide) NearDup.simhashPairsWide(sh, "doc_id", maxHamming, maxBucketSize)
-    else NearDup.simhashPairs(sh, "doc_id", maxHamming, maxBucketSize)
-  }
+                          maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize): DataFrame =
+    graft.operators.NearDup.fingerprintPairs(constantQHashes(binDf).localCheckpoint(),
+      "doc_id", "cqhash", maxHamming, maxBucketSize)
 
   /** Per-clip fingerprint table (doc_id, ahash) — real container decode
     * per row on the executors, the audio mirror of
@@ -509,18 +500,9 @@ object AudioWav {
     * (id_a, id_b, hamming, spectral_hamming). */
   def audioNearDupPairsRefined(binDf: DataFrame, maxHamming: Int = 3,
                                maxSpectralHamming: Int = 8,
-                               wide: Option[Boolean] = None,
                                maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize): DataFrame = {
-    import graft.operators.NearDup
-    require(maxHamming <= 3,
-      s"the time-hash pigeonhole is exact only for maxHamming <= 3, got $maxHamming")
     val fp = audioFingerprints(binDf).localCheckpoint()
-    val useWide = wide.getOrElse(fp.count() >= NearDup.WideHashThreshold)
-    val sh = fp.select(col("doc_id"), col("ahash").as("simhash"))
-    val cands =
-      if (useWide) NearDup.simhashPairsWide(sh, "doc_id", maxHamming, maxBucketSize)
-      else NearDup.simhashPairs(sh, "doc_id", maxHamming, maxBucketSize)
-    cands
+    graft.operators.NearDup.fingerprintPairs(fp, "doc_id", "ahash", maxHamming, maxBucketSize)
       .join(fp.select(col("doc_id").as("id_a"), col("shash").as("__sa")), "id_a")
       .join(fp.select(col("doc_id").as("id_b"), col("shash").as("__sb")), "id_b")
       .select(col("id_a"), col("id_b"), col("hamming"),
@@ -529,50 +511,17 @@ object AudioWav {
   }
 
   /** Audio near-duplicate pairs — fingerprint + the hash-agnostic
-    * pigeonhole band join, exactly [[Multimodal.imageNearDupPairs]] with
-    * [[audioHash64]] in place of dHash: every pair at Hamming <= 3 shares
-    * a band bucket, so the join is bucket-local, never all-pairs. Band
-    * mode auto-routes on corpus size past `NearDup.WideHashThreshold`
-    * (identical outputs, only collision volume changes); guarded to
-    * maxHamming <= 3 (the pigeonhole exactness bound). The hash table is
-    * materialized once for the size probe and reused by the band
-    * explosion, so payloads decode exactly once. */
+    * pigeonhole band join (`NearDup.fingerprintPairs`), exactly
+    * [[Multimodal.imageNearDupPairs]] with [[audioHash64]] in place of
+    * dHash: every pair at Hamming <= 3 shares a band bucket, so the join
+    * is bucket-local, never all-pairs. The hash table is materialized, so
+    * payloads decode exactly once. Dedup-on-arrival against a persisted
+    * table (`IndexStore.writeAudioHashes`/`readAudioHashes`) is
+    * `NearDup.incrementalFingerprintPairs`. */
   def audioNearDupPairs(binDf: DataFrame, maxHamming: Int = 3,
-                        wide: Option[Boolean] = None,
-                        maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize): DataFrame = {
-    import graft.operators.NearDup
-    require(maxHamming <= 3,
-      s"audioNearDupPairs' pigeonhole band tables are exact only for maxHamming <= 3, got $maxHamming")
-    val hashes = audioHashes(binDf).localCheckpoint()
-    val useWide = wide.getOrElse(hashes.count() >= NearDup.WideHashThreshold)
-    val sh = hashes.withColumnRenamed("ahash", "simhash")
-    if (useWide) NearDup.simhashPairsWide(sh, "doc_id", maxHamming, maxBucketSize)
-    else NearDup.simhashPairs(sh, "doc_id", maxHamming, maxBucketSize)
-  }
-
-  /** Dedup-on-arrival for audio: near-dup pairs TOUCHING the new batch
-    * (new×new plus new×stored) against a persisted fingerprint table
-    * (`IndexStore.writeAudioHashes`/`readAudioHashes`) — the audio twin of
-    * [[Multimodal.incrementalImageNearDups]], sharing its exactness
-    * contract (equals the full recompute over old ∪ new restricted to
-    * pairs with >= 1 new id, union-counted crowded-bucket cap,
-    * recurring-id no-self-pair semantics) via the same shared core. */
-  def incrementalAudioNearDups(newHashes: DataFrame, storedHashes: DataFrame,
-                               maxHamming: Int = 3,
-                               maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize,
-                               wide: Option[Boolean] = None): DataFrame = {
-    import graft.operators.NearDup
-    require(maxHamming <= 3,
-      s"incrementalAudioNearDups' pigeonhole band tables are exact only for maxHamming <= 3, got $maxHamming")
-    val (nh, useWide) = wide match {
-      case Some(w) => (newHashes, w)
-      case None =>
-        val nhc = newHashes.localCheckpoint()
-        (nhc, nhc.count() + storedHashes.count() >= NearDup.WideHashThreshold)
-    }
-    NearDup.incrementalHashPairs(nh, storedHashes, "doc_id", "ahash",
-      maxHamming, maxBucketSize, useWide)
-  }
+                        maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize): DataFrame =
+    graft.operators.NearDup.fingerprintPairs(audioHashes(binDf).localCheckpoint(),
+      "doc_id", "ahash", maxHamming, maxBucketSize)
 
   /** Deterministic near-dup WAV fixture (the audio mirror of
     * `Multimodal.syntheticPngNearDups`): consecutive ids (2k, 2k+1)

@@ -362,76 +362,17 @@ object Multimodal {
     (parsed.flatMap(_._1).toDF("doc_id", "dhash"), parsed.flatMap(_._2))
   }
 
-  /** Image near-duplicate pairs: dHash + a SimHash pigeonhole join (the
-    * pair machinery is hash-agnostic): EVERY pair at Hamming distance <=
-    * `maxHamming` shares a band bucket, so the join is bucket-local, never
-    * all-pairs. Guarded to maxHamming <= 3 — both band tables are exact
-    * pigeonholes only there (pairs differing in every band would be
-    * silently missed above it), matching `simhashPairsWide`'s contract.
-    *
-    * Band mode auto-routes on corpus size (`wide = None`): below
-    * `NearDup.WideHashThreshold` the 4x16-bit chunk table (4 rows/doc);
-    * past it — where 2^16 buckets/chunk crowd and collision volume goes
-    * ~n²/2^16 — the Manku 3-of-6-block tables (~2^32 buckets, 20
-    * rows/doc). Outputs are identical (spec-asserted); only the join's
-    * collision volume changes. The hash table is materialized once for
-    * the size probe and reused by the band explosion, so payloads decode
-    * exactly once either way. Returns (id_a, id_b, hamming). */
-  def imageNearDupPairs(binDf: DataFrame, maxHamming: Int = 3,
-                        wide: Option[Boolean] = None): DataFrame =
-    imageNearDupPairsFromHashes(imageDHashes(binDf).localCheckpoint(),
-      maxHamming, wide)
-
-  /** [[imageNearDupPairs]] over an ALREADY-COMPUTED (doc_id, dhash) table
-    * — the entry point for callers holding a persisted/memoized
-    * fingerprint table (the keyframe pipeline, an `IndexStore` reload).
-    * `hashes` should be materialized: the auto-route sizes it with a
-    * count, and the band explosion reads it again. */
-  def imageNearDupPairsFromHashes(hashes: DataFrame, maxHamming: Int = 3,
-                                  wide: Option[Boolean] = None): DataFrame = {
-    import graft.operators.NearDup
-    require(maxHamming <= 3,
-      s"imageNearDupPairs' pigeonhole band tables are exact only for maxHamming <= 3, got $maxHamming")
-    val useWide = wide.getOrElse(hashes.count() >= NearDup.WideHashThreshold)
-    val sh = hashes.withColumnRenamed("dhash", "simhash")
-    if (useWide) NearDup.simhashPairsWide(sh, "doc_id", maxHamming)
-    else NearDup.simhashPairs(sh, "doc_id", maxHamming)
-  }
-
-  /** Dedup-on-arrival for images (the media twin of
-    * `NearDup.incrementalLshCandidates`): near-dup pairs TOUCHING the new
-    * batch — new×new plus new×stored — against a persisted dHash table
-    * (`IndexStore.writeDHashes`/`readDHashes`), without recomputing or
-    * rescanning the old corpus' media. Equals the full recompute over
-    * old ∪ new restricted to pairs with at least one new id
-    * (spec-asserted, the exactness contract incremental operators carry
-    * here) — including the crowded-bucket cap, which is counted over the
-    * UNION exactly as the full recompute and the text twin count it (a
-    * new-side-only cap would both miss the blowup protection on stored
-    * crowds and break the equality). A doc_id recurring in both tables
-    * never self-pairs (strict id_a < id_b), matching the text twin's
-    * recurring-id semantics. One bucket-local join over the tagged union. */
-  def incrementalImageNearDups(newHashes: DataFrame, storedHashes: DataFrame,
-                               maxHamming: Int = 3,
-                               maxBucketSize: Int = graft.operators.NearDup.DefaultMaxBucketSize,
-                               wide: Option[Boolean] = None)
-      : DataFrame = {
-    import graft.operators.NearDup
-    require(maxHamming <= 3,
-      s"incrementalImageNearDups' pigeonhole band tables are exact only for maxHamming <= 3, got $maxHamming")
-    // Band-mode auto-routing sizes the UNION (the populations the join
-    // sees): the new side is materialized first so the size probe and the
-    // band explosion share one decode pass; the stored side is a parquet
-    // hash table — counting it reads 8-byte rows, never stored media.
-    val (nh, useWide) = wide match {
-      case Some(w) => (newHashes, w)
-      case None =>
-        val nhc = newHashes.localCheckpoint()
-        (nhc, nhc.count() + storedHashes.count() >= NearDup.WideHashThreshold)
-    }
-    NearDup.incrementalHashPairs(nh, storedHashes, "doc_id", "dhash",
-      maxHamming, maxBucketSize, useWide)
-  }
+  /** Image near-duplicate pairs: dHash + the fingerprint pigeonhole join
+    * (`NearDup.fingerprintPairs` — exact at Hamming <= 3, bucket-local,
+    * band mode chosen by corpus size). The hash table is materialized, so
+    * payloads decode exactly once. Callers holding a persisted (doc_id,
+    * dhash) table call `NearDup.fingerprintPairs` on it directly, and
+    * `NearDup.incrementalFingerprintPairs` probes a new batch against a
+    * stored table (`IndexStore.writeDHashes`/`readDHashes`). Returns
+    * (id_a, id_b, hamming). */
+  def imageNearDupPairs(binDf: DataFrame, maxHamming: Int = 3): DataFrame =
+    graft.operators.NearDup.fingerprintPairs(imageDHashes(binDf).localCheckpoint(),
+      "doc_id", "dhash", maxHamming)
 
   /** Deterministic near-dup PNG fixture: consecutive ids (2k, 2k+1) render
     * the SAME seeded pixels except the odd id blacks out pixel (0,0) — a

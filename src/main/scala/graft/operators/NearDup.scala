@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -109,7 +109,7 @@ object NearDup {
     * count aggregate once per join side. */
   private[graft] def dropCrowdedBuckets(
       banded: DataFrame, keys: Seq[String], cap: Int,
-      obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+      obs: Option[Observation] = None): DataFrame = {
     require(cap > 1, s"maxBucketSize must be > 1, got $cap")
     val counts = banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__bn"))
     val crowded = obs match {
@@ -132,63 +132,73 @@ object NearDup {
       docs: DataFrame, idCol: String, text: Column,
       shingleN: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 4,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    // Materialize the band table before self-joining it: a lazy self-join
-    // plans the whole scan->tokenize->minhash->band pipeline ONCE PER SIDE
-    // (2x the dominant cost — at corpus scale, a doubled sketch pass).
-    // localCheckpoint computes the sketch once and joins the materialized
-    // partitions, same as StreamingDedup persists its batch bands.
-    val banded = dropCrowdedBuckets(
-      lshBandTable(docs, idCol, text, shingleN, numHashes, rowsPerBand)
-        .localCheckpoint(),
-      Seq("__band", "__bucket"), maxBucketSize, capObs)
-    val a = banded.select(col("__band"), col("__bucket"), col("__id").as("id_a"))
-    val b = banded.select(col("__band"), col("__bucket"), col("__id").as("id_b"))
-    a.join(b, Seq("__band", "__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+      capObs: Option[Observation] = None): DataFrame =
+    bandJoin(lshBandTable(docs, idCol, text, shingleN, numHashes, rowsPerBand),
+      LshKeys, maxBucketSize, capObs, None)
 
   /** Incremental dedup candidates when a batch of NEW docs arrives: every
     * candidate pair touching a new doc, WITHOUT recomputing the corpus —
     * the 100 TB shape (a full-corpus re-sketch per daily batch is the
-    * scale-killer). One join of the (small) new band table against the
-    * persisted corpus index gives new x old; a self-join of the new table
-    * gives new x new. Exactly equals the full recompute restricted to
-    * pairs involving a new id (property-tested). Robust to `storedBands`
-    * already containing (some of) the new ids — e.g. a replayed micro-batch
-    * whose previous append survived: self-pairs are filtered and the
-    * duplicate cross pairs collapse in the `distinct`, preserving the
-    * id_a < id_b invariant of the output.
-    *
-    * The bucket cap is computed over the UNION of new + stored bands —
-    * exactly the populations the equivalent full recompute would see — so
-    * capped incremental output still equals the capped full recompute
-    * restricted to new ids, and a boilerplate bucket that grew past the
-    * cap in the store stops joining against every future batch. */
+    * scale-killer). The (small) new band table is joined against the
+    * persisted corpus index and against itself ([[incrementalBandJoin]]).
+    * Exactly equals the full recompute restricted to pairs involving a new
+    * id (property-tested), including the bucket cap, which is counted over
+    * the union of new + stored bands — so a boilerplate bucket that grew
+    * past the cap in the store stops joining against every future batch.
+    * Robust to `storedBands` already containing (some of) the new ids —
+    * e.g. a replayed micro-batch whose previous append survived. */
   def incrementalLshCandidates(newBands: DataFrame, storedBands: DataFrame,
                                maxBucketSize: Int = DefaultMaxBucketSize,
-                               capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+                               capObs: Option[Observation] = None): DataFrame =
+    incrementalBandJoin(newBands, storedBands, LshKeys, maxBucketSize, capObs, None)
+
+  /** The bucket key of the LSH band table. */
+  private val LshKeys = Seq("__band", "__bucket")
+
+  /** The banded candidate self-join every full-recompute generator runs
+    * (here and `Similarity.lshBucketedPairsAboveThreshold`): materialize the band table (`keys` + `__id`, plus the 64-bit
+    * `__h64` payload when `maxHamming` is given), drop crowded buckets
+    * ([[dropCrowdedBuckets]]), self-join on the bucket key keeping
+    * id_a < id_b, and keep pairs within `maxHamming` bits ([[pairsOf]]).
+    * The band table is materialized first because it is usually the
+    * whole sketch pipeline (scan -> tokenize -> minhash -> band): a lazy
+    * self-join would plan it ONCE PER SIDE. */
+  private[operators] def bandJoin(bands: DataFrame, keys: Seq[String], maxBucketSize: Int,
+                                  capObs: Option[Observation],
+                                  maxHamming: Option[Int]): DataFrame = {
+    val banded = dropCrowdedBuckets(bands.localCheckpoint(), keys, maxBucketSize, capObs)
+    def side(s: String) = banded.select(keys.map(col) ++ Seq(col("__id").as(s"id_$s")) ++
+      maxHamming.map(_ => col("__h64").as(s"__h_$s")): _*)
+    pairsOf(side("a").join(side("b"), keys).where(col("id_a") < col("id_b")), maxHamming)
+  }
+
+  /** The incremental twin of [[bandJoin]]: pairs TOUCHING the new band
+    * rows — new×stored plus new×new — without re-pairing the stored
+    * corpus. One join of the new rows against the whole capped union
+    * keeps per-batch work at |new ∩ bucket| × |bucket|; a self-join of
+    * the union filtered on "touches new" would build every stored×stored
+    * bucket pair first, on every batch. The bucket cap counts the UNION
+    * of new + stored rows (the populations the full recompute sees) with
+    * one window count on the SAME bucket partitioning the join needs; the
+    * capped table is materialized ONCE (it feeds both join sides, and
+    * left lazy each would replan the new batch's sketch pipeline).
+    * `capObs` reports the dropped rows and buckets (one `__rn == 1` row
+    * per bucket) at that materialization. An id on both sides (a replayed
+    * batch) never self-pairs, and its duplicate cross pairs collapse in
+    * the `distinct`. */
+  private def incrementalBandJoin(newBands: DataFrame, storedBands: DataFrame,
+                                  keys: Seq[String], maxBucketSize: Int,
+                                  capObs: Option[Observation],
+                                  maxHamming: Option[Int]): DataFrame = {
     require(maxBucketSize > 1, s"maxBucketSize must be > 1, got $maxBucketSize")
-    // The cap count rides the SAME (band, bucket) partitioning the
-    // candidate join needs: one tagged union, one window count (over-cap
-    // buckets dropped in place — no separate aggregate + anti-joins), then
-    // the capped table is materialized ONCE (it feeds three join sides;
-    // left lazy each would replan the new batch's minhash pipeline).
-    // `capObs` mirrors dropCrowdedBuckets' observability on this arrival
-    // path: dropped band-table rows + buckets, published by the
-    // localCheckpoint materialization below (`__bn`-first rows mark one
-    // count per dropped bucket).
-    val tagged = newBands.select(col("__band"), col("__bucket"), col("__id"))
-      .withColumn("__isnew", lit(true))
-      .unionByName(storedBands.select(col("__band"), col("__bucket"), col("__id"))
-        .withColumn("__isnew", lit(false)))
-    val w = Window.partitionBy("__band", "__bucket")
-    val wRn = w.orderBy("__id", "__isnew")
+    val cols = ((keys :+ "__id") ++ maxHamming.map(_ => "__h64")).map(col)
+    val tagged = newBands.select(cols: _*).withColumn("__isnew", lit(true))
+      .unionByName(storedBands.select(cols: _*).withColumn("__isnew", lit(false)))
+    val w = Window.partitionBy(keys.map(col): _*)
     val counted = tagged.withColumn("__bn", count(lit(1)).over(w))
     val observed = capObs match {
       case Some(o) => counted
-        .withColumn("__rn", row_number().over(wRn))
+        .withColumn("__rn", row_number().over(w.orderBy("__id", "__isnew")))
         .observe(o,
           coalesce(sum(when(col("__bn") > maxBucketSize && col("__rn") === 1, lit(1L))),
             lit(0L)).as("dropped_buckets"),
@@ -201,21 +211,32 @@ object NearDup {
       .where(col("__bn") <= maxBucketSize)
       .drop("__bn")
       .localCheckpoint()
-    val n = kept.where(col("__isnew"))
-      .select(col("__band"), col("__bucket"), col("__id").as("__new"))
-    val o = kept.where(!col("__isnew"))
-      .select(col("__band"), col("__bucket"), col("__id").as("__old"))
-    val newOld = n.join(o, Seq("__band", "__bucket"))
-      .where(col("__new") =!= col("__old"))
-      .select(least(col("__new"), col("__old")).as("id_a"),
-        greatest(col("__new"), col("__old")).as("id_b"))
-    val n2 = n.select(col("__band"), col("__bucket"), col("__new").as("id_b"))
-    val newNew = n.withColumnRenamed("__new", "id_a")
-      .join(n2, Seq("__band", "__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    newOld.unionByName(newNew).distinct()
+    def side(rows: DataFrame, id: String, h: String, extra: Column*) =
+      rows.select(keys.map(col) ++ Seq(col("__id").as(id)) ++
+        maxHamming.map(_ => col("__h64").as(h)) ++ extra: _*)
+    val pairs = side(kept.where(col("__isnew")), "__new", "__h_a")
+      .join(side(kept, "__any", "__h_b", col("__isnew")), keys)
+      // new×new once (strict order); new×stored whenever the ids differ
+      .where(col("__new") < col("__any") || (!col("__isnew") && col("__new") > col("__any")))
+      .select(Seq(least(col("__new"), col("__any")).as("id_a"),
+        greatest(col("__new"), col("__any")).as("id_b")) ++
+        maxHamming.toSeq.flatMap(_ => Seq(col("__h_a"), col("__h_b"))): _*)
+    pairsOf(pairs, maxHamming)
   }
+
+  /** The candidate pairs of a band join, distinct: (id_a, id_b), or with
+    * `maxHamming` (id_a, id_b, hamming) over the `__h_a`/`__h_b`
+    * fingerprints, keeping hamming <= maxHamming. hamming is a pure
+    * function of the pair, so filtering BEFORE the dedup is equivalent —
+    * and shrinks the distinct's shuffle input by the filter's selectivity
+    * (most bucket-collision pairs fail it). */
+  private def pairsOf(pairs: DataFrame, maxHamming: Option[Int]): DataFrame =
+    (maxHamming match {
+      case Some(m) => pairs.select(col("id_a"), col("id_b"),
+          bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("long").as("hamming"))
+        .where(col("hamming") <= m)
+      case None => pairs.select("id_a", "id_b")
+    }).distinct()
 
   /** Estimated Jaccard from MinHash signatures: fraction of equal slots. */
   def estJaccard(sigA: Column, sigB: Column, numHashes: Int): Column =
@@ -241,19 +262,10 @@ object NearDup {
     sums.select(col("__id").as(idCol), sh.as("simhash"))
   }
 
-  /** SimHash near-dup candidates: pigeonhole on 16-bit chunks — any pair
-    * with hamming distance <= 3 must agree on >= 1 of 4 chunks, so a
-    * bucket join on (chunk_idx, chunk) finds ALL such pairs without
-    * O(n^2). A `maxHamming` above 3 still filters the candidates it sees
-    * but is recall-lossy (pairs differing in every chunk are never
-    * candidates) — that's the LSH trade, not a bug. Chunk buckets holding
-    * more than `maxBucketSize` docs are dropped before the self-join
-    * ([[dropCrowdedBuckets]]) — on web text, near-empty docs collapse into
-    * a few giant all-zero-ish chunks. */
-  /** The 4x16-bit chunk explosion the pigeonhole joins bucket on — shared
-    * by the text SimHash pairs and the image dHash pairs (the pair
-    * machinery is hash-agnostic over any 64-bit fingerprint column). */
-  private[graft] def hashChunks16(h: DataFrame, idCol: String, hashCol: String): DataFrame =
+  /** The 4x16-bit chunk explosion the narrow pigeonhole joins bucket on —
+    * shared by the text SimHash pairs and the media fingerprint pairs (the
+    * pair machinery is hash-agnostic over any 64-bit fingerprint column). */
+  private def hashChunks16(h: DataFrame, idCol: String, hashCol: String): DataFrame =
     h.select(col(idCol).as("__id"), col(hashCol).as("__h64"),
       posexplode(array((0 until 4).map(c =>
         shiftright(col(hashCol), c * 16).bitwiseAND(lit(0xFFFFL))): _*)))
@@ -261,19 +273,18 @@ object NearDup {
 
   /** Corpus size at which the 16-bit-chunk pigeonhole's 2^16 buckets per
     * chunk start crowding (collision volume ~ n²/2^16 — measured
-    * superlinear past ~10^5 docs, ScaleBench round 5) and callers should
-    * switch to the ~2^32-bucket 3-of-6-block tables ([[hashCombos20]]).
-    * The auto-routing image entry points key off this. */
-  private[graft] val WideHashThreshold: Long = 100000L
+    * superlinear past ~10^5 docs, ScaleBench round 5) and the
+    * ~2^32-bucket 3-of-6-block tables ([[hashCombos20]]) take over
+    * ([[wideBands]]). */
+  private val WideHashThreshold: Long = 100000L
 
-  /** The Manku 3-of-6-block combination explosion [[simhashPairsWide]]
-    * buckets on, factored out so the incremental (new-vs-stored) pair
-    * path can band the SAME way past [[WideHashThreshold]]. Blocks of
-    * 11/11/11/11/10/10 bits; a pair within Hamming 3 agrees on >= 3
-    * blocks, hence collides in >= 1 of the C(6,3)=20 combinations. Output
-    * shape matches [[hashChunks16]] — (__chunk = combo id, __cv = hashed
-    * 3-block key, __id, __h64) — so every consumer is band-mode-agnostic. */
-  private[graft] def hashCombos20(h: DataFrame, idCol: String, hashCol: String): DataFrame = {
+  /** The Manku 3-of-6-block combination explosion the wide pigeonhole
+    * buckets on. Blocks of 11/11/11/11/10/10 bits; a pair within Hamming
+    * 3 agrees on >= 3 blocks, hence collides in >= 1 of the C(6,3)=20
+    * combinations. Output shape matches [[hashChunks16]] — (__chunk =
+    * combo id, __cv = hashed 3-block key, __id, __h64) — so every
+    * consumer is band-mode-agnostic. */
+  private def hashCombos20(h: DataFrame, idCol: String, hashCol: String): DataFrame = {
     val offsets = Seq(0, 11, 22, 33, 44, 54)
     val widths = Seq(11, 11, 11, 11, 10, 10)
     def blockVal(i: Int) =
@@ -289,29 +300,23 @@ object NearDup {
       .withColumnRenamed("pos", "__chunk").withColumnRenamed("col", "__cv")
   }
 
+  /** The bucket key of both fingerprint band tables. */
+  private val ChunkKeys = Seq("__chunk", "__cv")
+
+  /** SimHash near-dup candidates: pigeonhole on 16-bit chunks — any pair
+    * with hamming distance <= 3 must agree on >= 1 of 4 chunks, so a
+    * bucket join on (chunk_idx, chunk) finds ALL such pairs without
+    * O(n^2). A `maxHamming` above 3 still filters the candidates it sees
+    * but is recall-lossy (pairs differing in every chunk are never
+    * candidates) — that's the LSH trade, not a bug. Chunk buckets holding
+    * more than `maxBucketSize` docs are dropped before the self-join
+    * ([[dropCrowdedBuckets]]) — on web text, near-empty docs collapse into
+    * a few giant all-zero-ish chunks. Returns (id_a, id_b, hamming). */
   def simhashPairs(sh: DataFrame, idCol: String, maxHamming: Int = 3,
                    maxBucketSize: Int = DefaultMaxBucketSize,
-                   capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    // Materialized before the self-join for the same reason as
-    // lshCandidatePairs: `sh` is usually the full simhash aggregation, and
-    // a lazy self-join would compute it once per side.
-    val chunks = dropCrowdedBuckets(
-      hashChunks16(sh, idCol, "simhash")
-        .withColumnRenamed("__h64", "simhash")
-        .localCheckpoint(),
-      Seq("__chunk", "__cv"), maxBucketSize, capObs)
-    val a = chunks.select(col("__chunk"), col("__cv"), col("__id").as("id_a"), col("simhash").as("sh_a"))
-    val b = chunks.select(col("__chunk"), col("__cv"), col("__id").as("id_b"), col("simhash").as("sh_b"))
-    a.join(b, Seq("__chunk", "__cv"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-      // hamming is a pure function of the pair, so filtering BEFORE the
-      // dedup is equivalent — and shrinks the distinct's shuffle input by
-      // the filter's selectivity (most bucket-collision pairs fail it)
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                   capObs: Option[Observation] = None): DataFrame =
+    bandJoin(hashChunks16(sh, idCol, "simhash"), ChunkKeys, maxBucketSize, capObs,
+      Some(maxHamming))
 
   /** SimHash near-dup candidates at CORPUS scale — the multi-block
     * refinement of [[simhashPairs]] (the design of Manku/Jain/Sarma's
@@ -329,65 +334,65 @@ object NearDup {
     *
     * Output is IDENTICAL to [[simhashPairs]] at maxHamming <= 3 (both are
     * exact-pigeonhole candidate generators followed by the exact hamming
-    * filter; spec-asserted): use this form when n approaches the 16-bit
-    * chunk space, the 4-chunk form below it. */
+    * filter; spec-asserted); larger bounds are rejected. */
   def simhashPairsWide(sh: DataFrame, idCol: String, maxHamming: Int = 3,
                        maxBucketSize: Int = DefaultMaxBucketSize,
-                       capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    require(maxHamming <= 3,
-      s"simhashPairsWide's 3-of-6-block pigeonhole is exact only for maxHamming <= 3, got $maxHamming")
-    val banded = dropCrowdedBuckets(
-      hashCombos20(sh, idCol, "simhash").localCheckpoint(),
-      Seq("__chunk", "__cv"), maxBucketSize, capObs)
-    val a = banded.select(col("__chunk"), col("__cv"), col("__id").as("id_a"), col("__h64").as("sh_a"))
-    val b = banded.select(col("__chunk"), col("__cv"), col("__id").as("id_b"), col("__h64").as("sh_b"))
-    a.join(b, Seq("__chunk", "__cv"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                       capObs: Option[Observation] = None): DataFrame =
+    bandJoin(pigeonholeBands(sh, idCol, "simhash", maxHamming, wide = true), ChunkKeys,
+      maxBucketSize, capObs, Some(maxHamming))
 
-  /** Incremental (new-batch-vs-stored) pigeonhole pairs over any 64-bit
-    * fingerprint column — the shared core of
-    * [[graft.multimodal.Multimodal.incrementalImageNearDups]] and its
-    * audio twin: near-dup pairs TOUCHING the new batch (new×new plus
-    * new×stored) without rescanning the stored corpus' media. `wide`
-    * selects the band mode — [[hashChunks16]] below [[WideHashThreshold]],
-    * [[hashCombos20]] at corpus scale — and both modes emit identical
-    * pairs at maxHamming <= 3 (exact pigeonholes + the exact hamming
-    * filter). The crowded-bucket cap is counted over the UNION exactly as
-    * the full recompute would count it (a new-side-only cap would both
-    * miss the blowup protection on stored crowds and break the
-    * incremental == restricted-full-recompute equality); a doc_id
-    * recurring in both tables never self-pairs (strict id_a < id_b). One
-    * bucket-local join over the tagged union, cap riding the same
-    * partitioning, materialized ONCE (it feeds both join sides). */
-  private[graft] def incrementalHashPairs(
-      newHashes: DataFrame, storedHashes: DataFrame,
-      idCol: String, hashCol: String,
-      maxHamming: Int, maxBucketSize: Int, wide: Boolean): DataFrame = {
+  /** The one band-mode decision for the fingerprint pair functions: the
+    * wide 3-of-6-block tables from [[WideHashThreshold]] rows on, the
+    * 16-bit chunk table below it. Outputs are identical either way; only
+    * the join's collision volume changes. */
+  private[operators] def wideBands(rows: Long): Boolean = rows >= WideHashThreshold
+
+  /** The exact pigeonhole band table of a 64-bit fingerprint column in the
+    * given mode. Both tables are exact only for maxHamming <= 3 (a pair
+    * differing in every band would be silently missed above it), so a
+    * larger bound is rejected here. */
+  private def pigeonholeBands(h: DataFrame, idCol: String, hashCol: String,
+                              maxHamming: Int, wide: Boolean): DataFrame = {
     require(maxHamming <= 3,
       s"the pigeonhole band tables are exact only for maxHamming <= 3, got $maxHamming")
-    def bands(df: DataFrame) =
-      if (wide) hashCombos20(df, idCol, hashCol) else hashChunks16(df, idCol, hashCol)
-    val tagged = bands(newHashes).withColumn("__isnew", lit(true))
-      .unionByName(bands(storedHashes).withColumn("__isnew", lit(false)))
-    val w = Window.partitionBy("__chunk", "__cv")
-    val capped = tagged.withColumn("__bn", count(lit(1)).over(w))
-      .where(col("__bn") <= maxBucketSize).drop("__bn")
-      .localCheckpoint()
-    val a = capped.select(col("__chunk"), col("__cv"), col("__id").as("id_a"),
-      col("__h64").as("__ha"), col("__isnew").as("__na"))
-    val b = capped.select(col("__chunk"), col("__cv"), col("__id").as("id_b"),
-      col("__h64").as("__hb"), col("__isnew").as("__nb"))
-    a.join(b, Seq("__chunk", "__cv"))
-      .where(col("id_a") < col("id_b") && (col("__na") || col("__nb")))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("__ha").bitwiseXOR(col("__hb"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    if (wide) hashCombos20(h, idCol, hashCol) else hashChunks16(h, idCol, hashCol)
+  }
+
+  /** Near-dup pairs over any 64-bit fingerprint column (image dHash, audio
+    * hashes): EVERY pair at Hamming distance <= `maxHamming` (at most 3)
+    * shares a band bucket, so the join is bucket-local, never all-pairs.
+    * The band mode follows the row count ([[wideBands]]). `hashes` should
+    * be materialized: it is counted, then read again by the band
+    * explosion. Returns (id_a, id_b, hamming). */
+  def fingerprintPairs(hashes: DataFrame, idCol: String, hashCol: String,
+                       maxHamming: Int = 3,
+                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    bandJoin(pigeonholeBands(hashes, idCol, hashCol, maxHamming, wideBands(hashes.count())),
+      ChunkKeys, maxBucketSize, None, Some(maxHamming))
+
+  /** Dedup-on-arrival over a 64-bit fingerprint column: the pairs of
+    * [[fingerprintPairs]] TOUCHING the new batch — new×new plus new×stored
+    * — against a persisted hash table, without rescanning the stored
+    * corpus' media. Equals the full recompute over stored ∪ new restricted
+    * to pairs with at least one new id (spec-asserted), bucket cap
+    * included ([[incrementalBandJoin]]). The band mode follows the union's
+    * row count ([[wideBands]]); both inputs should be materialized (the
+    * stored side is usually a parquet hash table — counting it reads
+    * 8-byte rows, never stored media). */
+  def incrementalFingerprintPairs(newHashes: DataFrame, storedHashes: DataFrame,
+                                  idCol: String, hashCol: String,
+                                  maxHamming: Int = 3,
+                                  maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    incrementalPigeonholePairs(newHashes, storedHashes, idCol, hashCol, maxHamming,
+      maxBucketSize, wideBands(newHashes.count() + storedHashes.count()))
+
+  /** [[incrementalFingerprintPairs]] in the given band mode. */
+  private[graft] def incrementalPigeonholePairs(
+      newHashes: DataFrame, storedHashes: DataFrame, idCol: String, hashCol: String,
+      maxHamming: Int, maxBucketSize: Int, wide: Boolean): DataFrame = {
+    def bands(h: DataFrame) = pigeonholeBands(h, idCol, hashCol, maxHamming, wide)
+    incrementalBandJoin(bands(newHashes), bands(storedHashes), ChunkKeys, maxBucketSize,
+      None, Some(maxHamming))
   }
 
   /** Exact n-gram Jaccard similarity for all pairs within a blocking key —
@@ -445,13 +450,13 @@ object NearDup {
       .where(col("jaccard") >= minSim)
   }
 
-  /** Block-local variant of [[exactJaccardPairs]]: groups each block onto
-    * one task, decodes every shingle array ONCE, and runs the quadratic
-    * pair loop over in-memory primitive arrays — no per-pair row
-    * materialization (the join form copies both arrays into each of the
-    * ~n^2/2 joined rows; measured ~3x). Requires each block's arrays to
-    * fit in task memory (fine for language/label blocks; use the join form
-    * for unbounded blocks). Identical output to the join form.
+  /** Block-local variant of [[exactJaccardPairs]]: splits each block into
+    * tile tasks ([[tileRouted]]), decodes every shingle array ONCE, and
+    * runs the quadratic pair loop over in-memory primitive arrays — no
+    * per-pair row materialization (the join form copies both arrays into
+    * each of the ~n^2/2 joined rows; measured ~3x). Requires each block's
+    * arrays to fit in task memory (fine for language/label blocks; use the
+    * join form for unbounded blocks). Identical output to the join form.
     */
   def exactJaccardPairsBlocked(
       docs: DataFrame, idCol: String, text: Column, block: Column,
@@ -459,18 +464,6 @@ object NearDup {
       maxBlockSize: Int = DefaultMaxBucketSize): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // TRIANGULAR TILING (r15): one task per block serialized the whole
-    // quadratic loop on the dominant block (one language owns most of a
-    // real corpus — 1 of 32 cores busy). Chunk each block's items by
-    // id mod G and run one task per unordered chunk pair (gi <= gj): the
-    // n²/2 comparisons split into G(G+1)/2 tiles of ~(n/G)² each. Each
-    // item is shuffled G times (its chunk meets every other chunk once)
-    // — G is capped so the duplication factor stays bounded on big
-    // clusters; past the cap extra parallelism buys less than the G×
-    // shuffle volume costs (per-tile work is already bounded by the
-    // maxBlockSize guard).
-    val g = math.min(16, math.max(1, math.ceil(
-      math.sqrt(2.0 * spark.sparkContext.defaultParallelism)).toInt))
     val sh = withShingles(
         docs.select(block.cast("string").as("__blk"), col(idCol).cast("long").as("__id"),
           text.as("__text")),
@@ -481,17 +474,9 @@ object NearDup {
       // contract) stays exact inside tile-level tasks
       .withColumn("__n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("__blk")))
-      .withColumn("__c", pmod(col("__id"), lit(g.toLong)).cast("int"))
-      .withColumn("__t", explode(sequence(lit(0), lit(g - 1))))
-      .select(col("__blk"), col("__n"),
-        least(col("__c"), col("__t")).as("__ti"),
-        greatest(col("__c"), col("__t")).as("__tj"),
-        col("__c"), col("__id"), col("__shh"))
-      // each copy lands in a distinct tile (t varies, c fixed): chunk-ti
-      // items reach tile (ti, tj) via t = tj and chunk-tj items via
-      // t = ti — exactly once each, no double-counting
+    val tiles = tileRouted(sh, Seq("__blk", "__n"), "__shh")
       .as[(String, Long, Int, Int, Int, Long, Array[Long])]
-    sh.groupByKey(t => (t._1, t._3, t._4)).flatMapGroups { (key, it) =>
+    tiles.groupByKey(t => (t._1, t._3, t._4)).flatMapGroups { (key, it) =>
       val (blk, ti, tj) = key
       val all = it.toArray
       all.headOption.foreach { h =>
@@ -499,10 +484,9 @@ object NearDup {
           s"exactJaccardPairsBlocked: block '$blk' holds ${h._2} rows " +
           s"(> maxBlockSize=$maxBlockSize); route through lshCandidatePairs + exactJaccardVerify")
       }
-      def side(c: Int) =
-        all.iterator.filter(_._5 == c).map(t => (t._6, t._7)).toArray.sortBy(_._1)
       val out = Seq.newBuilder[(Long, Long, Double)]
-      def pair(ia: Long, aa: Array[Long], ib: Long, ab: Array[Long]): Unit = {
+      forEachTilePair(all, ti, tj)(_._5, _._6) { (a, b) =>
+        val aa = a._7; val ab = b._7
         var x = 0; var y = 0; var c = 0
         while (x < aa.length && y < ab.length) {
           val u = aa(x); val v = ab(y)
@@ -511,33 +495,61 @@ object NearDup {
         }
         val jac = c.toDouble / (aa.length + ab.length - c).toDouble
         if (jac >= minSim)
-          out += (if (ia < ib) (ia, ib, jac) else (ib, ia, jac))
-      }
-      if (ti == tj) {
-        val items = side(ti)
-        var i = 0
-        while (i < items.length) {
-          var j = i + 1
-          while (j < items.length) {
-            pair(items(i)._1, items(i)._2, items(j)._1, items(j)._2)
-            j += 1
-          }
-          i += 1
-        }
-      } else {
-        val a = side(ti); val b = side(tj)
-        var i = 0
-        while (i < a.length) {
-          var j = 0
-          while (j < b.length) {
-            pair(a(i)._1, a(i)._2, b(j)._1, b(j)._2)
-            j += 1
-          }
-          i += 1
-        }
+          out += (if (a._6 < b._6) (a._6, b._6, jac) else (b._6, a._6, jac))
       }
       out.result().iterator
     }.toDF("id_a", "id_b", "jaccard")
+  }
+
+  /** TRIANGULAR TILING of a quadratic within-block pair kernel (r15): one
+    * task per block serializes the whole quadratic loop on the dominant
+    * block (one language owns most of a real corpus — 1 of 32 cores
+    * busy). Each block's rows are chunked by `__id` mod G and routed to
+    * one task per unordered chunk pair (ti <= tj): the n²/2 comparisons
+    * split into G(G+1)/2 tiles of ~(n/G)² each. Each row is shuffled G
+    * times (its chunk meets every other chunk once), so G =
+    * ceil(sqrt(2·parallelism)) is capped at 16 to bound the duplication
+    * on big clusters; past the cap extra parallelism buys less than the
+    * G× shuffle volume costs. Returns `lead`, `__ti`, `__tj`, `__c`
+    * (the row's chunk), `__id`, `payload` — group on the lead block key
+    * plus (`__ti`, `__tj`) and pair with [[forEachTilePair]]. */
+  private[operators] def tileRouted(rows: DataFrame, lead: Seq[String],
+                                    payload: String): DataFrame = {
+    val g = math.min(16, math.max(1, math.ceil(
+      math.sqrt(2.0 * rows.sparkSession.sparkContext.defaultParallelism)).toInt))
+    rows.withColumn("__c", pmod(col("__id"), lit(g.toLong)).cast("int"))
+      .withColumn("__t", explode(sequence(lit(0), lit(g - 1))))
+      // each copy lands in a distinct tile (t varies, c fixed): chunk-ti
+      // rows reach tile (ti, tj) via t = tj and chunk-tj rows via t = ti —
+      // exactly once each, no double-counting
+      .select(lead.map(col) ++ Seq(least(col("__c"), col("__t")).as("__ti"),
+        greatest(col("__c"), col("__t")).as("__tj"), col("__c"), col("__id"),
+        col(payload)): _*)
+  }
+
+  /** Calls `pair` once for every unordered pair of tile (ti, tj)'s rows:
+    * the pairs within chunk ti when ti == tj, else chunk ti × chunk tj.
+    * Rows are visited in id order within a chunk. */
+  private[operators] def forEachTilePair[T](all: Array[T], ti: Int, tj: Int)(
+      chunk: T => Int, id: T => Long)(pair: (T, T) => Unit): Unit = {
+    def side(c: Int) = all.filter(chunk(_) == c).sortBy(id)
+    if (ti == tj) {
+      val items = side(ti)
+      var i = 0
+      while (i < items.length) {
+        var j = i + 1
+        while (j < items.length) { pair(items(i), items(j)); j += 1 }
+        i += 1
+      }
+    } else {
+      val a = side(ti); val b = side(tj)
+      var i = 0
+      while (i < a.length) {
+        var j = 0
+        while (j < b.length) { pair(a(i), b(j)); j += 1 }
+        i += 1
+      }
+    }
   }
 
   /** Connected components over a candidate-pair edge list — the final

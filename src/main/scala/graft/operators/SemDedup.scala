@@ -43,10 +43,9 @@ object SemDedup {
     * different execution shape. The join form materializes ~Σ cell²/2
     * candidate rows, copying both embedding arrays into every candidate
     * row before the cosine filter, and runs each cell's quadratic work
-    * wherever the hash partitioning lands it; here each cell is chunked
-    * by id mod G (G = ceil(sqrt(2·parallelism)), capped at 16 — the
-    * [[NearDup.exactJaccardPairsBlocked]] constants) and one task per
-    * unordered chunk pair scores the tile's pairs over in-memory
+    * wherever the hash partitioning lands it; here each cell is tiled by
+    * [[NearDup.tileRouted]] (the [[NearDup.exactJaccardPairsBlocked]]
+    * routing) and one task per tile scores its pairs over in-memory
     * primitive float arrays: each vector is shuffled G times instead of
     * being copied into ~cell/2 joined rows, and the dominant cell
     * parallelizes over G(G+1)/2 tile tasks instead of serializing.
@@ -67,29 +66,15 @@ object SemDedup {
       return pairsWithinCells(indexed, idCol, vecCol, minSim)
     val spark = indexed.sparkSession
     import spark.implicits._
-    val g = math.min(16, math.max(1, math.ceil(
-      math.sqrt(2.0 * spark.sparkContext.defaultParallelism)).toInt))
-    val rows = indexed.select(col("__cluster").cast("long").as("__blk"),
-        col(idCol).cast("long").as("__id"), col(vecCol).as("__vec"))
-      .withColumn("__c", pmod(col("__id"), lit(g.toLong)).cast("int"))
-      .withColumn("__t", explode(sequence(lit(0), lit(g - 1))))
-      // each copy lands in a distinct tile (t varies, c fixed): chunk-ti
-      // items reach tile (ti, tj) via t = tj and chunk-tj items via
-      // t = ti — exactly once each (the exactJaccardPairsBlocked routing)
-      .select(col("__blk"),
-        least(col("__c"), col("__t")).as("__ti"),
-        greatest(col("__c"), col("__t")).as("__tj"),
-        col("__c"), col("__id"), col("__vec"))
+    val rows = NearDup.tileRouted(indexed.select(col("__cluster").cast("long").as("__blk"),
+        col(idCol).cast("long").as("__id"), col(vecCol).as("__vec")), Seq("__blk"), "__vec")
       .as[(Long, Int, Int, Int, Long, Array[Float])]
     val pairs = rows.groupByKey(t => (t._1, t._2, t._3))
       .flatMapGroups { (key, it) =>
         val (_, ti, tj) = key
-        val all = it.toArray
-        def side(c: Int) =
-          all.iterator.filter(_._4 == c).map(t => (t._5, t._6)).toArray
-            .sortBy(_._1)
         val out = Seq.newBuilder[(Long, Long)]
-        def emit(ia: Long, va: Array[Float], ib: Long, vb: Array[Float]): Unit = {
+        NearDup.forEachTilePair(it.toArray, ti, tj)(_._4, _._5) { (a, b) =>
+          val ia = a._5; val va = a._6; val ib = b._5; val vb = b._6
           if (ia != ib && va != null && vb != null && va.length == vb.length) {
             var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
             while (i < va.length) {
@@ -105,29 +90,6 @@ object SemDedup {
             }
           }
         }
-        if (ti == tj) {
-          val items = side(ti)
-          var i = 0
-          while (i < items.length) {
-            var j = i + 1
-            while (j < items.length) {
-              emit(items(i)._1, items(i)._2, items(j)._1, items(j)._2)
-              j += 1
-            }
-            i += 1
-          }
-        } else {
-          val a = side(ti); val b = side(tj)
-          var i = 0
-          while (i < a.length) {
-            var j = 0
-            while (j < b.length) {
-              emit(a(i)._1, a(i)._2, b(j)._1, b(j)._2)
-              j += 1
-            }
-            i += 1
-          }
-        }
         out.result().iterator
       }.toDF("id_a", "id_b")
     pairs.select(col("id_a").cast(idType).as("id_a"),
@@ -136,7 +98,7 @@ object SemDedup {
 
   /** Incremental within-cell pairs for a NEW vector batch against a
     * stored assignment (round 8 — the embedding twin of
-    * `NearDup.incrementalHashPairs`): candidate pairs touching the batch
+    * `NearDup.incrementalFingerprintPairs`): candidate pairs touching the batch
     * are new×new plus new×stored, found by a cell-local join — the
     * stored corpus is never re-paired against itself. Contract (the
     * q_dedup16 discipline, oracle-enforced by q_dedup21): the output

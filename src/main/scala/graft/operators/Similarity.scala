@@ -253,18 +253,10 @@ object Similarity {
     // to the Column formulation)
     val bandBuckets =
       graft.functions.HyperplaneBuckets(col("__v"), numBands, planes, dim, seed)
-    // materialized before the self-join (sketch computed once, not per side)
-    val banded = NearDup.dropCrowdedBuckets(
-      base
-        .select(col("__blk"), col("__id"), posexplode(bandBuckets))
-        .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket")
-        .localCheckpoint(),
-      Seq("__blk", "__band", "__bucket"), maxBucketSize, capObs)
-    val a = banded.select(col("__blk"), col("__band"), col("__bucket"), col("__id").as("id_a"))
-    val b = banded.select(col("__blk"), col("__band"), col("__bucket"), col("__id").as("id_b"))
-    val candidates = a.join(b, Seq("__blk", "__band", "__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val candidates = NearDup.bandJoin(
+      base.select(col("__blk"), col("__id"), posexplode(bandBuckets))
+        .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket"),
+      Seq("__blk", "__band", "__bucket"), maxBucketSize, capObs, None)
     // exact re-score of candidates only — O(|collisions|), not O(block²)
     candidates
       .join(base.select(col("__id").as("id_a"), col("__v").as("__va")), "id_a")

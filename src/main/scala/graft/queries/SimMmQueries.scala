@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
 import graft.multimodal.Multimodal
-import graft.operators.Similarity
+import graft.operators.{NearDup, Similarity}
 
 /** Similarity search over embeddings + multimodal binary columns
   * (north star, BASELINE.json; SURVEY.md §2.B Q-SIM1–2).
@@ -411,8 +411,8 @@ object SimMmQueries extends QueryModule {
       val newMedia = Multimodal.syntheticPngNearDups(
         Tables.load(s, d, "documents").where(col("doc_id") % 5 === 0),
         "doc_id", width = 16, height = 16)
-      Multimodal.incrementalImageNearDups(
-          Multimodal.imageDHashes(newMedia), Shared.storedDHashes(s, d))
+      NearDup.incrementalFingerprintPairs(Multimodal.imageDHashes(newMedia).localCheckpoint(),
+          Shared.storedDHashes(s, d), "doc_id", "dhash")
         .orderBy("id_a", "id_b")
     }),
 
@@ -488,9 +488,9 @@ object SimMmQueries extends QueryModule {
       val newMedia = graft.multimodal.AudioWav.syntheticWavNearDups(
         Tables.load(s, d, "documents").where(col("doc_id") % 5 === 0),
         "doc_id", nSamples = 3600)
-      graft.multimodal.AudioWav.incrementalAudioNearDups(
-          graft.multimodal.AudioWav.audioHashes(newMedia),
-          Shared.storedAudioHashes(s, d))
+      NearDup.incrementalFingerprintPairs(
+          graft.multimodal.AudioWav.audioHashes(newMedia).localCheckpoint(),
+          Shared.storedAudioHashes(s, d), "doc_id", "ahash")
         .orderBy("id_a", "id_b")
     }),
 
@@ -701,7 +701,7 @@ object SimMmQueries extends QueryModule {
     "q_pipe4" -> ((s, d) => {
       val kf = Shared.clipKeyframeHashes(s, d)
         .select((col("doc_id") * 100 + col("shot_idx")).as("doc_id"), col("dhash"))
-      Multimodal.imageNearDupPairsFromHashes(kf, maxHamming = 3)
+      NearDup.fingerprintPairs(kf, "doc_id", "dhash", maxHamming = 3)
         .where(col("hamming") === 0) // duplicate scenes, not near-misses
         .orderBy("id_a", "id_b")
     }),

@@ -36,7 +36,7 @@ object StreamingDedup {
   /** Media twin of [[processBatch]] (round 6): one micro-batch of image
     * payloads is dHashed (REAL decode per row), probed for near-dup
     * candidates against the persisted hash store plus itself
-    * (`Multimodal.incrementalImageNearDups`), and written to the store.
+    * (`NearDup.incrementalFingerprintPairs`), and written to the store.
     * Per batch, work is |new images| decodes plus bucket-local joins;
     * stored media is NEVER rescanned (only its 8-byte hashes are read
     * back). */
@@ -55,16 +55,15 @@ object StreamingDedup {
         good
       case None => Multimodal.imageDHashes(newMedia)
     }
-    hashStep(hashed, hashStoreDir, batchId) { (fresh, stored, wide) =>
-      Multimodal.incrementalImageNearDups(fresh, stored, maxHamming, wide = wide)
-    }
+    BatchStore.step(hashed, hashStoreDir, batchId)(
+      NearDup.incrementalFingerprintPairs(_, _, "doc_id", "dhash", maxHamming))
   }
 
   /** Audio twin of [[processImageBatch]] (round 7): one micro-batch of WAV
     * payloads is fingerprinted (`AudioWav.audioHash64`, real container
     * decode per row), probed for near-dup candidates against the
     * persisted hash store plus itself
-    * (`AudioWav.incrementalAudioNearDups`), and written to the store.
+    * (`NearDup.incrementalFingerprintPairs`), and written to the store.
     * Stored audio is NEVER rescanned (only its 8-byte hashes are read
     * back). */
   def processAudioBatch(newMedia: DataFrame, hashStoreDir: String,
@@ -90,21 +89,9 @@ object StreamingDedup {
           .withColumnRenamed("cqhash", "ahash")
         else AudioWav.audioHashes(newMedia)
     }
-    hashStep(hashed, hashStoreDir, batchId) { (fresh, stored, wide) =>
-      AudioWav.incrementalAudioNearDups(fresh, stored, maxHamming, wide = wide)
-    }
+    BatchStore.step(hashed, hashStoreDir, batchId)(
+      NearDup.incrementalFingerprintPairs(_, _, "doc_id", "ahash", maxHamming))
   }
-
-  /** The image/audio store step. The batch hashes arrive materialized, so
-    * the band mode is decided here: the incremental entry point's
-    * auto-route would checkpoint them a second time (these counts are
-    * cheap scans of the checkpointed/parquet sides). */
-  private def hashStep(hashes: DataFrame, dir: String, batchId: Long)
-      (nearDups: (DataFrame, DataFrame, Option[Boolean]) => DataFrame): DataFrame =
-    BatchStore.step(hashes, dir, batchId) { (fresh, stored) =>
-      nearDups(fresh, stored,
-        Some(fresh.count() + stored.count() >= NearDup.WideHashThreshold))
-    }
 
   /** Drain an incoming audio directory through [[processAudioBatch]] —
     * the audio mirror of [[runImages]]. */

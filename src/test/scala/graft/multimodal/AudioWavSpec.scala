@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import graft.operators.NearDup
 
 class AudioWavSpec extends SparkSpec {
   import spark.implicits._
@@ -188,7 +189,8 @@ class AudioWavSpec extends SparkSpec {
     val planted = (0L until 40L by 2).map(k => (k, k + 1)).toSet
     assert(planted.subsetOf(pairs), s"missing planted pairs: ${planted -- pairs}")
     // wide band tables emit identical pairs
-    val wide = AudioWav.audioNearDupPairs(media, maxHamming = 3, wide = Some(true))
+    val wide = NearDup.simhashPairsWide(
+        AudioWav.audioHashes(media).withColumnRenamed("ahash", "simhash"), "doc_id", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(wide === pairs)
   }
@@ -239,7 +241,7 @@ class AudioWavSpec extends SparkSpec {
     val stored = graft.operators.IndexStore.readAudioHashes(spark, root)
     assert(stored.collect().map(_.toSeq).toSet === oldH.collect().map(_.toSeq).toSet,
       "audio hash table round-trips exactly")
-    val got = AudioWav.incrementalAudioNearDups(newH, stored, maxHamming = 3)
+    val got = NearDup.incrementalFingerprintPairs(newH, stored, "doc_id", "ahash", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val hm = all.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val truth = (for {
@@ -249,13 +251,13 @@ class AudioWavSpec extends SparkSpec {
     assert(got === truth, "incremental-vs-store != full recompute restricted to new ids")
     assert(got.contains((20L, 21L)), "the boundary-straddling planted pair must be found")
     // recurring id never self-pairs; maxHamming guard enforced
-    val rec = AudioWav.incrementalAudioNearDups(
+    val rec = NearDup.incrementalFingerprintPairs(
         Seq((5L, 0x1234L)).toDF("doc_id", "ahash"),
-        Seq((5L, 0x1234L), (6L, 0x1234L)).toDF("doc_id", "ahash"))
+        Seq((5L, 0x1234L), (6L, 0x1234L)).toDF("doc_id", "ahash"), "doc_id", "ahash")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rec === Set((5L, 6L)))
     intercept[IllegalArgumentException] {
-      AudioWav.incrementalAudioNearDups(oldH, stored, maxHamming = 4)
+      NearDup.incrementalFingerprintPairs(oldH, stored, "doc_id", "ahash", maxHamming = 4)
     }
     all.unpersist()
   }

@@ -82,7 +82,7 @@ class JpegPathSpec extends SparkSpec {
     }
     val hashes = Multimodal.imageDHashes(rows.toDF("doc_id", "payload"))
       .localCheckpoint()
-    val pairs = Multimodal.imageNearDupPairsFromHashes(hashes, maxHamming = 3)
+    val pairs = graft.operators.NearDup.fingerprintPairs(hashes, "doc_id", "dhash", maxHamming = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     (0L until 10L).foreach { id =>
       assert(pairs.contains((id, id + 100L)),

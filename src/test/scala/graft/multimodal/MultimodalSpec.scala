@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import graft.operators.NearDup
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -155,9 +156,11 @@ class MultimodalSpec extends SparkSpec {
     val media = Multimodal.syntheticPngNearDups(
       spark.range(40).toDF("doc_id"), "doc_id", width = 16, height = 16)
       .localCheckpoint()
-    val narrow = Multimodal.imageNearDupPairs(media, maxHamming = 3, wide = Some(false))
+    val sh = Multimodal.imageDHashes(media).withColumnRenamed("dhash", "simhash")
+      .localCheckpoint()
+    val narrow = NearDup.simhashPairs(sh, "doc_id", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val wide = Multimodal.imageNearDupPairs(media, maxHamming = 3, wide = Some(true))
+    val wide = NearDup.simhashPairsWide(sh, "doc_id", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(narrow === wide,
       "both band tables are exact pigeonholes at hamming<=3 — outputs must match")
@@ -165,11 +168,11 @@ class MultimodalSpec extends SparkSpec {
     // incremental twin: same equality over a new-vs-stored split
     val all = Multimodal.imageDHashes(media).localCheckpoint()
     val (oldH, newH) = (all.where($"doc_id" < 21), all.where($"doc_id" >= 21))
-    val incNarrow = Multimodal.incrementalImageNearDups(newH, oldH,
-        maxHamming = 3, wide = Some(false))
+    val incNarrow = NearDup.incrementalPigeonholePairs(newH, oldH, "doc_id", "dhash",
+        maxHamming = 3, NearDup.DefaultMaxBucketSize, wide = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val incWide = Multimodal.incrementalImageNearDups(newH, oldH,
-        maxHamming = 3, wide = Some(true))
+    val incWide = NearDup.incrementalPigeonholePairs(newH, oldH, "doc_id", "dhash",
+        maxHamming = 3, NearDup.DefaultMaxBucketSize, wide = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(incNarrow === incWide && incNarrow.nonEmpty)
   }
@@ -182,7 +185,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val h = Seq((1L, 0L)).toDF("doc_id", "dhash")
     intercept[IllegalArgumentException] {
-      Multimodal.incrementalImageNearDups(h, h, maxHamming = 4)
+      NearDup.incrementalFingerprintPairs(h, h, "doc_id", "dhash", maxHamming = 4)
     }
   }
 
@@ -222,7 +225,7 @@ class MultimodalSpec extends SparkSpec {
     val stored = graft.operators.IndexStore.readDHashes(spark, root)
     assert(stored.collect().map(_.toSeq).toSet === oldH.collect().map(_.toSeq).toSet,
       "dhash table round-trips exactly")
-    val got = Multimodal.incrementalImageNearDups(newH, stored, maxHamming = 3)
+    val got = NearDup.incrementalFingerprintPairs(newH, stored, "doc_id", "dhash", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val hm = all.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val truth = (for {
@@ -240,7 +243,7 @@ class MultimodalSpec extends SparkSpec {
     // the new batch must still pair with the stored id 5
     val stored = Seq((5L, 0x1234L), (1L, 0x00FFL)).toDF("doc_id", "dhash")
     val fresh = Seq((5L, 0x1234L), (6L, 0x1234L)).toDF("doc_id", "dhash")
-    val pairs = Multimodal.incrementalImageNearDups(fresh, stored, maxHamming = 3)
+    val pairs = NearDup.incrementalFingerprintPairs(fresh, stored, "doc_id", "dhash", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!pairs.exists(p => p._1 == p._2), s"no self-pairs, got $pairs")
     assert(pairs === Set((5L, 6L)), s"recurring id still pairs with others, got $pairs")
@@ -250,7 +253,7 @@ class MultimodalSpec extends SparkSpec {
     // recompute AND the incremental probe must both drop the bucket
     val crowdStored = Seq((10L, 0L), (11L, 0L), (12L, 0L)).toDF("doc_id", "dhash")
     val crowdNew = Seq((13L, 0L)).toDF("doc_id", "dhash")
-    val capped = Multimodal.incrementalImageNearDups(crowdNew, crowdStored,
+    val capped = NearDup.incrementalFingerprintPairs(crowdNew, crowdStored, "doc_id", "dhash",
       maxHamming = 3, maxBucketSize = 3)
       .collect()
     assert(capped.isEmpty,

@@ -293,6 +293,42 @@ class DedupNearDupSpec extends SparkSpec {
       s"missing=${(classic -- wide).take(3)} extra=${(wide -- classic).take(3)}")
   }
 
+  test("fingerprint band mode: narrow below the row threshold, wide from it; maxHamming > 3 rejected") {
+    // the threshold is 100k rows: one row below it stays on the 16-bit
+    // chunk table, the threshold itself switches to the 3-of-6-block tables
+    assert(!NearDup.wideBands(99999L))
+    assert(NearDup.wideBands(100000L))
+    val h = Seq((1L, 0L), (2L, 1L)).toDF("doc_id", "dhash")
+    assert(NearDup.fingerprintPairs(h, "doc_id", "dhash").count() === 1L)
+    intercept[IllegalArgumentException] {
+      NearDup.fingerprintPairs(h, "doc_id", "dhash", maxHamming = 4)
+    }
+    intercept[IllegalArgumentException] {
+      NearDup.incrementalFingerprintPairs(h, h, "doc_id", "dhash", maxHamming = 4)
+    }
+    Seq(false, true).foreach { wide =>
+      intercept[IllegalArgumentException] {
+        NearDup.incrementalPigeonholePairs(h, h, "doc_id", "dhash", 4,
+          NearDup.DefaultMaxBucketSize, wide)
+      }
+    }
+    intercept[IllegalArgumentException] {
+      NearDup.simhashPairsWide(h.withColumnRenamed("dhash", "simhash"), "doc_id", maxHamming = 4)
+    }
+  }
+
+  test("incremental fingerprint pairs reject a bucket cap below 2, as the full recompute does") {
+    val h = Seq((1L, 0L), (2L, 0L)).toDF("doc_id", "dhash")
+    val full = intercept[IllegalArgumentException] {
+      NearDup.fingerprintPairs(h, "doc_id", "dhash", maxBucketSize = 1).count()
+    }
+    val inc = intercept[IllegalArgumentException] {
+      NearDup.incrementalFingerprintPairs(h, h, "doc_id", "dhash", maxBucketSize = 1).count()
+    }
+    assert(full.getMessage.contains("maxBucketSize") && inc.getMessage.contains("maxBucketSize"),
+      s"${full.getMessage} / ${inc.getMessage}")
+  }
+
   test("cap observation reports zero drops when no bucket is crowded") {
     val obs = org.apache.spark.sql.Observation("lsh_cap_zero")
     NearDup.lshCandidatePairs(docs, "doc_id", col("text"), capObs = Some(obs)).count()

@@ -7,25 +7,28 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft_ci.XXXXXX)"
 
-echo "== 1/6 compile + tests"
+echo "== 1/7 compile + tests"
 sbt -batch test
 
-echo "== 2/6 perfbench arithmetic tests"
+echo "== 2/7 perfbench arithmetic tests"
 python3 -m unittest discover -s perfbench -p 'test_*.py'
 
-echo "== 3/6 verify dump @ $SF"
+echo "== 3/7 perfbench harness: compile against the engine API + ChecksumSpec"
+(cd perfbench/harness && sbt -batch harness/test)
+
+echo "== 4/7 verify dump @ $SF"
 sbt -batch "runMain graft.Verify $SF $OUT"
 
-echo "== 4/6 DuckDB oracle compare"
+echo "== 5/7 DuckDB oracle compare"
 python3 tools/check.py "$SF" "$OUT" | tail -5
 python3 tools/check.py "$SF" "$OUT" | grep -q " 0 failing" \
   || { echo "ORACLE FAILURES"; exit 1; }
 
-echo "== 5/6 oracle fragility audit (r7 cross-engine-round failure class)"
+echo "== 6/7 oracle fragility audit (r7 cross-engine-round failure class)"
 python3 tools/fragility.py "$SF" "$OUT" | tail -12 \
   || { echo "FRAGILE ORACLE ROUNDS"; exit 1; }
 
-echo "== 6/6 bench (sf0.1)"
+echo "== 7/7 bench (sf0.1)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
   | grep -oE '\{"metric".*' | tee "$OUT/bench.json"
 
