@@ -784,9 +784,10 @@ object ScaleBench {
 
     // ---- NSW batched probe: per-QUERY cost flat in the batch size -------
     // (r12, VERDICT r11 #4) probeBatch serves the whole batch with one
-    // distributed pass per hop, so the wall must grow far slower than the
-    // batch (per-hop jobs amortize across queries); the wall_ratio rows
-    // below print 4x-batch ratios that must stay well under 4.
+    // shared adjacency lookup and one shared vector fetch per level and
+    // per hop (the job count is flat in the batch), so the wall must grow
+    // far slower than the batch; the wall_ratio rows below print 4x-batch
+    // ratios that must stay well under 4.
     locally {
       val rnd = new scala.util.Random(7L)
       val corpus = (0 until 20000).map(i =>

@@ -78,15 +78,13 @@ object AsOfJoin {
       left: DataFrame, right: DataFrame,
       leftKey: String, leftTime: String,
       rightKey: String, rightTime: String,
-      rightValueCols: Seq[String], tieBreak: Seq[String],
-      broadcastRight: Boolean = true): DataFrame = {
+      rightValueCols: Seq[String], tieBreak: Seq[String]): DataFrame = {
     val payloadCols = (rightTime +: tieBreak) ++ rightValueCols
     // unique per-row grouping handle; dropped before returning, so the
     // nondeterministic id values never reach the output
     val l = left.withColumn("__lid", monotonically_increasing_id())
-    val rBase = right.select(col(rightKey).as("__rk"), col(rightTime).as("__rt"),
-      struct(payloadCols.distinct.map(col): _*).as("__rv"))
-    val r = if (broadcastRight) broadcast(rBase) else rBase
+    val r = broadcast(right.select(col(rightKey).as("__rk"), col(rightTime).as("__rt"),
+      struct(payloadCols.distinct.map(col): _*).as("__rv")))
     val joined = l.join(r,
       col(leftKey) === col("__rk") && col("__rt") <= col(leftTime), "left_outer")
     // max of (time, payload-struct) == the union-window's last-over-

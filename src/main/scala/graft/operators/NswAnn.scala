@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
@@ -41,8 +41,11 @@ import graft.functions.VectorOps
   * PROBE: descend the entry hierarchy top-down (per layer: expand the best
   * `entryBeam` nodes' layer-l edges, rescore only the new candidates —
   * O(levels · entryBeam · kUp) entry scores, FLAT in the cell count), then
-  * seed the layer-0 iterative frontier expansion — the distributed
-  * formulation of the greedy beam. Deterministic (ties → lower id).
+  * run the greedy beam over the layer-0 lists. One walk serves one query
+  * ([[probe]]) and a query batch ([[probeBatch]]): each query's beam lives
+  * in driver maps, while the graph and corpus stay distributed — per level
+  * and per hop the batch shares one pruned adjacency lookup and one pruned
+  * vector fetch. Deterministic (ties → lower id).
   *
   * Approximate by design ⇒ rows-only query (the q_sim3 contract): recall
   * is EMITTED AS DATA via [[Similarity.withRecallAgainst]] and floors are
@@ -252,158 +255,180 @@ object NswAnn {
     fwd.unionByName(rev).groupBy("src", "dst").agg(max(col("sim")).as("sim"))
   }
 
-  /** Fetch-and-score: pull the vectors for `ids` (a PRUNED distributed
-    * scan — isin pushes to the parquet reader; at cluster scale the
-    * id-bucketed corpus serves these as point lookups) and score them
-    * against the query driver-side. The beam state is O(beamWidth·M)
-    * BY CONSTRUCTION, so holding it on the driver is the honest serving
-    * shape — the r11 first cut kept it in checkpointed DataFrames and
-    * paid ~25 materialization jobs per probe for data that never
-    * exceeds a few thousand rows. Same in-order double fold as the
-    * codegen'd CosineSimilarity ⇒ bitwise-identical sims. */
-  private def fetchScore(vecs: DataFrame, ids: Seq[Long], qv: Array[Float],
-                         nq: Double,
-                         scored: mutable.Map[Long, Double]): Unit = {
-    val fresh = ids.distinct.filterNot(scored.contains)
-    if (fresh.nonEmpty) {
+  /** Rows of driver-held state the module accepts: 8M rows of
+    * (long, long, double) is ~200 MB of driver heap. */
+  private val DriverRowCeiling = 8000000L
+
+  private def vectors(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"))
+
+  /** One query's walk, held on the driver: every node scored so far (id ->
+    * cosine) and the layer-0 nodes already expanded. The state is
+    * O(levels · entryBeam · kUp + rounds · beamWidth · M) BY CONSTRUCTION,
+    * so the driver is the honest place for it: a DataFrame beam pays
+    * materialization jobs every hop for a few thousand rows. */
+  private final class Walk(val qv: Array[Float]) {
+    val nq: Double = norm(qv)
+    val scored = mutable.Map.empty[Long, Double]
+    val expanded = mutable.Set.empty[Long]
+    /** Scored nodes best-first: (sim desc, id asc). */
+    def ranked: Seq[(Long, Double)] = scored.toSeq.sortBy { case (id, s) => (-s, id) }
+    def best(n: Int, skip: Long => Boolean = _ => false): Seq[Long] =
+      ranked.iterator.map(_._1).filterNot(skip).take(n).toSeq
+  }
+
+  /** Fetch-and-score for a batch of walks: ONE pruned vector fetch for the
+    * union of every walk's unscored `ids` (isin pushes to the parquet
+    * reader; at cluster scale the id-bucketed corpus serves these as point
+    * lookups), then each walk scores only its OWN ids, so a walk's result
+    * is the same whatever else is in the batch. Same in-order double fold
+    * as the codegen'd CosineSimilarity ⇒ bitwise-identical sims. */
+  private def score(walks: Seq[Walk], ids: Seq[Seq[Long]], vecs: DataFrame): Unit = {
+    val fresh = walks.zip(ids).map { case (w, is) => is.distinct.filterNot(w.scored.contains) }
+    val union = fresh.flatten.distinct
+    if (union.nonEmpty) {
       val spark = vecs.sparkSession
       import spark.implicits._
-      vecs.where(col("__id").isin(fresh: _*))
+      val fetched = vecs.where(col("__id").isin(union: _*))
         .as[(Long, Array[Float])].collect()
-        .foreach { case (id, v) => scored(id) = cosine(qv, nq, v, norm(v)) }
+        .map { case (id, v) => id -> (v, norm(v)) }.toMap
+      walks.zip(fresh).foreach { case (w, is) =>
+        is.foreach(id => fetched.get(id).foreach { case (v, nv) =>
+          w.scored(id) = cosine(w.qv, w.nq, v, nv)
+        })
+      }
     }
   }
 
-  private def bestIds(scored: mutable.Map[Long, Double], n: Int,
-                      skip: Long => Boolean = _ => false): Seq[Long] =
-    scored.toSeq.filterNot { case (id, _) => skip(id) }
-      .sortBy { case (id, s) => (-s, id) }.take(n).map(_._1)
+  /** Expand each walk's `frontier` over `edges` (src, dst): ONE pruned
+    * adjacency lookup for the union of the frontiers, then [[score]] each
+    * walk's own destinations. */
+  private def expand(walks: Seq[Walk], frontiers: Seq[Seq[Long]],
+                     edges: DataFrame, vecs: DataFrame): Unit = {
+    val srcs = frontiers.flatten.distinct
+    if (srcs.nonEmpty) {
+      val spark = vecs.sparkSession
+      import spark.implicits._
+      val adj = edges.where(col("src").isin(srcs: _*))
+        .select(col("src").cast("long"), col("dst").cast("long"))
+        .as[(Long, Long)].collect().toSeq.groupMap(_._1)(_._2)
+      score(walks, frontiers.map(_.flatMap(adj.getOrElse(_, Nil))), vecs)
+    }
+  }
+
+  /** Top-down descent of the entry hierarchy for every walk: score the
+    * top-level entries, then per layer expand each walk's best `entryBeam`
+    * nodes over that layer's edges — O(levels · entryBeam · kUp) scores per
+    * query, FLAT in the cell count. */
+  private def descend(walks: Seq[Walk], entries: DataFrame, hier: DataFrame,
+                      vecs: DataFrame, entryBeam: Int): Unit = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val topLevel = entries.agg(max("level")).head().getInt(0)
+    val tops = entries.where(col("level") === topLevel)
+      .select(col("entry_id").cast("long")).as[Long].collect().toSeq
+    score(walks, walks.map(_ => tops), vecs)
+    for (l <- topLevel to 1 by -1)
+      expand(walks, walks.map(_.best(entryBeam)), hier.where(col("layer") === l), vecs)
+  }
+
+  /** The probe for a batch of (query id, vector): descend the entry
+    * hierarchy, then run `rounds` layer-0 hops, each expanding the best
+    * `beamWidth` of a walk's visited-but-unexpanded nodes (a poor hop
+    * cannot shrink the beam). Per level and per hop the whole batch shares
+    * one adjacency lookup and one vector fetch, so the job count does not
+    * grow with the batch. Returns each query's walk, in batch order. */
+  private def walk(neighbors: DataFrame, entries: DataFrame, hier: DataFrame,
+                   emb: DataFrame, idCol: String, vecCol: String,
+                   batch: Seq[(Long, Array[Float])], beamWidth: Int, rounds: Int,
+                   entryBeam: Int): Seq[(Long, Walk)] = {
+    val ids = batch.map(_._1)
+    require(ids.distinct.length == ids.length,
+      s"NswAnn: duplicate query ids ${ids.diff(ids.distinct).distinct.take(5)} — " +
+        "each query needs its own id, or their walks would merge")
+    // Fail before the walk's first job: each walk expands at most rounds x
+    // beamWidth layer-0 nodes, and those frontiers are the keys of the
+    // union lookups and the source of every visited row (x the graph's
+    // out-degree, which is not known before a job). The per-query Long
+    // product is < 2^62 and is compared with the ceiling split over the
+    // batch, so no product can overflow.
+    val perQuery = rounds.toLong * beamWidth
+    require(perQuery <= DriverRowCeiling / math.max(1, batch.length),
+      s"NswAnn: ${batch.length} queries x $rounds rounds x beam $beamWidth " +
+        s"exceeds the $DriverRowCeiling-row driver ceiling for walk state — " +
+        "split the query batch or lower rounds/beamWidth")
+    val walks = batch.map { case (_, qv) => new Walk(qv) }
+    // pin the corpus and adjacency for the loop: descent + every hop is a
+    // pruned lookup into them — one cache build, cached lookups after
+    val vecs = vectors(emb, idCol, vecCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nbr = neighbors.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // try/finally (r16 — ADVICE r15): a throw mid-descent/beam must not
+    // leave the corpus/adjacency cached for the rest of the session
+    try {
+      descend(walks, entries, hier, vecs, entryBeam)
+      for (_ <- 1 to rounds) {
+        val frontiers = walks.map(w => w.best(beamWidth, w.expanded.contains))
+        expand(walks, frontiers, nbr, vecs)
+        walks.zip(frontiers).foreach { case (w, f) => w.expanded ++= f }
+      }
+    } finally {
+      vecs.unpersist(false)
+      nbr.unpersist(false)
+    }
+    ids.zip(walks)
+  }
 
   /** Top-down descent of the entry hierarchy for ONE query: returns every
     * entry node scored on the way down as (`__id`, `sim`), best-first the
     * caller takes seeds from. Exposed so ScaleBench can measure the
     * scored-candidate count (the quantity that must stay FLAT as cells
-    * grow). O(levels · entryBeam · kUp) scores by construction; per
-    * level, one pruned adjacency lookup + one pruned vector fetch. */
+    * grow). The probe's own descent; per level, one pruned adjacency
+    * lookup + one pruned vector fetch. */
   def descendEntries(entries: DataFrame, hier: DataFrame, emb: DataFrame,
                      idCol: String, vecCol: String, query: DataFrame,
                      queryVecCol: String, entryBeam: Int = 8): DataFrame = {
+    require(entryBeam >= 1)
     val spark = entries.sparkSession
     import spark.implicits._
-    val (qv, nq, vecs) = probeInputs(emb, idCol, vecCol, query, queryVecCol,
-      entryBeam, "NswAnn.descendEntries")
-    val scored = descend(entries, hier, vecs, qv, nq, entryBeam)
-    scored.toSeq.sortBy { case (id, s) => (-s, id) }.toDF("__id", "sim")
+    val w = new Walk(Similarity.requireSingleRow(query, "NswAnn.descendEntries")
+      .select(col(queryVecCol)).as[Array[Float]].head())
+    descend(Seq(w), entries, hier, vectors(emb, idCol, vecCol), entryBeam)
+    w.ranked.toDF("__id", "sim")
   }
 
-  private def probeInputs(emb: DataFrame, idCol: String, vecCol: String,
-                          query: DataFrame, queryVecCol: String, beam: Int,
-                          op: String): (Array[Float], Double, DataFrame) = {
-    require(beam >= 1)
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val qv = Similarity.requireSingleRow(query, op)
-      .select(col(queryVecCol)).as[Array[Float]].head()
-    val vecs = emb.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).as("__v"))
-    (qv, norm(qv), vecs)
-  }
-
-  private def descend(entries: DataFrame, hier: DataFrame, vecs: DataFrame,
-                      qv: Array[Float], nq: Double,
-                      entryBeam: Int): mutable.Map[Long, Double] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-    val topLevel = entries.agg(max("level")).head().getInt(0)
-    val scored = mutable.Map.empty[Long, Double]
-    fetchScore(vecs,
-      entries.where(col("level") === topLevel)
-        .select(col("entry_id").cast("long")).as[Long].collect().toSeq,
-      qv, nq, scored)
-    var l = topLevel
-    while (l >= 1) {
-      val frontier = bestIds(scored, entryBeam)
-      val dsts = hier
-        .where(col("layer") === l && col("src").isin(frontier: _*))
-        .select(col("dst").cast("long")).distinct().as[Long].collect()
-      fetchScore(vecs, dsts.toSeq, qv, nq, scored)
-      l -= 1
-    }
-    scored
-  }
-
-  /** Greedy beam probe: descend the entry hierarchy to pick the seed
-    * entries, then expand `rounds` best-first hops over the layer-0
-    * within-cell lists (each hop expands the best `beamWidth` of
+  /** Greedy beam probe for ONE query: descend the entry hierarchy to pick
+    * the seed entries, then expand `rounds` best-first hops over the
+    * layer-0 within-cell lists (each hop expands the best `beamWidth` of
     * everything visited-but-unexpanded — a poor hop cannot shrink the
-    * beam); return the top `k` visited by query similarity. `query` must
-    * be a single row (asserted); ids must be integral. Per hop: one
-    * pruned adjacency lookup + one pruned vector fetch — the graph and
-    * corpus stay distributed, only the bounded beam state lives on the
-    * driver. */
+    * beam); return the top `k` visited by query similarity, unrounded.
+    * `query` must be a single row (asserted); ids must be integral. Per
+    * level and per hop: one pruned adjacency lookup + one pruned vector
+    * fetch — the graph and corpus stay distributed, only the bounded beam
+    * state lives on the driver. */
   def probe(neighbors: DataFrame, entries: DataFrame, hier: DataFrame,
             emb: DataFrame, idCol: String, vecCol: String, query: DataFrame,
             queryVecCol: String, k: Int, beamWidth: Int = 16,
             rounds: Int = 3, entryBeam: Int = 8): DataFrame = {
-    require(k >= 1 && beamWidth >= 1 && rounds >= 1)
+    require(k >= 1 && beamWidth >= 1 && rounds >= 1 && entryBeam >= 1)
     val spark = emb.sparkSession
     import spark.implicits._
-    val (qv, nq, vecs0) = probeInputs(emb, idCol, vecCol, query, queryVecCol,
-      entryBeam, "NswAnn.probe")
-    // pin the corpus and adjacency for the loop (the probeBatch r13
-    // lesson applied to the serial path too): descent + every beam hop
-    // re-scanned them from parquet — one cache build, ~2·rounds cached
-    // pruned lookups after
-    val vecs = vecs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nbr = neighbors
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally (r16 — ADVICE r15): a throw mid-descent/beam must not
-    // leave the corpus/adjacency cached for the rest of the session
-    val scored =
-      try {
-        val sc = descend(entries, hier, vecs, qv, nq, entryBeam)
-        val expanded = mutable.Set.empty[Long]
-        var r = 0
-        while (r < rounds) {
-          val frontier = bestIds(sc, beamWidth, expanded.contains)
-          if (frontier.nonEmpty) {
-            val dsts = nbr.where(col("src").isin(frontier: _*))
-              .select(col("dst").cast("long")).distinct().as[Long].collect()
-            fetchScore(vecs, dsts.toSeq, qv, nq, sc)
-            expanded ++= frontier
-          }
-          r += 1
-        }
-        sc
-      } finally {
-        vecs.unpersist(false)
-        nbr.unpersist(false)
-      }
-    scored.toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
-      .toDF(idCol, "sim")
+    val qv = Similarity.requireSingleRow(query, "NswAnn.probe")
+      .select(col(queryVecCol)).as[Array[Float]].head()
+    val w = walk(neighbors, entries, hier, emb, idCol, vecCol,
+      Seq(0L -> qv), beamWidth, rounds, entryBeam).head._2
+    w.ranked.take(k).toDF(idCol, "sim")
   }
 
   /** Batched probe (round 12 — VERDICT r11 #4): serve a whole QUERY BATCH
-    * with ONE distributed pass per hop, instead of one driver descent+beam
-    * loop per query. Same semantics as [[probe]] per query (identical
-    * seeds, frontier rule, tie-breaks — agreement is spec-asserted on a
-    * singleton batch), different execution shape:
-    *
-    *  - per-query beam state lives in a (query_id, __id, sim) DataFrame,
-    *    not driver maps; the per-query frontier is a rank-per-group window
-    *    (WindowGroupLimit — the [[IvfAnn.probeBatch]] pattern);
-    *  - each hop joins the WHOLE batch's frontier against the adjacency
-    *    and scores every query's fresh candidates in one corpus join
-    *    (broadcast candidate ids + broadcast query vectors — the corpus
-    *    is scanned once per hop for ALL queries, never per query);
-    *  - hop state is MATERIALIZED (localCheckpoint) before the next hop
-    *    consumes it — the r11 q_sim17 lesson: an iterative loop over a
-    *    lazy plan re-runs the whole lineage per iteration.
-    *
-    * Probe cost per hop is O(batch · beamWidth · M) candidate scores —
-    * per-QUERY cost flat in the batch size (the ScaleBench panel
-    * measures exactly this). Output: (query_id, idCol, sim) — each
-    * query's top `k`, ranked per query. */
+    * through the same walk as [[probe]] — identical seeds, frontier rule
+    * and tie-breaks per query, so each query's rows equal [[probe]] on
+    * that query alone (spec-asserted) — with every level and hop of the
+    * batch sharing ONE adjacency lookup and ONE vector fetch: the job
+    * count is flat in the batch size, and per-query work is
+    * O(rounds · beamWidth · M) scores. Query ids must be distinct. The
+    * batch is collected to the driver. Output: (query_id, idCol, sim) —
+    * each query's top `k`, sims rounded to 6 decimals. */
   def probeBatch(neighbors: DataFrame, entries: DataFrame, hier: DataFrame,
                  emb: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, queryIdCol: String, queryVecCol: String,
@@ -412,158 +437,12 @@ object NswAnn {
     require(k >= 1 && beamWidth >= 1 && rounds >= 1 && entryBeam >= 1)
     val spark = emb.sparkSession
     import spark.implicits._
-    // the query batch is broadcast once per hop (score) — materialize the
-    // tiny table so each broadcast rebuild reads the cached rows, not the
-    // batch's parquet scan + filter again (r16)
-    val q = queries.select(col(queryIdCol).cast("long").as("query_id"),
-      col(queryVecCol).as("__qv")).localCheckpoint()
-    val vecs = emb.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).as("__v"))
-    // one corpus join scores every query's fresh candidates: candidate
-    // (query_id, __id) pairs are bounded by batch x beam x M per hop, so
-    // both the pair set and the query vectors broadcast
-    def score(cand: DataFrame): DataFrame =
-      vecs.join(broadcast(cand), Seq("__id"))
-        .join(broadcast(q), Seq("query_id"))
-        .select(col("query_id"), col("__id"),
-          VectorOps.cosine(col("__qv"), col("__v")).as("sim"))
-    // per-hop state is batch x visited — tiny; hash it into a few
-    // query-keyed partitions SIZED TO THE BATCH (set once the batch size
-    // is known, below) so downstream windows/anti-joins run a handful of
-    // real tasks instead of 32 mostly-empty ones, while a big batch's
-    // per-hop work still spreads (one partition serialized the 64-query
-    // panel; 8 partitions taxed the 16-query one). repartition, not
-    // coalesce: the scoring corpus join upstream keeps its parallelism.
-    // The corpus and adjacency are re-scanned once per HOP — pin them in
-    // memory for the loop (r13; they were parquet re-reads per hop
-    // before).
-    var stateParts = 1
-    def materialize(df: DataFrame): DataFrame =
-      df.repartition(stateParts, col("query_id")).localCheckpoint()
-    vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nbr = neighbors.select(col("src").cast("long").as("__id"),
-        col("dst").cast("long").as("__dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally (r16 — ADVICE r15): a throw mid-descent/beam must not
-    // leave the corpus/adjacency cached for the rest of the session. The
-    // result depends only on the CHECKPOINTED beam state, so unpersisting
-    // in the finally is safe on the success path too.
-    val beamFinal = try {
-
-      // DESCENT IN ONE JOB (r13 — the per-level loop cost was levels x
-      // fixed job overhead, not data): the entry hierarchy is O(cells ·
-      // constant) edges BY CONSTRUCTION (buildGraph), so every node the
-      // descent could ever visit — the top-level entries plus each layer's
-      // edge destinations — is a small, driver-safe set. Score ALL of them
-      // for ALL queries in one corpus join, then replay the level-by-level
-      // frontier walk (identical entryBeam + (-sim, id) tie-breaks as
-      // probe()'s descend) on the driver from the collected scores. The
-      // spec's singleton-batch == serial-probe visit-set law pins the
-      // equivalence.
-      val entriesLocal = entries
-        .select(col("level").cast("int"), col("entry_id").cast("long"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      val topLevel = entriesLocal.map(_._1).max
-      val hierLocal = hier
-        .select(col("layer").cast("int"), col("src").cast("long"),
-          col("dst").cast("long"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-      require(hierLocal.length <= 2000000,
-        s"NSW hierarchy has ${hierLocal.length} edges — not the O(cells) " +
-          "design contract; rebuild the graph before batched serving")
-      val tops = entriesLocal.filter(_._1 == topLevel).map(_._2).distinct
-      val hierNodes = (tops ++ hierLocal.map(_._3)).distinct
-      // the edge budget above bounds the HIERARCHY; the collect below is
-      // |queries| x |hierNodes| scored rows — bound the cross product too
-      // (ADVICE r13: a large batch over a big entry hierarchy could OOM the
-      // driver where the old distributed per-level loop could not). 8M rows
-      // of (long, long, double) is ~200 MB of driver heap — the ceiling.
-      val batchSize = q.count()
-      require(batchSize * hierNodes.length <= 8000000L,
-        s"batched NSW descent would collect $batchSize queries x " +
-          s"${hierNodes.length} hierarchy nodes = " +
-          s"${batchSize * hierNodes.length} scored rows to the driver — " +
-          "split the query batch, or rebuild the graph with a smaller " +
-          "entry hierarchy")
-      val hierNodesDf = hierNodes.toDF("__id")
-      val hierScores: Map[Long, Map[Long, Double]] =
-        score(q.select("query_id").crossJoin(broadcast(hierNodesDf)))
-          .collect()
-          .groupBy(_.getLong(0))
-          .map { case (qid, rows) =>
-            qid -> rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
-          }
-      // ~16 queries per state partition: batch 16 stays single-task (the
-      // hop cost is job overhead there), batch 64+ spreads
-      stateParts = math.max(1, math.min(8, hierScores.size / 16))
-      val adj: Map[Int, Map[Long, Seq[Long]]] = hierLocal.groupBy(_._1)
-        .map { case (l, es) =>
-          l -> es.groupBy(_._2).map { case (s, e) => s -> e.map(_._3).toSeq }
-        }
-      val seedRows = hierScores.toSeq.flatMap { case (qid, byId) =>
-        val scored = mutable.Map.empty[Long, Double]
-        tops.foreach(t => byId.get(t).foreach(scored(t) = _))
-        var l = topLevel
-        while (l >= 1) {
-          val frontier = scored.toSeq
-            .sortBy { case (id, s) => (-s, id) }.take(entryBeam).map(_._1)
-          val layerAdj = adj.getOrElse(l, Map.empty)
-          frontier.flatMap(layerAdj.getOrElse(_, Seq.empty)).distinct
-            .foreach(d => if (!scored.contains(d))
-              byId.get(d).foreach(scored(d) = _))
-          l -= 1
-        }
-        scored.toSeq.map { case (id, s) => (qid, id, s) }
-      }
-      // layer-0 beam: expand the best beamWidth visited-but-unexpanded per
-      // query; a poor hop cannot shrink the beam (same rule as probe()).
-      // The expansion flag rides IN the state frame.
-      var beamState = materialize(
-        seedRows.toDF("query_id", "__id", "sim")
-          .withColumn("__exp", lit(false)))
-      // ONE window pass per hop derives the frontier AND the updated
-      // expansion flags (r16): rank each query's rows with unexpanded rows
-      // first, best (sim desc, id asc) within them — the unexpanded rows
-      // ranked <= beamWidth ARE the frontier (identical rule: ids are
-      // unique per query, so the order is total and matches the previous
-      // topKPerGroup-over-unexpanded), and __exp' = __exp OR rank <=
-      // beamWidth replaces the former broadcast left_outer "marked" join.
-      def hop(bs: DataFrame): DataFrame = {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("__exp").asc, col("sim").desc, col("__id").asc)
-        val ranked = bs.withColumn("__rn", row_number().over(w))
-        val frontier = ranked
-          .where(!col("__exp") && col("__rn") <= beamWidth)
-          .select(col("query_id"), col("__id"))
-        // the adjacency is corpus-scale: broadcast the (bounded) frontier
-        // onto it, never the reverse
-        val dsts = nbr.join(broadcast(frontier), Seq("__id"))
-          .select(col("query_id"), col("__dst").as("__id")).distinct()
-        val fresh = dsts.join(bs, Seq("query_id", "__id"), "left_anti")
-        ranked.withColumn("__exp", col("__exp") || col("__rn") <= beamWidth)
-          .drop("__rn")
-          .unionByName(score(fresh).withColumn("__exp", lit(false)))
-      }
-      // NOT fused two-hops-per-barrier (r16, measured): VERDICT r15 #2
-      // proposed halving the materialization barriers by running two lazy
-      // hops per localCheckpoint. Probed flat-to-worse (4.14 -> 4.68 s
-      // min-of-3): the second hop's frontier/fresh references re-execute
-      // the first hop's plan in SEPARATE broadcast-build jobs, and
-      // broadcast exchanges are only reused within one executed plan —
-      // the recomputed joins cost more than the saved barrier. One hop
-      // per barrier stays.
-      var r = 0
-      while (r < rounds) {
-        beamState = materialize(hop(beamState))
-        r += 1
-      }
-      beamState
-    } finally {
-      vecs.unpersist(false)
-      nbr.unpersist(false)
-    }
-    Similarity.topKPerGroup(beamFinal, Seq("query_id"),
-        Seq(col("sim").desc, col("__id").asc), k)
-      .select(col("query_id"), col("__id").as(idCol), round(col("sim"), 6).as("sim"))
+    val batch = queries.select(col(queryIdCol).cast("long"), col(queryVecCol))
+      .as[(Long, Array[Float])].collect().toSeq
+    walk(neighbors, entries, hier, emb, idCol, vecCol, batch, beamWidth,
+        rounds, entryBeam)
+      .flatMap { case (qid, w) => w.ranked.take(k).map { case (id, s) => (qid, id, s) } }
+      .toDF("query_id", idCol, "sim")
+      .withColumn("sim", round(col("sim"), 6))
   }
 }

@@ -127,13 +127,14 @@ object SimMmQueries extends QueryModule {
     }),
 
     // Q-SIM18 (round 12): BATCHED NSW serving — a 16-query batch probes
-    // the same stored graph with ONE distributed pass per hop (per-query
-    // beam state in columns, frontier = rank-per-query window, one corpus
-    // join scores every query's fresh candidates), instead of 16 driver
-    // descent+beam loops. Emits per-query recall vs the batched brute
-    // truth (one corpus scan for all 16 queries). Rows-only (approximate
-    // by design — the q_sim3 contract); singleton-batch agreement with
-    // the serial probe and recall floors are spec-asserted (NswAnnSpec).
+    // the same stored graph through q_sim16's walk, with the 16 beams held
+    // on the driver and every level and hop sharing ONE adjacency lookup
+    // and ONE vector fetch for the whole batch (each query scores only its
+    // own candidates), instead of 16 descent+beam loops. Emits per-query
+    // recall vs the batched brute truth (one corpus scan for all 16
+    // queries). Rows-only (approximate by design — the q_sim3 contract);
+    // per-query agreement with the serial probe and recall floors are
+    // spec-asserted (NswAnnSpec).
     "q_sim18" -> ((s, d) => {
       val emb = Tables.load(s, d, "embeddings")
       val qb = emb.where(col("vec_id") < 16)

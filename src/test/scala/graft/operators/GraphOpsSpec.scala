@@ -66,43 +66,19 @@ class GraphOpsSpec extends SparkSpec {
     // its Spark jobs are the set-up counts and one collect, the same for
     // any iteration count, where the distributed loop adds jobs per round.
     val edges = (0L until 50L).map(i => (2 * i, 2 * i + 1)).toDF("src", "dst")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settledJobs(): Int = { // listener delivery is async
-      var last = -1
-      var stable = 0
-      while (stable < 5) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      last
-    }
     def ranks(iterations: Int): Map[Long, Long] =
       GraphOps.pageRank(edges, "src", "dst", iterations)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.sparkContext.addSparkListener(listener)
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "7500")
-      def counted(iterations: Int): (Int, Map[Long, Long]) = {
-        settledJobs(); jobs.set(0)
-        val r = ranks(iterations)
-        (settledJobs(), r)
-      }
-      val (jobs1, _) = counted(1)
-      val (jobs8, local8) = counted(8)
+      val (jobs1, _) = countingJobs(ranks(1))
+      val (jobs8, local8) = countingJobs(ranks(8))
       assert(jobs1 === jobs8,
         s"local branch expected: jobs grew with iterations ($jobs1 -> $jobs8)")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       assert(local8 === ranks(8), "local branch diverged from the distributed loop")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("triangleCounts: K4 + pendant, direction/duplicate/self-loop insensitive") {

@@ -111,10 +111,31 @@ class NswAnnSpec extends SparkSpec {
   test("probeBatch: 16 queries in one pass — self-surfacing and recall floors") {
     val (nb, en, hr) = built
     val qb = emb.where(col("vec_id") < 16)
-    val res = NswAnn.probeBatch(nb, en, hr, emb, "vec_id", "embedding",
-        qb, "vec_id", "embedding", k = 11, beamWidth = 32, rounds = 5)
-      .select("query_id", "vec_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    def serial(q: Long) =
+      NswAnn.probe(nb, en, hr, emb, "vec_id", "embedding",
+          emb.where(col("vec_id") === q), "embedding", k = 11,
+          beamWidth = 32, rounds = 5)
+        .select(col("vec_id"), round(col("sim"), 6))
+        .as[(Long, Double)].collect().toSeq
+    def batched() =
+      NswAnn.probeBatch(nb, en, hr, emb, "vec_id", "embedding",
+          qb, "vec_id", "embedding", k = 11, beamWidth = 32, rounds = 5)
+        .select("query_id", "vec_id", "sim").as[(Long, Long, Double)].collect()
+    serial(0L); batched() // warm both paths before counting jobs
+    val (serialJobs, _) = countingJobs(serial(0L))
+    val (batchJobs, rows) = countingJobs(batched())
+    // the batch shares each level's and hop's lookup and fetch: 16
+    // queries cost no more jobs than one
+    assert(batchJobs <= serialJobs,
+      s"probeBatch on 16 queries ran $batchJobs jobs, probe on one ran $serialJobs")
+    // the shared union fetch leaks nothing across queries: each query's
+    // rows are exactly the serial probe's on that query alone
+    val byQuery = rows.groupBy(_._1).view
+      .mapValues(_.toSeq.map { case (_, id, s) => (id, s) }
+        .sortBy { case (id, s) => (-s, id) }).toMap
+    (0L until 16L).foreach(q => assert(byQuery.get(q) === Some(serial(q)),
+      s"query $q: batched rows differ from the serial probe"))
+    val res = byQuery.view.mapValues(_.map(_._1).toSet).toMap
     val tru = Similarity.topKForQueries(emb, "vec_id", "embedding",
         qb, "vec_id", "embedding", k = 11)
       .select("query_id", "vec_id").as[(Long, Long)].collect()
@@ -128,6 +149,33 @@ class NswAnnSpec extends SparkSpec {
     assert(recalls.sum / 16.0 >= 0.8, s"mean recall ${recalls.sum / 16.0} under 0.8")
     // query 0 matches the serial probe's pinned operating point
     assert(recalls.head >= 0.9)
+  }
+
+  test("probeBatch rejects duplicate query ids and an over-ceiling walk before any job") {
+    val (nb, en, hr) = built
+    val Array(v0, v1) = emb.where(col("vec_id") < 2).orderBy("vec_id")
+      .select("embedding").as[Array[Float]].collect()
+    // two different vectors under one id would merge into one walk
+    val dup = Seq((5L, v0), (5L, v1)).toDF("qid", "embedding")
+    val (dupJobs, dupErr) = countingJobs(intercept[IllegalArgumentException] {
+      NswAnn.probeBatch(nb, en, hr, emb, "vec_id", "embedding",
+        dup, "qid", "embedding", k = 10)
+    })
+    assert(dupErr.getMessage.contains("duplicate query ids"))
+    assert(dupJobs === 0, s"duplicate ids caught after $dupJobs jobs")
+    // the walk-state bound is checked before the first job, in Long
+    // arithmetic (rounds x beamWidth here overflows an Int)
+    val one = Seq((0L, v0)).toDF("qid", "embedding")
+    val (boundJobs, boundErr) = countingJobs(intercept[IllegalArgumentException] {
+      NswAnn.probeBatch(nb, en, hr, emb, "vec_id", "embedding",
+        one, "qid", "embedding", k = 10, rounds = Int.MaxValue)
+    })
+    assert(boundErr.getMessage.contains("driver ceiling"))
+    assert(boundJobs === 0, s"state bound checked after $boundJobs jobs")
+    intercept[IllegalArgumentException] {
+      NswAnn.probe(nb, en, hr, emb, "vec_id", "embedding",
+        one, "embedding", k = 10, rounds = Int.MaxValue)
+    }
   }
 
   test("planted near-duplicate: a perturbed copy of the query is found") {

@@ -9,23 +9,27 @@ new - old > abs_sec (defaults 2.0 and 0.2 — the standing verdict gate).
 Also reports the common-query sums (the uniform host-drift indicator:
 a heavy-day run inflates everything by a similar factor, a real
 regression moves specific queries) and the entries present on only one
-side. Exits non-zero iff any query trips the gate.
+side. A query named in NEW's "failed" list but not in OLD's is a new
+failure: its time still stands in "queries" and is fast because it threw,
+so it fails the gate whatever its time. An input without "failed" has no
+failures. Exits non-zero iff any query trips the gate or newly fails.
 """
 import json
 import sys
 
 
 def load(path):
+    """(per-query seconds, set of failed query names) of one Bench output."""
     with open(path) as f:
         d = json.load(f)
-    return d["queries"]
+    return d["queries"], set(d.get("failed", []))
 
 
 def main():
     if len(sys.argv) < 3:
         print(__doc__)
         return 2
-    old, new = load(sys.argv[1]), load(sys.argv[2])
+    (old, old_failed), (new, new_failed) = load(sys.argv[1]), load(sys.argv[2])
     ratio = float(sys.argv[3]) if len(sys.argv) > 3 else 2.0
     abs_sec = float(sys.argv[4]) if len(sys.argv) > 4 else 0.2
     common = sorted(set(old) & set(new))
@@ -51,10 +55,16 @@ def main():
                sorted(added, key=lambda q: -new[q])[:10]])
     if removed:
         print("removed:", removed)
+    newly_failed = sorted(new_failed - old_failed)
+    if newly_failed:
+        print("\nNEWLY FAILED (threw in NEW's timed run, not in OLD's):")
+        for q in newly_failed:
+            print(f"  {q}")
     if regs:
         print(f"\nREGRESSIONS past the >{ratio}x-and->{abs_sec}s gate:")
         for q, o, n in sorted(regs, key=lambda r: -(r[2] - r[1])):
             print(f"  {q}: {o:.2f}s -> {n:.2f}s  (x{n / o:.2f}, +{n - o:.2f}s)")
+    if regs or newly_failed:
         return 1
     print(f"\nzero regressions past the >{ratio}x-and->{abs_sec}s gate")
     return 0

@@ -10,8 +10,9 @@ OUT="$(mktemp -d /tmp/graft_ci.XXXXXX)"
 echo "== 1/7 compile + tests"
 sbt -batch test
 
-echo "== 2/7 perfbench arithmetic tests"
+echo "== 2/7 perfbench arithmetic tests + regression-tool tests"
 python3 -m unittest discover -s perfbench -p 'test_*.py'
+python3 -m unittest discover -s tools -p 'test_*.py'
 
 echo "== 3/7 perfbench harness: compile against the engine API + ChecksumSpec"
 (cd perfbench/harness && sbt -batch harness/test)

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Isolated A/B probe: run graft.Bench N times restricted to the given
 # queries (fresh JVM each run), report the per-query MIN across runs —
-# the contention-robust statistic for before/after comparisons.
+# the contention-robust statistic for before/after comparisons. A query
+# named in a run's "failed" list contributes no time from that run.
 # Usage: tools/probe.sh <runs> <comma-separated-queries> [outfile]
 set -e
 RUNS=${1:?runs}; ONLY=${2:?queries}; OUT=${3:-/tmp/probe_agg.json}
@@ -31,7 +32,11 @@ for i in range(1, runs + 1):
             if isinstance(m, dict) and "queries" in m: d = m
     if d is None: continue
     ok_runs += 1
+    failed = set(d.get("failed", []))
     for k, v in d["queries"].items():
+        if k in failed:
+            print(f"run {i}: {k} failed — time skipped")
+            continue
         agg.setdefault(k, []).append(v)
 if ok_runs == 0:
     sys.exit(f"probe: no run of {runs} produced a metrics line — "
