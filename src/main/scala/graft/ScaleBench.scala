@@ -152,15 +152,8 @@ object ScaleBench {
     spark.range(n).as[Long].mapPartitions { it =>
       it.map { id =>
         val seed = if (id % 10L == 0L) -1L else id
-        val rgb = new Array[Int](width * height)
-        var h = seed * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < rgb.length) {
-          h = h * 6364136223846793005L + 1442695040888963407L
-          rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
-          i += 1
-        }
-        (id, graft.multimodal.Multimodal.encodePng(width, height, rgb))
+        (id, graft.multimodal.Multimodal.encodePng(width, height,
+          graft.multimodal.Multimodal.seededRgb(seed, width * height)))
       }
     }.toDF("doc_id", "payload")
   }

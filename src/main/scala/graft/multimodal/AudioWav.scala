@@ -7,6 +7,8 @@ import javax.sound.sampled.AudioSystem
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import Multimodal.{QuarantinedMedia, mapPayloads, quarantineSplit, synthesize}
+
 /** Real audio-modality path (round 6, the WAV twin of the PNG work in
   * [[Multimodal]]): payloads are genuine RIFF/WAVE PCM16 files — encoded
   * by writing the public RIFF container layout, decoded through the JDK's
@@ -116,23 +118,18 @@ object AudioWav {
     * — the planted structure for the silence-trim operator. */
   def syntheticWav(df: DataFrame, idCol: String, nSamples: Int,
                    sampleRate: Int = 16000,
-                   leadSilence: Int = 0, tailSilence: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val samples = new Array[Short](leadSilence + nSamples + tailSilence)
-        var h = id * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < nSamples) {
-          h = h * 6364136223846793005L + 1442695040888963407L
-          samples(leadSilence + i) = (h >>> 48).toShort
-          i += 1
-        }
-        (id, encodeWavPcm16(sampleRate, samples))
+                   leadSilence: Int = 0, tailSilence: Int = 0): DataFrame =
+    synthesize(df, idCol) { id =>
+      val samples = new Array[Short](leadSilence + nSamples + tailSilence)
+      var h = id * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
+      var i = 0
+      while (i < nSamples) {
+        h = h * 6364136223846793005L + 1442695040888963407L
+        samples(leadSilence + i) = (h >>> 48).toShort
+        i += 1
       }
-    }.toDF("doc_id", "payload")
-  }
+      encodeWavPcm16(sampleRate, samples)
+    }
 
   /** Halve the sample rate by averaging adjacent sample pairs — the
     * box-filter decimator, the cheapest alias-suppressing 2x downsample
@@ -142,23 +139,17 @@ object AudioWav {
     * resampled signal is oracle-replicable); an odd trailing sample is
     * dropped. Decode → resample → RE-ENCODE through the real container
     * writer: downstream consumers read a genuine WAV at rate/2. */
-  def downsample2x(binDf: DataFrame): DataFrame = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val (rate, s) = decodeWavPcm16(payload)
-        val out = new Array[Short](s.length / 2)
-        var i = 0
-        while (i < out.length) {
-          out(i) = ((s(2 * i) + s(2 * i + 1)) / 2).toShort
-          i += 1
-        }
-        (id, encodeWavPcm16(rate / 2, out))
-      })
-      .toDF("doc_id", "payload")
-  }
+  def downsample2x(binDf: DataFrame): DataFrame =
+    mapPayloads(binDf) { (id, payload) =>
+      val (rate, s) = decodeWavPcm16(payload)
+      val out = new Array[Short](s.length / 2)
+      var i = 0
+      while (i < out.length) {
+        out(i) = ((s(2 * i) + s(2 * i + 1)) / 2).toShort
+        i += 1
+      }
+      (id, encodeWavPcm16(rate / 2, out))
+    }.toDF("doc_id", "payload")
 
   /** Peak normalization — the loudness-leveling pass run before clips
     * enter a training corpus (widely varying input gains otherwise
@@ -175,35 +166,30 @@ object AudioWav {
   def normalizePeak(binDf: DataFrame, targetPeak: Int): DataFrame = {
     require(targetPeak > 0 && targetPeak <= 32767,
       s"targetPeak must be in (0, 32767], got $targetPeak")
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val (rate, s) = decodeWavPcm16(payload)
-        var peak = 0L
-        var i = 0
-        while (i < s.length) {
-          val a = math.abs(s(i).toLong)
-          if (a > peak) peak = a
-          i += 1
-        }
-        val out =
-          if (peak == 0L) s
-          else {
-            val o = new Array[Short](s.length)
-            i = 0
-            while (i < s.length) {
-              val v = s(i).toLong
-              val scaled = (math.abs(v) * targetPeak) / peak
-              o(i) = (if (v < 0) -scaled else scaled).toShort
-              i += 1
-            }
-            o
+    mapPayloads(binDf) { (id, payload) =>
+      val (rate, s) = decodeWavPcm16(payload)
+      var peak = 0L
+      var i = 0
+      while (i < s.length) {
+        val a = math.abs(s(i).toLong)
+        if (a > peak) peak = a
+        i += 1
+      }
+      val out =
+        if (peak == 0L) s
+        else {
+          val o = new Array[Short](s.length)
+          i = 0
+          while (i < s.length) {
+            val v = s(i).toLong
+            val scaled = (math.abs(v) * targetPeak) / peak
+            o(i) = (if (v < 0) -scaled else scaled).toShort
+            i += 1
           }
-        (id, encodeWavPcm16(rate, out))
-      })
-      .toDF("doc_id", "payload")
+          o
+        }
+      (id, encodeWavPcm16(rate, out))
+    }.toDF("doc_id", "payload")
   }
 
   /** Silence-trim statistics — the audio quality gate that strips
@@ -212,25 +198,19 @@ object AudioWav {
     * much was trimmed off each end. An ALL-quiet clip keeps nothing
     * (n_kept = 0, lead_trimmed = n_in, tail_trimmed = 0 by convention).
     * Exact integer math over really-decoded samples. */
-  def trimSilenceStats(binDf: DataFrame, threshold: Int): DataFrame = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val s = decodeWavPcm16(payload)._2
-        var lo = 0
-        while (lo < s.length && math.abs(s(lo).toInt) <= threshold) lo += 1
-        if (lo == s.length) (id, s.length.toLong, 0L, s.length.toLong, 0L)
-        else {
-          var hi = s.length - 1
-          while (hi > lo && math.abs(s(hi).toInt) <= threshold) hi -= 1
-          (id, s.length.toLong, (hi - lo + 1).toLong, lo.toLong,
-            (s.length - 1 - hi).toLong)
-        }
-      })
-      .toDF("doc_id", "n_in", "n_kept", "lead_trimmed", "tail_trimmed")
-  }
+  def trimSilenceStats(binDf: DataFrame, threshold: Int): DataFrame =
+    mapPayloads(binDf) { (id, payload) =>
+      val s = decodeWavPcm16(payload)._2
+      var lo = 0
+      while (lo < s.length && math.abs(s(lo).toInt) <= threshold) lo += 1
+      if (lo == s.length) (id, s.length.toLong, 0L, s.length.toLong, 0L)
+      else {
+        var hi = s.length - 1
+        while (hi > lo && math.abs(s(hi).toInt) <= threshold) hi -= 1
+        (id, s.length.toLong, (hi - lo + 1).toLong, lo.toLong,
+          (s.length - 1 - hi).toLong)
+      }
+    }.toDF("doc_id", "n_in", "n_kept", "lead_trimmed", "tail_trimmed")
 
   // ---------------------------------------------------------------------
   // Perceptual audio fingerprint + near-dup (round 7): the audio twin of
@@ -271,18 +251,6 @@ object AudioWav {
     energies
   }
 
-  /** 64-bit band-energy sign hash of a decoded clip — the audio twin of
-    * [[Multimodal.dHash64]]: split the samples into 9 equal time frames,
-    * measure each frame's energy in 8 Haar octave bands
-    * ([[bandEnergies]]), then bit (band*8 + t) = 1 iff
-    * energy(t, band) > energy(t+1, band). All-integer, so bitwise
-    * deterministic; robust to small additive noise and re-encoding
-    * (energy ORDER between adjacent frames survives perturbations that
-    * are small relative to the frame's power), sensitive to structural
-    * change (a different clip orders its band energies differently).
-    * Hamming distance between hashes tracks acoustic difference exactly
-    * as dHash tracks visual difference. Clips shorter than 18 samples
-    * hash to 0 (no populated comparisons). */
   /** The 9 time frames × 8 Haar band energies both fingerprints read. */
   private[multimodal] def frameBandEnergies(samples: Array[Short]): Array[Array[Long]] = {
     val n = samples.length
@@ -297,6 +265,18 @@ object AudioWav {
     e
   }
 
+  /** 64-bit band-energy sign hash of a decoded clip — the audio twin of
+    * [[Multimodal.dHash64]]: split the samples into 9 equal time frames,
+    * measure each frame's energy in 8 Haar octave bands
+    * ([[bandEnergies]]), then bit (band*8 + t) = 1 iff
+    * energy(t, band) > energy(t+1, band). All-integer, so bitwise
+    * deterministic; robust to small additive noise and re-encoding
+    * (energy ORDER between adjacent frames survives perturbations that
+    * are small relative to the frame's power), sensitive to structural
+    * change (a different clip orders its band energies differently).
+    * Hamming distance between hashes tracks acoustic difference exactly
+    * as dHash tracks visual difference. Clips shorter than 18 samples
+    * hash to 0 (no populated comparisons). */
   def audioHash64(samples: Array[Short]): Long = {
     if (samples.length < 18) return 0L
     val e = frameBandEnergies(samples)
@@ -411,18 +391,15 @@ object AudioWav {
     bits
   }
 
+  /** (doc_id, hashFn(decoded samples)) — the kernel of every per-clip
+    * fingerprint table, fail-fast and quarantined alike. */
+  private def sampleHash(hashFn: Array[Short] => Long)(id: Long, payload: Array[Byte]): (Long, Long) =
+    (id, hashFn(decodeWavPcm16(payload)._2))
+
   /** Per-clip constant-Q fingerprint table (doc_id, cqhash) — one real
     * decode per row on the executors. */
-  def constantQHashes(binDf: DataFrame): DataFrame = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        (id, constantQHash64(decodeWavPcm16(payload)._2))
-      })
-      .toDF("doc_id", "cqhash")
-  }
+  def constantQHashes(binDf: DataFrame): DataFrame =
+    mapPayloads(binDf)(sampleHash(constantQHash64)).toDF("doc_id", "cqhash")
 
   /** Audio near-dup pairs over the constant-Q fingerprint — the same
     * hash-agnostic pigeonhole band join as [[audioNearDupPairs]], with
@@ -435,58 +412,26 @@ object AudioWav {
   /** Per-clip fingerprint table (doc_id, ahash) — real container decode
     * per row on the executors, the audio mirror of
     * [[Multimodal.imageDHashes]]. */
-  def audioHashes(binDf: DataFrame): DataFrame = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        (id, audioHash64(decodeWavPcm16(payload)._2))
-      })
-      .toDF("doc_id", "ahash")
-  }
+  def audioHashes(binDf: DataFrame): DataFrame =
+    mapPayloads(binDf)(sampleHash(audioHash64)).toDF("doc_id", "ahash")
 
-  /** [[audioHashes]] with decode-failure quarantine — the WAV twin of
-    * `Multimodal.imageDHashesQuarantined`: one decode pass, corrupt clips
-    * to the quarantine frame, good clips hash normally. */
+  /** [[audioHashes]] with decode-failure quarantine
+    * (`Multimodal.quarantineSplit`), any per-clip `hashFn` — the WAV twin
+    * of `Multimodal.imageDHashesQuarantined`. The table column is "ahash"
+    * whichever hash runs. */
   def audioHashesQuarantined(binDf: DataFrame,
                              hashFn: Array[Short] => Long = audioHash64)
-      : (DataFrame, Dataset[Multimodal.QuarantinedMedia]) = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    val parsed = binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        try (Some((id, hashFn(decodeWavPcm16(payload)._2))): Option[(Long, Long)],
-          None: Option[Multimodal.QuarantinedMedia])
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            (None: Option[(Long, Long)],
-              Some(Multimodal.QuarantinedMedia(id, payload.length.toLong,
-                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
-                : Option[Multimodal.QuarantinedMedia])
-        }
-      })
-      // localCheckpoint, not persist: one eager decode pass feeding both
-      // outputs, but the blocks free with the frame's GC — a persisted
-      // frame is pinned by the CacheManager until an explicit unpersist,
-      // which a per-micro-batch caller (StreamingDedup) never gets to do
-      .localCheckpoint()
-    (parsed.flatMap(_._1).toDF("doc_id", "ahash"), parsed.flatMap(_._2))
+      : (DataFrame, Dataset[QuarantinedMedia]) = {
+    val (good, quar) = quarantineSplit(binDf)(sampleHash(hashFn))
+    (good.toDF("doc_id", "ahash"), quar)
   }
 
   /** Both fingerprints in ONE decode pass: (doc_id, ahash, shash). */
-  def audioFingerprints(binDf: DataFrame): DataFrame = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val s = decodeWavPcm16(payload)._2
-        (id, audioHash64(s), audioSpectralHash64(s))
-      })
-      .toDF("doc_id", "ahash", "shash")
-  }
+  def audioFingerprints(binDf: DataFrame): DataFrame =
+    mapPayloads(binDf) { (id, payload) =>
+      val s = decodeWavPcm16(payload)._2
+      (id, audioHash64(s), audioSpectralHash64(s))
+    }.toDF("doc_id", "ahash", "shash")
 
   /** Envelope-collision-resistant audio near-dup pairs: candidates come
     * from the time-hash pigeonhole banding (exact at time-Hamming <= 3 —
@@ -543,116 +488,76 @@ object AudioWav {
     * same hashes, so fixture statistics can never turn into silent
     * wrongness. */
   def syntheticWavNearDups(df: DataFrame, idCol: String, nSamples: Int,
-                           sampleRate: Int = 16000): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val seed = id >> 1
-        // Two LCG steps over a linear combine — enough mixing to
-        // decorrelate (seed, tag) pairs, and every multiplier is < 2^63,
-        // so the whole fixture is replicable in SQL HUGEINT modular
-        // arithmetic (the q_mm8/q_dedup17/q_dedup18 oracles re-derive
-        // the clips from scratch; splitmix's >= 2^63 multipliers put
-        // 64x64-bit products past HUGEINT's range).
-        def mix(a: Long, b: Long): Long = {
-          var x = a * 1000003L + b
-          x = x * 6364136223846793005L + 1442695040888963407L
-          x * 6364136223846793005L + 1442695040888963407L
-        }
-        // per-frame amplitude = 4000 + 3000 * rank of the frame's seeded
-        // hash among the 9 frames — a seeded permutation, distinct per
-        // frame, identical for both halves of a planted pair
-        val frameKeys = Array.tabulate(9)(t => mix(seed, 1000L + t))
-        val amps = {
-          val ranks = frameKeys.zipWithIndex.sortBy(_._1).zipWithIndex
-            .map { case ((_, t), r) => t -> r }.toMap
-          Array.tabulate(9)(t => 4000 + 3000 * ranks(t))
-        }
-        val samples = new Array[Short](nSamples)
-        var h = mix(seed, 2L)
-        var noise = mix(id, 3L)
-        var i = 0
-        while (i < nSamples) {
-          val t = math.min((i.toLong * 9 / nSamples).toInt, 8)
-          h = h * 6364136223846793005L + 1442695040888963407L
-          var v = (((h >>> 48).toShort.toInt * amps(t)) / 32768)
-          if ((id & 1L) == 1L) {
-            noise = noise * 6364136223846793005L + 1442695040888963407L
-            v += (((noise >>> 48) & 0xF).toInt - 8)
-          }
-          samples(i) = v.toShort
-          i += 1
-        }
-        (id, encodeWavPcm16(sampleRate, samples))
+                           sampleRate: Int = 16000): DataFrame =
+    synthesize(df, idCol) { id =>
+      val seed = id >> 1
+      // Two LCG steps over a linear combine — enough mixing to
+      // decorrelate (seed, tag) pairs, and every multiplier is < 2^63,
+      // so the whole fixture is replicable in SQL HUGEINT modular
+      // arithmetic (the q_mm8/q_dedup17/q_dedup18 oracles re-derive
+      // the clips from scratch; splitmix's >= 2^63 multipliers put
+      // 64x64-bit products past HUGEINT's range).
+      def mix(a: Long, b: Long): Long = {
+        var x = a * 1000003L + b
+        x = x * 6364136223846793005L + 1442695040888963407L
+        x * 6364136223846793005L + 1442695040888963407L
       }
-    }.toDF("doc_id", "payload")
+      // per-frame amplitude = 4000 + 3000 * rank of the frame's seeded
+      // hash among the 9 frames — a seeded permutation, distinct per
+      // frame, identical for both halves of a planted pair
+      val frameKeys = Array.tabulate(9)(t => mix(seed, 1000L + t))
+      val amps = {
+        val ranks = frameKeys.zipWithIndex.sortBy(_._1).zipWithIndex
+          .map { case ((_, t), r) => t -> r }.toMap
+        Array.tabulate(9)(t => 4000 + 3000 * ranks(t))
+      }
+      val samples = new Array[Short](nSamples)
+      var h = mix(seed, 2L)
+      var noise = mix(id, 3L)
+      var i = 0
+      while (i < nSamples) {
+        val t = math.min((i.toLong * 9 / nSamples).toInt, 8)
+        h = h * 6364136223846793005L + 1442695040888963407L
+        var v = (((h >>> 48).toShort.toInt * amps(t)) / 32768)
+        if ((id & 1L) == 1L) {
+          noise = noise * 6364136223846793005L + 1442695040888963407L
+          v += (((noise >>> 48) & 0xF).toInt - 8)
+        }
+        samples(i) = v.toShort
+        i += 1
+      }
+      encodeWavPcm16(sampleRate, samples)
+    }
+
+  /** Sample statistics of one really-decoded clip — the kernel of
+    * [[audioFeatures]] and [[audioFeaturesQuarantined]]. Exact integer
+    * sums feed the rms, so the double math is a single final sqrt —
+    * deterministic. */
+  private def sampleStats(id: Long, payload: Array[Byte]): AudioFeatures = {
+    val (rate, s) = decodeWavPcm16(payload)
+    var (sumSq, peak, zc) = (0L, 0, 0L)
+    var i = 0
+    while (i < s.length) {
+      val v = s(i).toInt
+      sumSq += v.toLong * v
+      if (math.abs(v) > peak) peak = math.abs(v)
+      if (i > 0 && ((v >= 0) != (s(i - 1) >= 0))) zc += 1
+      i += 1
+    }
+    val rms = if (s.length == 0) 0.0 else math.sqrt(sumSq.toDouble / s.length)
+    AudioFeatures(id, rate, s.length, peak, rms, zc)
   }
 
-  /** Crawl-scale fault isolation for the audio decode path — the WAV twin
-    * of `Multimodal.imageFeaturesQuarantined` (and of
-    * `IngestEgress.readCsvWithQuarantine`, R6 semantics): undecodable
-    * payloads land in a quarantine frame with a reason, good clips'
-    * features are unaffected, the job completes. ONE decode pass,
-    * persisted once and split. */
+  /** [[audioFeatures]] with decode-failure quarantine
+    * (`Multimodal.quarantineSplit`): undecodable payloads land in a
+    * quarantine frame with a reason, good clips' features are unaffected,
+    * the job completes. */
   def audioFeaturesQuarantined(binDf: DataFrame)
-      : (Dataset[AudioFeatures], Dataset[Multimodal.QuarantinedMedia]) = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    val parsed = binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        try {
-          val (rate, s) = decodeWavPcm16(payload)
-          var (sumSq, peak, zc) = (0L, 0, 0L)
-          var i = 0
-          while (i < s.length) {
-            val v = s(i).toInt
-            sumSq += v.toLong * v
-            if (math.abs(v) > peak) peak = math.abs(v)
-            if (i > 0 && ((v >= 0) != (s(i - 1) >= 0))) zc += 1
-            i += 1
-          }
-          val rms = if (s.length == 0) 0.0 else math.sqrt(sumSq.toDouble / s.length)
-          (Some(AudioFeatures(id, rate, s.length, peak, rms, zc)): Option[AudioFeatures],
-            None: Option[Multimodal.QuarantinedMedia])
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            (None: Option[AudioFeatures],
-              Some(Multimodal.QuarantinedMedia(id, payload.length.toLong,
-                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
-                : Option[Multimodal.QuarantinedMedia])
-        }
-      })
-      // localCheckpoint, not persist: one eager decode pass feeding both
-      // outputs, but the blocks free with the frame's GC — a persisted
-      // frame is pinned by the CacheManager until an explicit unpersist,
-      // which a per-micro-batch caller (StreamingDedup) never gets to do
-      .localCheckpoint()
-    (parsed.flatMap(_._1), parsed.flatMap(_._2))
-  }
+      : (Dataset[AudioFeatures], Dataset[QuarantinedMedia]) =
+    quarantineSplit(binDf)(sampleStats)
 
   /** Decode every payload (really — a codec parse per row, on the
-    * executors) and extract sample statistics. Exact integer sums feed the
-    * rms, so the double math is a single final sqrt — deterministic. */
-  def audioFeatures(binDf: DataFrame): Dataset[AudioFeatures] = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val (rate, s) = decodeWavPcm16(payload)
-        var (sumSq, peak, zc) = (0L, 0, 0L)
-        var i = 0
-        while (i < s.length) {
-          val v = s(i).toInt
-          sumSq += v.toLong * v
-          if (math.abs(v) > peak) peak = math.abs(v)
-          if (i > 0 && ((v >= 0) != (s(i - 1) >= 0))) zc += 1
-          i += 1
-        }
-        val rms = if (s.length == 0) 0.0 else math.sqrt(sumSq.toDouble / s.length)
-        AudioFeatures(id, rate, s.length, peak, rms, zc)
-      })
-  }
+    * executors) and extract sample statistics. */
+  def audioFeatures(binDf: DataFrame): Dataset[AudioFeatures] =
+    mapPayloads(binDf)(sampleStats)
 }

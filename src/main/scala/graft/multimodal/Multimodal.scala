@@ -5,7 +5,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (north star, BASELINE.json): treat
@@ -36,18 +39,64 @@ object Multimodal {
                            mean_r: Double, mean_g: Double, mean_b: Double,
                            mean_luma: Double)
 
+  /** One quarantined media payload: the id, the byte length (0 for a null
+    * payload), and WHY the decode failed — enough to triage or re-fetch
+    * without carrying the broken bytes through the pipeline. */
+  case class QuarantinedMedia(doc_id: Long, n_bytes: Long, reason: String)
+
+  // ---------------------------------------------------------------------
+  // Payload stage: every operator over (doc_id, payload) rows runs its
+  // per-row kernel through one of these, so a kernel is written once and
+  // serves both the fail-fast and the quarantine form of its operator.
+  // ---------------------------------------------------------------------
+
+  /** Fail-fast payload stage for kernels emitting any number of rows per
+    * payload (frames, shots, keyframes): `kernel` runs inside
+    * `mapPartitions` on the executors — no driver collect — and its first
+    * failure fails the job. */
+  private[graft] def flatMapPayloads[T <: Product : TypeTag](binDf: DataFrame)(
+      kernel: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] =
+    binDf.select(col("doc_id").cast("long"), col("payload"))
+      .as(Encoders.product[(Long, Array[Byte])])
+      .mapPartitions(_.flatMap { case (id, payload) => kernel(id, payload) })(Encoders.product[T])
+
+  /** [[flatMapPayloads]] for a kernel emitting one row per payload. */
+  private[graft] def mapPayloads[T <: Product : TypeTag](binDf: DataFrame)(
+      kernel: (Long, Array[Byte]) => T): Dataset[T] =
+    flatMapPayloads(binDf)((id, payload) => Iterator.single(kernel(id, payload)))
+
+  /** Crawl-scale fault isolation for every media decode path — the media
+    * twin of `IngestEgress.readCsvWithQuarantine` (R6 semantics): a row
+    * whose kernel throws (a corrupt or null payload) is routed to the
+    * quarantine frame with a reason instead of killing the job, and good
+    * rows are exactly what [[mapPayloads]] emits for them. Returns (clean,
+    * quarantined). ONE decode pass: the parsed frame is materialized by
+    * `localCheckpoint` and split — the two outputs would otherwise
+    * re-decode every payload. Not `persist`: a persisted frame is pinned
+    * by the CacheManager until an explicit unpersist, which a
+    * per-micro-batch caller (StreamingDedup) never gets to do, while the
+    * checkpoint's blocks free with the frame's GC. */
+  private[graft] def quarantineSplit[T <: Product : TypeTag](binDf: DataFrame)(
+      kernel: (Long, Array[Byte]) => T): (Dataset[T], Dataset[QuarantinedMedia]) = {
+    val parsed = mapPayloads(binDf) { (id, payload) =>
+      try (Some(kernel(id, payload)): Option[T], None: Option[QuarantinedMedia])
+      catch {
+        case NonFatal(e) =>
+          (None, Some(QuarantinedMedia(id, if (payload == null) 0L else payload.length.toLong,
+            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")))
+      }
+    }.localCheckpoint()
+    (parsed.flatMap(_._1)(Encoders.product[T]),
+      parsed.flatMap(_._2)(Encoders.product[QuarantinedMedia]))
+  }
+
   /** Frame-sample a binary column holding an ALREADY-DECODED sample stream
     * (PCM audio, sensor bytes): every `stride` bytes take a `frameSize`
     * window and extract features. Runs as `mapPartitions` over the
     * executor partitions — no driver collect, batch-at-a-time. For images
     * use [[pngLumaFrames]], which really decodes first. */
-  def sampleFrames(binDf: DataFrame, stride: Int, frameSize: Int): Dataset[Frame] = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) => frames(id, payload, stride, frameSize) })
-  }
+  def sampleFrames(binDf: DataFrame, stride: Int, frameSize: Int): Dataset[Frame] =
+    flatMapPayloads(binDf)(frames(_, _, stride, frameSize))
 
   private def frames(id: Long, samples: Array[Byte], stride: Int, frameSize: Int): Iterator[Frame] =
     samples.indices.by(stride).iterator.map { off =>
@@ -157,28 +206,36 @@ object Multimodal {
       ((299 * r + 587 * g + 114 * b) / 1000).toByte
     }
 
-  /** Deterministic REAL-PNG payloads: per input row, doc-id-seeded pseudo
-    * pixels (splitmix chain — stable across runs and partitionings) are
-    * encoded through the actual PNG writer on the executors. Stands in
-    * for reading media files off object storage; everything downstream
-    * decodes genuine PNG bytes. */
-  def syntheticPng(df: DataFrame, idCol: String, width: Int, height: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val rgb = new Array[Int](width * height)
-        var h = id * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < rgb.length) {
-          h = h * 6364136223846793005L + 1442695040888963407L
-          rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
-          i += 1
-        }
-        (id, encodePng(width, height, rgb))
-      }
-    }.toDF("doc_id", "payload")
+  /** The fixture stage every `synthetic*` generator shares: per input row,
+    * `render(id)` builds the payload on the executors, emitted as
+    * (doc_id, payload) — stands in for reading media files off object
+    * storage. */
+  private[multimodal] def synthesize(df: DataFrame, idCol: String)(
+      render: Long => Array[Byte]): DataFrame =
+    df.select(col(idCol).cast("long")).as(Encoders.scalaLong)
+      .mapPartitions(_.map(id => (id, render(id))))(Encoders.product[(Long, Array[Byte])])
+      .toDF("doc_id", "payload")
+
+  /** `n` seeded pseudo-random 0xRRGGBB pixels (splitmix-seeded LCG chain —
+    * stable across runs and partitionings): the pixel source of every
+    * synthetic image, clip and scene fixture. */
+  private[graft] def seededRgb(seed: Long, n: Int): Array[Int] = {
+    val rgb = new Array[Int](n)
+    var h = seed * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
+    var i = 0
+    while (i < n) {
+      h = h * 6364136223846793005L + 1442695040888963407L
+      rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
+      i += 1
+    }
+    rgb
   }
+
+  /** Deterministic REAL-PNG payloads: per input row, doc-id-seeded pseudo
+    * pixels ([[seededRgb]]) are encoded through the actual PNG writer on
+    * the executors; everything downstream decodes genuine PNG bytes. */
+  def syntheticPng(df: DataFrame, idCol: String, width: Int, height: Int): DataFrame =
+    synthesize(df, idCol)(id => encodePng(width, height, seededRgb(id, width * height)))
 
   /** Deterministic MIXED-FORMAT crawl fixture (round 8): per input row,
     * doc-id-seeded pseudo pixels at doc-id-dependent dimensions
@@ -189,109 +246,48 @@ object Multimodal {
     * corruptness) is an exact function of doc_id, so the ingestion query
     * over this fixture is fully oracle-checkable even though JPEG pixel
     * content is lossy. */
-  def syntheticMixedFormat(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val (w, h0) = (16 + 8 * (id % 3).toInt, 16 + 4 * (id % 5).toInt)
-        val rgb = new Array[Int](w * h0)
-        var h = id * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < rgb.length) {
-          h = h * 6364136223846793005L + 1442695040888963407L
-          rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
-          i += 1
-        }
-        val full =
-          if (id % 3 == 0) encodePng(w, h0, rgb) else encodeJpeg(w, h0, rgb)
-        (id, if (id % 7 == 0) full.take(12) else full)
-      }
-    }.toDF("doc_id", "payload")
+  def syntheticMixedFormat(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val (w, h) = (16 + 8 * (id % 3).toInt, 16 + 4 * (id % 5).toInt)
+      val rgb = seededRgb(id, w * h)
+      val full = if (id % 3 == 0) encodePng(w, h, rgb) else encodeJpeg(w, h, rgb)
+      if (id % 7 == 0) full.take(12) else full
+    }
+
+  /** Per-channel pixel statistics of one really-decoded image — the
+    * kernel of [[imageFeatures]] and [[imageFeaturesQuarantined]]. */
+  private def channelStats(id: Long, payload: Array[Byte]): ImageFeatures = {
+    val img = decodePng(payload)
+    val px = rgbPixels(img)
+    var (sr, sg, sb, sy) = (0L, 0L, 0L, 0L)
+    px.foreach { p =>
+      val (r, g, b) = ((p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF)
+      sr += r; sg += g; sb += b; sy += (299 * r + 587 * g + 114 * b) / 1000
+    }
+    val n = px.length.toDouble
+    ImageFeatures(id, img.getWidth, img.getHeight, sr / n, sg / n, sb / n, sy / n)
   }
 
   /** Decode every payload (really — `ImageIO.read` per row, on the
     * executors) and extract per-channel pixel statistics. */
-  def imageFeatures(binDf: DataFrame): Dataset[ImageFeatures] = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = decodePng(payload)
-        val px = rgbPixels(img)
-        var (sr, sg, sb, sy) = (0L, 0L, 0L, 0L)
-        px.foreach { p =>
-          val (r, g, b) = ((p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF)
-          sr += r; sg += g; sb += b; sy += (299 * r + 587 * g + 114 * b) / 1000
-        }
-        val n = px.length.toDouble
-        ImageFeatures(id, img.getWidth, img.getHeight,
-          sr / n, sg / n, sb / n, sy / n)
-      })
-  }
+  def imageFeatures(binDf: DataFrame): Dataset[ImageFeatures] =
+    mapPayloads(binDf)(channelStats)
 
-  /** One quarantined media payload: the id, the byte length, and WHY the
-    * decode failed — enough to triage or re-fetch without carrying the
-    * broken bytes through the pipeline. */
-  case class QuarantinedMedia(doc_id: Long, n_bytes: Long, reason: String)
-
-  /** Crawl-scale fault isolation for the image decode path — the media
-    * twin of `IngestEgress.readCsvWithQuarantine` (R6 semantics): decode
-    * failures are routed to a quarantine frame with a reason instead of
-    * killing the job ([[imageFeatures]] is fail-fast by contract — one
-    * corrupt payload in a 100 TB crawl must not cost the whole pass).
-    * Returns (clean features, quarantined). ONE decode pass: the parsed
-    * frame is persisted once and split, exactly the CSV twin's shape —
-    * the two outputs would otherwise re-decode every payload. */
+  /** [[imageFeatures]] with decode-failure quarantine ([[quarantineSplit]]):
+    * [[imageFeatures]] is fail-fast by contract, but one corrupt payload
+    * in a 100 TB crawl must not cost the whole pass. Returns (clean
+    * features, quarantined). */
   def imageFeaturesQuarantined(binDf: DataFrame)
-      : (Dataset[ImageFeatures], Dataset[QuarantinedMedia]) = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    val parsed = binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        try {
-          val img = decodePng(payload)
-          val px = rgbPixels(img)
-          var (sr, sg, sb, sy) = (0L, 0L, 0L, 0L)
-          px.foreach { p =>
-            val (r, g, b) = ((p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF)
-            sr += r; sg += g; sb += b; sy += (299 * r + 587 * g + 114 * b) / 1000
-          }
-          val n = px.length.toDouble
-          (Some(ImageFeatures(id, img.getWidth, img.getHeight,
-            sr / n, sg / n, sb / n, sy / n)): Option[ImageFeatures],
-            None: Option[QuarantinedMedia])
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            (None: Option[ImageFeatures],
-              Some(QuarantinedMedia(id, payload.length.toLong,
-                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
-                : Option[QuarantinedMedia])
-        }
-      })
-      // localCheckpoint, not persist: one eager decode pass feeding both
-      // outputs, but the blocks free with the frame's GC — a persisted
-      // frame is pinned by the CacheManager until an explicit unpersist,
-      // which a per-micro-batch caller (StreamingDedup) never gets to do
-      .localCheckpoint()
-    (parsed.flatMap(_._1), parsed.flatMap(_._2))
-  }
+      : (Dataset[ImageFeatures], Dataset[QuarantinedMedia]) =
+    quarantineSplit(binDf)(channelStats)
 
   /** Frame-sample the DECODED luma plane of real PNG payloads: decode on
     * the executors, project to BT.601 luma, then the same framing math as
     * [[sampleFrames]] — features come from actual pixels, not container
     * bytes. */
-  def pngLumaFrames(binDf: DataFrame, stride: Int, frameSize: Int): Dataset[Frame] = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        frames(id, lumaPlane(decodePng(payload)), stride, frameSize)
-      })
-  }
+  def pngLumaFrames(binDf: DataFrame, stride: Int, frameSize: Int): Dataset[Frame] =
+    flatMapPayloads(binDf)((id, payload) =>
+      frames(id, lumaPlane(decodePng(payload)), stride, frameSize))
 
   /** 64-bit difference hash (dHash) of a decoded image — the classic
     * perceptual fingerprint for image near-dup detection: nearest-neighbor
@@ -321,45 +317,21 @@ object Multimodal {
     bits
   }
 
+  private def dHashRow(id: Long, payload: Array[Byte]): (Long, Long) =
+    (id, dHash64(decodePng(payload)))
+
   /** Per-image dHash table (doc_id, dhash) — real decode per row on the
     * executors. */
-  def imageDHashes(binDf: DataFrame): DataFrame = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => (id, dHash64(decodePng(payload))) })
-      .toDF("doc_id", "dhash")
-  }
+  def imageDHashes(binDf: DataFrame): DataFrame =
+    mapPayloads(binDf)(dHashRow).toDF("doc_id", "dhash")
 
-  /** [[imageDHashes]] with decode-failure quarantine — the fingerprint
-    * stage of dedup-on-arrival run against crawl payloads: corrupt
-    * images land in the quarantine frame (reason attached), good images
-    * hash normally, one decode pass (persist-once split, as
-    * [[imageFeaturesQuarantined]]). */
+  /** [[imageDHashes]] with decode-failure quarantine ([[quarantineSplit]])
+    * — the fingerprint stage of dedup-on-arrival run against crawl
+    * payloads. */
   def imageDHashesQuarantined(binDf: DataFrame)
       : (DataFrame, Dataset[QuarantinedMedia]) = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    val parsed = binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        try (Some((id, dHash64(decodePng(payload)))): Option[(Long, Long)],
-          None: Option[QuarantinedMedia])
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            (None: Option[(Long, Long)],
-              Some(QuarantinedMedia(id, payload.length.toLong,
-                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
-                : Option[QuarantinedMedia])
-        }
-      })
-      // localCheckpoint, not persist: one eager decode pass feeding both
-      // outputs, but the blocks free with the frame's GC — a persisted
-      // frame is pinned by the CacheManager until an explicit unpersist,
-      // which a per-micro-batch caller (StreamingDedup) never gets to do
-      .localCheckpoint()
-    (parsed.flatMap(_._1).toDF("doc_id", "dhash"), parsed.flatMap(_._2))
+    val (good, quar) = quarantineSplit(binDf)(dHashRow)
+    (good.toDF("doc_id", "dhash"), quar)
   }
 
   /** Image near-duplicate pairs: dHash + the fingerprint pigeonhole join
@@ -380,24 +352,12 @@ object Multimodal {
     * while unrelated images sit near the ~32-bit random-hash expectation.
     * The planted structure mirrors `ScaleBench.syntheticDocs`' text dups. */
   def syntheticPngNearDups(df: DataFrame, idCol: String,
-                           width: Int, height: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val rgb = new Array[Int](width * height)
-        var h = (id >> 1) * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < rgb.length) {
-          h = h * 6364136223846793005L + 1442695040888963407L
-          rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
-          i += 1
-        }
-        if ((id & 1L) == 1L) rgb(0) = 0x000000
-        (id, encodePng(width, height, rgb))
-      }
-    }.toDF("doc_id", "payload")
-  }
+                           width: Int, height: Int): DataFrame =
+    synthesize(df, idCol) { id =>
+      val rgb = seededRgb(id >> 1, width * height)
+      if ((id & 1L) == 1L) rgb(0) = 0x000000
+      encodePng(width, height, rgb)
+    }
 
   // Clip container magic: "GCLP" + u32 frame count + u32 frame lengths +
   // concatenated frame payloads (all big-endian).
@@ -476,29 +436,36 @@ object Multimodal {
   case class ShotFrame(doc_id: Long, frame_idx: Int, hamming_prev: Option[Long],
                        is_cut: Boolean)
 
-  /** Shot-boundary (scene-cut) detection over clip payloads: REALLY decode
-    * every frame, dHash it, and flag frames whose Hamming distance to the
-    * previous frame exceeds `cutThreshold` — the classic first stage of a
-    * video-curation pipeline (sample one keyframe per shot instead of
-    * every frame). Per-clip sequential work inside `mapPartitions`; clips
-    * fan out across executors, so a corpus of clips scales with the clip
-    * count. */
-  def shotBoundaries(binDf: DataFrame, cutThreshold: Int = 10): Dataset[ShotFrame] = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        val hashes = splitClipFrames(payload).map(f => dHash64(decodePng(f)))
-        hashes.indices.map { i =>
-          if (i == 0) ShotFrame(id, 0, None, is_cut = false)
-          else {
-            val d = java.lang.Long.bitCount(hashes(i) ^ hashes(i - 1)).toLong
-            ShotFrame(id, i, Some(d), d > cutThreshold)
-          }
-        }
-      })
+  /** One demuxed clip frame with its dHash, its Hamming distance to the
+    * previous frame's hash (None for frame 0) and whether that distance
+    * exceeds the cut threshold. */
+  private case class CutFrame(payload: Array[Byte], dhash: Long,
+                              hammingPrev: Option[Long], isCut: Boolean)
+
+  /** The clip kernel of [[shotBoundaries]], [[keyframes]] and
+    * [[clipShotStatsQuarantined]]: demux the clip, REALLY decode and
+    * dHash every frame, and run the cut test against the previous frame. */
+  private def clipCuts(payload: Array[Byte], cutThreshold: Int): IndexedSeq[CutFrame] = {
+    val frames = splitClipFrames(payload).toIndexedSeq
+    val hashes = frames.map(f => dHash64(decodePng(f)))
+    frames.indices.map { i =>
+      val d = if (i == 0) None
+              else Some(java.lang.Long.bitCount(hashes(i) ^ hashes(i - 1)).toLong)
+      CutFrame(frames(i), hashes(i), d, d.exists(_ > cutThreshold))
+    }
   }
+
+  /** Shot-boundary (scene-cut) detection over clip payloads: flag frames
+    * whose dHash Hamming distance to the previous frame exceeds
+    * `cutThreshold` — the classic first stage of a video-curation
+    * pipeline (sample one keyframe per shot instead of every frame).
+    * Per-clip sequential work inside `mapPartitions`; clips fan out
+    * across executors, so a corpus of clips scales with the clip count. */
+  def shotBoundaries(binDf: DataFrame, cutThreshold: Int = 10): Dataset[ShotFrame] =
+    flatMapPayloads(binDf)((id, payload) =>
+      clipCuts(payload, cutThreshold).zipWithIndex.map { case (f, i) =>
+        ShotFrame(id, i, f.hammingPrev, f.isCut)
+      })
 
   /** Deterministic clip fixture: `nFrames` real PNG frames in a
     * length-prefixed [[encodeClip]] container, with a new scene (fresh
@@ -513,40 +480,17 @@ object Multimodal {
                        width: Int, height: Int, shotLen: Int,
                        scenePool: Long = 0L): DataFrame = {
     require(nFrames >= 1 && shotLen >= 1, "need nFrames >= 1 and shotLen >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val frames = (0 until nFrames).map { f =>
-          val scene = if (scenePool > 0L) (id + f / shotLen) % scenePool
-                      else id * 1000L + f / shotLen
-          val rgb = new Array[Int](width * height)
-          var h = scene * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-          var i = 0
-          while (i < rgb.length) {
-            h = h * 6364136223846793005L + 1442695040888963407L
-            rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
-            i += 1
-          }
-          encodePng(width, height, rgb)
-        }
-        (id, encodeClip(frames))
-      }
-    }.toDF("doc_id", "payload")
+    synthesize(df, idCol) { id =>
+      encodeClip((0 until nFrames).map { f =>
+        val scene = if (scenePool > 0L) (id + f / shotLen) % scenePool
+                    else id * 1000L + f / shotLen
+        encodePng(width, height, seededRgb(scene, width * height))
+      })
+    }
   }
 
-  /** Deterministic REAL AVI/MJPEG clip fixture — [[syntheticPngClip]]'s
-    * container-upgrade twin (the declared "video stand-in" gap): the same
-    * planted scene structure (fresh scene every `shotLen` frames,
-    * bit-identical frames within a scene), but each scene is encoded ONCE
-    * as a real JPEG and the frames ship inside a spec-conformant
-    * [[AviMjpeg]] RIFF container. Downstream the full real-media path
-    * runs: RIFF chunk-walk demux → ImageIO sniffing JPEG decode → dHash.
-    * Identical within-scene frame BYTES make within-shot dHash distance
-    * exactly 0 despite JPEG's lossiness, so the planted cut positions
-    * survive the lossy codec — the property q_mm16's oracle leans on. */
   /** The planted scene frames both synthetic clip fixtures share: a fresh
-    * seeded-LCG JPEG every `shotLen` frames, bit-identical bytes within a
+    * seeded JPEG every `shotLen` frames, bit-identical bytes within a
     * scene (so within-shot dHash distance is exactly 0 despite JPEG's
     * lossiness — the property the q_mm16/q_mm17 oracles lean on). */
   private def sceneJpegFrames(id: Long, nFrames: Int, width: Int, height: Int,
@@ -554,32 +498,23 @@ object Multimodal {
     val sceneJpeg = scala.collection.mutable.LongMap.empty[Array[Byte]]
     (0 until nFrames).map { f =>
       val scene = id * 1000L + f / shotLen
-      sceneJpeg.getOrElseUpdate(scene, {
-        val rgb = new Array[Int](width * height)
-        var h = scene * 0x9E3779B97F4A7C15L + 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < rgb.length) {
-          h = h * 6364136223846793005L + 1442695040888963407L
-          rgb(i) = ((h >>> 40) & 0xFFFFFF).toInt
-          i += 1
-        }
-        encodeJpeg(width, height, rgb)
-      })
+      sceneJpeg.getOrElseUpdate(scene,
+        encodeJpeg(width, height, seededRgb(scene, width * height)))
     }
   }
 
+  /** Deterministic REAL AVI/MJPEG clip fixture — [[syntheticPngClip]]'s
+    * container-upgrade twin (the declared "video stand-in" gap): the same
+    * planted scene structure ([[sceneJpegFrames]]) ships inside a
+    * spec-conformant [[AviMjpeg]] RIFF container. Downstream the full
+    * real-media path runs: RIFF chunk-walk demux → ImageIO sniffing JPEG
+    * decode → dHash. */
   def syntheticAviClip(df: DataFrame, idCol: String, nFrames: Int,
                        width: Int, height: Int, shotLen: Int,
                        fps: Int = 25): DataFrame = {
     require(nFrames >= 1 && shotLen >= 1, "need nFrames >= 1 and shotLen >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        (id, AviMjpeg.encode(
-          sceneJpegFrames(id, nFrames, width, height, shotLen), width, height, fps))
-      }
-    }.toDF("doc_id", "payload")
+    synthesize(df, idCol)(id => AviMjpeg.encode(
+      sceneJpegFrames(id, nFrames, width, height, shotLen), width, height, fps))
   }
 
   /** Deterministic REAL MP4 clip fixture (round 10) — [[syntheticAviClip]]
@@ -592,52 +527,25 @@ object Multimodal {
                        width: Int, height: Int, shotLen: Int,
                        fps: Int = 25): DataFrame = {
     require(nFrames >= 1 && shotLen >= 1, "need nFrames >= 1 and shotLen >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        (id, Mp4Mjpeg.encode(
-          sceneJpegFrames(id, nFrames, width, height, shotLen), width, height, fps))
-      }
-    }.toDF("doc_id", "payload")
+    synthesize(df, idCol)(id => Mp4Mjpeg.encode(
+      sceneJpegFrames(id, nFrames, width, height, shotLen), width, height, fps))
   }
 
   /** Per-clip structural rollup of [[shotBoundaries]]'s rows. */
   case class ClipShotStats(doc_id: Long, n_frames: Long, n_shots: Long)
 
   /** The clip pipeline's quarantine entry: demux + decode + cut-count per
-    * clip with per-CLIP fault isolation — a clip whose container grammar
-    * or any frame payload fails to parse quarantines whole (with the
-    * reason), exactly like [[imageFeaturesQuarantined]] does per image.
-    * Good clips emit (n_frames, n_shots = 1 + cuts past `cutThreshold`).
-    * Scale shape: clips fan out across executors; per-clip work is the
-    * codec volume. */
+    * clip with per-CLIP fault isolation ([[quarantineSplit]]) — a clip
+    * whose container grammar or any frame payload fails to parse
+    * quarantines whole, with the reason. Good clips emit (n_frames,
+    * n_shots = 1 + cuts past `cutThreshold`). Scale shape: clips fan out
+    * across executors; per-clip work is the codec volume. */
   def clipShotStatsQuarantined(binDf: DataFrame, cutThreshold: Int = 10)
-      : (Dataset[ClipShotStats], Dataset[QuarantinedMedia]) = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    val parsed = binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        try {
-          val hashes = splitClipFrames(payload).map(f => dHash64(decodePng(f)))
-          val cuts = hashes.indices.count(i => i > 0 &&
-            java.lang.Long.bitCount(hashes(i) ^ hashes(i - 1)) > cutThreshold)
-          (Some(ClipShotStats(id, hashes.length.toLong, cuts + 1L))
-            : Option[ClipShotStats], None: Option[QuarantinedMedia])
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            (None: Option[ClipShotStats],
-              Some(QuarantinedMedia(id, payload.length.toLong,
-                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
-                : Option[QuarantinedMedia])
-        }
-      })
-      // localCheckpoint: one eager demux+decode pass feeds both outputs
-      // (see imageFeaturesQuarantined for the persist-vs-checkpoint note)
-      .localCheckpoint()
-    (parsed.flatMap(_._1), parsed.flatMap(_._2))
-  }
+      : (Dataset[ClipShotStats], Dataset[QuarantinedMedia]) =
+    quarantineSplit(binDf) { (id, payload) =>
+      val cuts = clipCuts(payload, cutThreshold)
+      ClipShotStats(id, cuts.length.toLong, cuts.count(_.isCut) + 1L)
+    }
 
   /** One selected keyframe: the clip, the shot's ordinal within it, the
     * frame index the keyframe came from, the frame payload, and the
@@ -656,23 +564,11 @@ object Multimodal {
     * [[imageNearDupPairs]] (cross-clip duplicate-scene detection, q_pipe4)
     * or any other image operator directly. Per-clip sequential work inside
     * `mapPartitions`; clips fan out across executors. */
-  def keyframes(binDf: DataFrame, cutThreshold: Int = 10): Dataset[Keyframe] = {
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, payload) =>
-        val frames = splitClipFrames(payload)
-        val hashes = frames.map(f => dHash64(decodePng(f)))
-        var shot = -1
-        frames.indices.flatMap { i =>
-          val isCut = i == 0 ||
-            java.lang.Long.bitCount(hashes(i) ^ hashes(i - 1)) > cutThreshold
-          if (isCut) { shot += 1; Some(Keyframe(id, shot, i, frames(i), hashes(i))) }
-          else None
-        }
-      })
-  }
+  def keyframes(binDf: DataFrame, cutThreshold: Int = 10): Dataset[Keyframe] =
+    flatMapPayloads(binDf)((id, payload) =>
+      clipCuts(payload, cutThreshold).zipWithIndex
+        .filter { case (f, i) => i == 0 || f.isCut }
+        .zipWithIndex.map { case ((f, i), shot) => Keyframe(id, shot, i, f.payload, f.dhash) })
 
   /** Clip-level near-duplicate pairs via keyframe fingerprints — the
     * stage after [[keyframes]] in the video-dedup pipeline: two clips are
@@ -726,25 +622,20 @@ object Multimodal {
     * binary out, per-partition batches). */
   def resizePng(binDf: DataFrame, factor: Int): DataFrame = {
     require(factor >= 1, s"resize factor must be >= 1, got $factor")
-    val spark = binDf.sparkSession
-    import spark.implicits._
-    binDf.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img = decodePng(payload)
-        val (w, h) = (img.getWidth, img.getHeight)
-        val (ow, oh) = ((w + factor - 1) / factor, (h + factor - 1) / factor)
-        val in = rgbPixels(img)
-        val out = new Array[Int](ow * oh)
-        var y = 0
-        while (y < oh) {
-          var x = 0
-          while (x < ow) { out(y * ow + x) = in(y * factor * w + x * factor) & 0xFFFFFF; x += 1 }
-          y += 1
-        }
-        val resized = encodePng(ow, oh, out)
-        (id, ow, oh, resized, resized.length)
-      })
-      .toDF("doc_id", "out_width", "out_height", "resized", "n_bytes_resized")
+    mapPayloads(binDf) { (id, payload) =>
+      val img = decodePng(payload)
+      val (w, h) = (img.getWidth, img.getHeight)
+      val (ow, oh) = ((w + factor - 1) / factor, (h + factor - 1) / factor)
+      val in = rgbPixels(img)
+      val out = new Array[Int](ow * oh)
+      var y = 0
+      while (y < oh) {
+        var x = 0
+        while (x < ow) { out(y * ow + x) = in(y * factor * w + x * factor) & 0xFFFFFF; x += 1 }
+        y += 1
+      }
+      val resized = encodePng(ow, oh, out)
+      (id, ow, oh, resized, resized.length)
+    }.toDF("doc_id", "out_width", "out_height", "resized", "n_bytes_resized")
   }
 }

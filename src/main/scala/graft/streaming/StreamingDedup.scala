@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.multimodal.{AudioWav, Multimodal}
+import graft.multimodal.Multimodal.QuarantinedMedia
 import graft.operators.NearDup
 
 /** Dedup-on-arrival: the streaming composition of the incremental LSH
@@ -43,21 +45,9 @@ object StreamingDedup {
   def processImageBatch(newMedia: DataFrame, hashStoreDir: String,
                         batchId: Long,
                         maxHamming: Int = 3,
-                        quarantineDir: Option[String] = None): DataFrame = {
-    import graft.multimodal.Multimodal
-    // With a quarantine sink, a corrupt payload costs ONE quarantine row,
-    // not the micro-batch (the crawl-arrival posture); without one the
-    // batch stays fail-fast by contract.
-    val hashed = quarantineDir match {
-      case Some(qdir) =>
-        val (good, quar) = Multimodal.imageDHashesQuarantined(newMedia)
-        BatchStore.write(quar.toDF(), qdir, batchId)
-        good
-      case None => Multimodal.imageDHashes(newMedia)
-    }
-    BatchStore.step(hashed, hashStoreDir, batchId)(
-      NearDup.incrementalFingerprintPairs(_, _, "doc_id", "dhash", maxHamming))
-  }
+                        quarantineDir: Option[String] = None): DataFrame =
+    fingerprintStep(newMedia, hashStoreDir, batchId, maxHamming, quarantineDir, "dhash")(
+      Multimodal.imageDHashesQuarantined, Multimodal.imageDHashes)
 
   /** Audio twin of [[processImageBatch]] (round 7): one micro-batch of WAV
     * payloads is fingerprinted (`AudioWav.audioHash64`, real container
@@ -65,32 +55,39 @@ object StreamingDedup {
     * persisted hash store plus itself
     * (`NearDup.incrementalFingerprintPairs`), and written to the store.
     * Stored audio is NEVER rescanned (only its 8-byte hashes are read
-    * back). */
+    * back). `spectral = true` runs the round-9 constant-Q fingerprint
+    * instead of the Haar time hash, stored under the same "ahash" column
+    * (one store dir holds ONE fingerprint kind; the kinds collide
+    * numerically, so mixing dirs is the caller's bug, the same
+    * homogeneity contract as the band/semantic stores). */
   def processAudioBatch(newMedia: DataFrame, hashStoreDir: String,
                         batchId: Long,
                         maxHamming: Int = 3,
                         quarantineDir: Option[String] = None,
-                        spectral: Boolean = false): DataFrame = {
-    import graft.multimodal.AudioWav
-    // spectral = true runs the round-9 constant-Q fingerprint instead of
-    // the Haar time hash — the store then holds cqhash values under the
-    // same "ahash" column (one store dir holds ONE fingerprint kind; the
-    // kinds collide numerically, so mixing dirs is the caller's bug, the
-    // same homogeneity contract as the band/semantic stores).
-    val hashFn: Array[Short] => Long =
-      if (spectral) AudioWav.constantQHash64 else AudioWav.audioHash64
+                        spectral: Boolean = false): DataFrame =
+    fingerprintStep(newMedia, hashStoreDir, batchId, maxHamming, quarantineDir, "ahash")(
+      AudioWav.audioHashesQuarantined(_,
+        if (spectral) AudioWav.constantQHash64 else AudioWav.audioHash64),
+      if (spectral) AudioWav.constantQHashes else AudioWav.audioHashes)
+
+  /** The fingerprint step both media batches run: hash the batch — with a
+    * quarantine sink, a corrupt payload costs ONE quarantine row, not the
+    * micro-batch (the crawl-arrival posture); without one the batch stays
+    * fail-fast by contract — name the hash column `hashCol`, then probe
+    * and store it through [[BatchStore.step]]. */
+  private def fingerprintStep(newMedia: DataFrame, hashStoreDir: String, batchId: Long,
+                              maxHamming: Int, quarantineDir: Option[String], hashCol: String)(
+      quarantined: DataFrame => (DataFrame, Dataset[QuarantinedMedia]),
+      failFast: DataFrame => DataFrame): DataFrame = {
     val hashed = quarantineDir match {
       case Some(qdir) =>
-        val (good, quar) = AudioWav.audioHashesQuarantined(newMedia, hashFn)
+        val (good, quar) = quarantined(newMedia)
         BatchStore.write(quar.toDF(), qdir, batchId)
         good
-      case None =>
-        if (spectral) AudioWav.constantQHashes(newMedia)
-          .withColumnRenamed("cqhash", "ahash")
-        else AudioWav.audioHashes(newMedia)
+      case None => failFast(newMedia)
     }
-    BatchStore.step(hashed, hashStoreDir, batchId)(
-      NearDup.incrementalFingerprintPairs(_, _, "doc_id", "ahash", maxHamming))
+    BatchStore.step(hashed.toDF("doc_id", hashCol), hashStoreDir, batchId)(
+      NearDup.incrementalFingerprintPairs(_, _, "doc_id", hashCol, maxHamming))
   }
 
   /** Drain an incoming audio directory through [[processAudioBatch]] —

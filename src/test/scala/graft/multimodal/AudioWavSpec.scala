@@ -68,16 +68,23 @@ class AudioWavSpec extends SparkSpec {
     val good = AudioWav.syntheticWav(spark.range(8).toDF("doc_id"), "doc_id", nSamples = 400)
     val mixed = good.withColumn("payload",
       when(col("doc_id") === 1, expr("substring(payload, 1, 30)"))
+        .when(col("doc_id") === 3, lit(null).cast("binary"))
         .when(col("doc_id") === 4, lit("not audio at all".getBytes("UTF-8")))
         .otherwise(col("payload")))
+    val corrupt = Set(1L, 3L, 4L)
+    val clean = good.where(!col("doc_id").isin(corrupt.toSeq: _*))
     val (feats, quar) = AudioWav.audioFeaturesQuarantined(mixed)
     val q = quar.collect().map(m => m.doc_id -> m).toMap
-    assert(q.keySet === Set(1L, 4L), s"exactly the corrupt rows quarantined: ${q.keySet}")
+    assert(q.keySet === corrupt, s"exactly the corrupt rows quarantined: ${q.keySet}")
     assert(q.values.forall(_.reason.nonEmpty))
-    val cleanTruth = AudioWav.audioFeatures(
-        good.where(!col("doc_id").isin(1L, 4L))).collect().toSet
-    assert(feats.collect().toSet === cleanTruth,
+    assert(q(3L).n_bytes === 0L, "a null payload quarantines with n_bytes = 0")
+    assert(feats.collect().toSet === AudioWav.audioFeatures(clean).collect().toSet,
       "quarantine path must not perturb good rows")
+    // the fingerprint operator runs the same split
+    val (hashes, hquar) = AudioWav.audioHashesQuarantined(mixed)
+    assert(hquar.collect().map(m => m.doc_id -> m.n_bytes).toMap ===
+      q.map { case (id, m) => id -> m.n_bytes })
+    assert(hashes.collect().toSet === AudioWav.audioHashes(clean).collect().toSet)
   }
 
   test("downsample2x: box-filter pair average in truncating integer math, re-encoded at rate/2") {

@@ -73,13 +73,16 @@ class AviMjpegSpec extends SparkSpec {
       assert(nf === 6L, "every movi frame demuxed")
       assert(ns === 3L, "planted 2-frame scenes -> exactly 3 shots despite lossy JPEG")
     }
-    // and the truncated variant quarantines whole
+    // and the truncated (or null) variant quarantines whole
     val broken = clips.withColumn("payload",
       when(col("doc_id") % 7 === 0, expr("substring(payload, 1, 40)"))
+        .when(col("doc_id") === 3, lit(null).cast("binary"))
         .otherwise(col("payload")))
     val (okStats, quar2) = Multimodal.clipShotStatsQuarantined(broken)
-    assert(quar2.collect().map(_.doc_id).toSet === Set(0L, 7L, 14L))
-    assert(okStats.count() === 17L)
+    val q2 = quar2.collect().map(m => m.doc_id -> m.n_bytes).toMap
+    assert(q2.keySet === Set(0L, 3L, 7L, 14L))
+    assert(q2(3L) === 0L, "a null payload quarantines with n_bytes = 0")
+    assert(okStats.count() === 16L)
   }
 
   test("within-scene dHash distance is exactly zero through the lossy codec") {

@@ -99,23 +99,30 @@ class MultimodalSpec extends SparkSpec {
   test("imageFeaturesQuarantined isolates corrupt payloads; good rows identical to the fail-fast path") {
     val good = Multimodal.syntheticPng(
       spark.range(10).toDF("doc_id"), "doc_id", width = 16, height = 16)
-    // plant three corruption shapes among the good payloads
+    // plant four corruption shapes among the good payloads
     import org.apache.spark.sql.functions.{expr, lit, when}
     val mixed = good.withColumn("payload",
       when($"doc_id" === 2, expr("substring(payload, 1, 20)"))
+        .when($"doc_id" === 3, lit(null).cast("binary"))
         .when($"doc_id" === 5, lit("not a png".getBytes("UTF-8")))
         .when($"doc_id" === 7, lit(Array.empty[Byte]))
         .otherwise($"payload"))
+    val corrupt = Set(2L, 3L, 5L, 7L)
+    val clean = good.where(!$"doc_id".isin(corrupt.toSeq: _*))
     val (feats, quar) = Multimodal.imageFeaturesQuarantined(mixed)
     val q = quar.collect().map(m => m.doc_id -> m).toMap
-    assert(q.keySet === Set(2L, 5L, 7L), s"exactly the corrupt rows quarantined: ${q.keySet}")
+    assert(q.keySet === corrupt, s"exactly the corrupt rows quarantined: ${q.keySet}")
     assert(q.values.forall(_.reason.nonEmpty))
     assert(q(5L).n_bytes === 9L)
+    assert(q(3L).n_bytes === 0L, "a null payload quarantines with n_bytes = 0")
     // good rows: bit-identical to the fail-fast operator over the same media
-    val cleanTruth = Multimodal.imageFeatures(
-        good.where(!$"doc_id".isin(2L, 5L, 7L))).collect().toSet
-    assert(feats.collect().toSet === cleanTruth,
+    assert(feats.collect().toSet === Multimodal.imageFeatures(clean).collect().toSet,
       "quarantine path must not perturb good rows")
+    // the dHash operator runs the same split
+    val (hashes, hquar) = Multimodal.imageDHashesQuarantined(mixed)
+    assert(hquar.collect().map(m => m.doc_id -> m.n_bytes).toMap ===
+      q.map { case (id, m) => id -> m.n_bytes })
+    assert(hashes.collect().toSet === Multimodal.imageDHashes(clean).collect().toSet)
   }
 
   test("dHash64: gradient bits from decoded luma, invariant to re-encoding, edit-sensitive") {

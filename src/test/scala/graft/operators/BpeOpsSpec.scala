@@ -49,36 +49,20 @@ class BpeOpsSpec extends SparkSpec {
   }
 
   test("driver fold learns >=10 merges per Spark job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     // one word of 64 distinct tokens()-surviving chars, freq 3: every
     // adjacent pair counts 3, so exactly 63 merges exist before the word
     // is a single symbol
     val word = ('a' to 'z').mkString + ('0' to '9').mkString + "!#$%&()*+,-./:;<=>?@[]^_{|}~"
     assert(word.length === 64 && word.distinct.length === 64)
     val df = Seq((1L, Seq.fill(3)(word).mkString(" "))).toDF("doc_id", "text")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (merges, _) = BpeOps.learnMerges(df, col("text"), 63)
-      assert(merges.size === 63)
-      // listener delivery is async; wait for the count to go stable
-      var last = -1
-      var stable = 0
-      while (stable < 5) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      // the fold itself is 2 queries (size probe + collect); AQE splits
-      // each into per-stage jobs, but the count stays CONSTANT in
-      // numMerges — the whole point vs one-job-per-merge
-      assert(last <= 6, s"driver fold job count must not scale with merges, saw $last")
-      assert(merges.size.toDouble / last >= 10.0,
-        s"expected >=10 merges learned per Spark job, got ${merges.size}/$last")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (jobs, (merges, _)) = countingJobs(BpeOps.learnMerges(df, col("text"), 63))
+    assert(merges.size === 63)
+    // the fold itself is 2 queries (size probe + collect); AQE splits
+    // each into per-stage jobs, but the count stays CONSTANT in
+    // numMerges — the whole point vs one-job-per-merge
+    assert(jobs <= 6, s"driver fold job count must not scale with merges, saw $jobs")
+    assert(merges.size.toDouble / jobs >= 10.0,
+      s"expected >=10 merges learned per Spark job, got ${merges.size}/$jobs")
   }
 
   test("batched distributed fallback: >=10 merges per Spark job on an over-budget vocab, identical table") {
@@ -98,26 +82,11 @@ class BpeOpsSpec extends SparkSpec {
       .mkString(" ")
     val df = Seq((1L, text)).toDF("doc_id", "text")
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val slow = try {
-      val (m, _) = BpeOps.learnMerges(df, col("text"), 120, driverFoldMaxBytes = 0L)
-      var last = -1
-      var stable = 0
-      while (stable < 5) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      assert(m.size === 120, "all 120 merges learned")
-      assert(m.size.toDouble / last >= 10.0,
-        s"expected >=10 merges per Spark job from batching, got ${m.size}/$last")
-      m
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (jobs, (slow, _)) = countingJobs(
+      BpeOps.learnMerges(df, col("text"), 120, driverFoldMaxBytes = 0L))
+    assert(slow.size === 120, "all 120 merges learned")
+    assert(slow.size.toDouble / jobs >= 10.0,
+      s"expected >=10 merges per Spark job from batching, got ${slow.size}/$jobs")
     // bit-identical to the driver fold over the same corpus
     val (fast, _) = BpeOps.learnMerges(df, col("text"), 120)
     assert(slow === fast)

@@ -32,5 +32,9 @@ python3 tools/fragility.py "$SF" "$OUT" | tail -12 \
 echo "== 7/7 bench (sf0.1)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
   | grep -oE '\{"metric".*' | tee "$OUT/bench.json"
+# a query that throws lands in the Bench line's "failed" list, not in the
+# exit code — read the list back so a throwing query fails the gate
+FAILED="$(python3 -c 'import json, sys; print(" ".join(json.load(open(sys.argv[1]))["failed"]))' "$OUT/bench.json")"
+[ -z "$FAILED" ] || { echo "BENCH QUERY FAILURES: $FAILED"; exit 1; }
 
 echo "CI GREEN — artifacts in $OUT"
