@@ -52,13 +52,6 @@ object GraphOps {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
     val e0 = checkedEdges(edges, srcCol, dstCol).localCheckpoint()
-    val verts = e0.select(col("__src").as("vertex"))
-      .union(e0.select(col("__dst").as("vertex")))
-      .distinct().localCheckpoint()
-    // the vertex-table size decides the per-iteration join strategy (a
-    // checkpointed RDD reports no stats, so the planner can never pick
-    // the broadcast itself)
-    val nV = verts.count()
     val base = (100L - dampingPct) * 10000L
     // SIZE-ADAPTIVE LOCAL EVALUATION (the connectedComponents rationale
     // applied to the rank loop): when the WHOLE edge list fits the
@@ -72,8 +65,17 @@ object GraphOps {
     SizeAdaptive.localLongPairs(e0)
       .map(localRank(e0.sparkSession, _, iterations, dampingPct,
         Set.empty, _ => base, _ => 1000000L))
-      .getOrElse(rankLoop(e0, verts.withColumn("__base", lit(base)),
-        lit(1000000L), nV, iterations, dampingPct))
+      .getOrElse {
+        // only the distributed loop reads the vertex table; its size
+        // decides the per-iteration join strategy (a checkpointed RDD
+        // reports no stats, so the planner can never pick the broadcast
+        // itself)
+        val verts = e0.select(col("__src").as("vertex"))
+          .union(e0.select(col("__dst").as("vertex")))
+          .distinct().localCheckpoint()
+        rankLoop(e0, verts.withColumn("__base", lit(base)),
+          lit(1000000L), verts.count(), iterations, dampingPct)
+      }
   }
 
   /** The distributed iteration behind [[pageRank]] and
@@ -423,9 +425,6 @@ object GraphOps {
     val nbrs = canon.select(col("__lo").as("vertex"), col("__hi").as("__nbr"))
       .union(canon.select(col("__hi").as("vertex"), col("__lo").as("__nbr")))
       .localCheckpoint()
-    var labels = nbrs.select(col("vertex")).distinct()
-      .select(col("vertex"), col("vertex").as("label")).localCheckpoint()
-    val nV = labels.count() // size-adaptive join pick
     // size-adaptive local evaluation (see [[pageRank]]): the synchronous
     // update rule over a collected adjacency is deterministic (argmax =
     // max over (count, −label), exactly the aggregation below)
@@ -461,6 +460,9 @@ object GraphOps {
       }
       verts.map(v => (v, lab.get(v))).toSeq.toDF("vertex", "label")
     }.getOrElse {
+      var labels = nbrs.select(col("vertex")).distinct()
+        .select(col("vertex"), col("vertex").as("label")).localCheckpoint()
+      val nV = labels.count() // size-adaptive join pick
       for (_ <- 1 to rounds) {
         // arg-max as a second AGGREGATION, not a window: max of the struct
         // (count, -label) is exactly (count desc, label asc) — two partial-

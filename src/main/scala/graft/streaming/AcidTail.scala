@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.AcidTable
@@ -150,10 +149,7 @@ object AcidTail {
                             v: Long, kind: String): Option[Long] = {
     val f = new Path(checkpointDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$checkpointDir/.v$v-${java.util.UUID.randomUUID()}.tmp")
-    scala.util.Using.resource(f.create(tmp, true)) { o =>
-      o.write(s"$v\n".getBytes(StandardCharsets.UTF_8))
-    }
+    val tmp = AcidTable.writeTmp(f, checkpointDir, s"v$v", s"$v\n")
     if (graft.util.AtomicPublish(f, spark.sparkContext.hadoopConfiguration,
         tmp, markerPath(checkpointDir, v, kind))) Some(v)
     else None // concurrent tailer won the marker

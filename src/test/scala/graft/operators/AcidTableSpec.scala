@@ -577,5 +577,12 @@ class AcidTableSpec extends SparkSpec {
     // accepted ∪ quarantined == input, nothing silently dropped
     assert(AcidTable.read(spark, root).count() +
       AcidTable.read(spark, s"$root/_quarantine").count() === 4L)
+    // an all-rejected batch publishes no version (and no empty data
+    // file); the current version comes back
+    val (v2, rejected2, qv2) = AcidTable.commitAppendExpect(kv(2L -> -1L),
+      root, Seq("positive_v" -> (col("v") > 0)), onViolation = "quarantine")
+    assert(AcidTable.versions(spark, root) === Seq(v),
+      "an all-rejected append must not publish an empty version")
+    assert(v2 === v && rejected2 === 1L && qv2 === Some(2L))
   }
 }

@@ -80,6 +80,58 @@ class AcidCdcSpec extends SparkSpec {
     assert(AcidTable.changeFeedOf(spark, old, 2L).isEmpty)
   }
 
+  test("every producer's change feed equals the snapshot diff against " +
+      "its predecessor, over a seeded random chain") {
+    val root = fresh("law")
+    val rnd = new scala.util.Random(8)
+    AcidTable.enableCdc(spark, root)
+    AcidTable.commitAppend(kv((1L to 12L).map(i => i -> i * 10): _*), root,
+      statsCols = Seq("k"))
+    // every written value is fresh, so an update always changes `v`
+    var next = 1000L
+    def updates() = kv(rnd.shuffle((1L to 20L).toList)
+      .take(1 + rnd.nextInt(4)).map { k => next += 1; k -> next }: _*)
+    def lo() = 1L + rnd.nextInt(20)
+    val producers = Seq("mergeCow", "mergeMor", "deleteCow", "deleteMor",
+      "compact", "compactSmall", "compactDvs")
+    val chain = rnd.shuffle(producers ++
+      Seq.fill(8)(producers(rnd.nextInt(producers.length))))
+    chain.foreach {
+      case "mergeCow" => AcidTable.mergeCow(updates(), root, "k", Seq("k"))
+      case "mergeMor" => AcidTable.mergeMor(updates(), root, "k", Seq("k"))
+      case "deleteCow" =>
+        val l = lo(); AcidTable.deleteCow(spark, root, "k", l, l + 2, Seq("k"))
+      case "deleteMor" =>
+        val l = lo(); AcidTable.deleteMor(spark, root, "k", l, l + 2)
+      case "compact" => AcidTable.compact(spark, root, 2, Seq("k"))
+      case "compactSmall" =>
+        AcidTable.compactSmall(spark, root, 1L << 30, 2, Seq("k"))
+      case "compactDvs" => AcidTable.compactDvs(spark, root, Seq("k"))
+    }
+    val vs = AcidTable.versions(spark, root)
+    assert(vs.length > producers.length, s"chain $chain published $vs")
+    vs.sliding(2).foreach { case Seq(prev, v) =>
+      // SnapshotDiff vocabulary mapped onto the CDF one
+      val diff = AcidTable.changesBetween(spark, root, prev, v, Seq("k"),
+          Seq("v"))._1.collect().toSeq.flatMap { r =>
+        val k = r.getLong(r.fieldIndex("k"))
+        def old = r.getLong(r.fieldIndex("old_v"))
+        def neu = r.getLong(r.fieldIndex("new_v"))
+        r.getString(r.fieldIndex("change_type")) match {
+          case "added" => Seq((k, neu, "insert"))
+          case "removed" => Seq((k, old, "delete"))
+          case "changed" =>
+            Seq((k, old, "update_preimage"), (k, neu, "update_postimage"))
+        }
+      }.sorted
+      val feedRows = AcidTable.changeFeedOf(spark, root, v).get
+        .select("k", "v", "_change_type").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sorted
+      assert(feedRows === diff,
+        s"v$v (${AcidTable.actionOf(spark, root, v)}) in chain $chain")
+    }
+  }
+
   private def drainCdc(root: String, ck: String)
       : Seq[(Long, Set[(Long, Long, String)])] = {
     val got = new java.util.concurrent.ConcurrentLinkedQueue[

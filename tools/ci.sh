@@ -21,8 +21,10 @@ echo "== 4/7 verify dump @ $SF"
 sbt -batch "runMain graft.Verify $SF $OUT"
 
 echo "== 5/7 DuckDB oracle compare"
-python3 tools/check.py "$SF" "$OUT" | tail -5
-python3 tools/check.py "$SF" "$OUT" | grep -q " 0 failing" \
+# one compare (~14 min, ~11 GB RSS over the full dump): keep its output
+# and grep the kept file for the summary
+python3 tools/check.py "$SF" "$OUT" | tee "$OUT/check.txt" | tail -5
+grep -q " 0 failing" "$OUT/check.txt" \
   || { echo "ORACLE FAILURES"; exit 1; }
 
 echo "== 6/7 oracle fragility audit (r7 cross-engine-round failure class)"
