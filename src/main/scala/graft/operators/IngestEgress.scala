@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.util.ForklessLocalFs
 
 /** Faithful-core ingest/egress (SURVEY.md §2.A R1/R10/R13, §2.B Q-SCAN3 /
   * Q-SINK1): declared-schema CSV with dirty-typed casts, and the
@@ -54,12 +55,31 @@ object IngestEgress {
 
   /** Hive-partitioned Snappy Parquet sink — the reference's physical design
     * (`...py:53-63`, `README.md:9,63`) minus its per-(company,year)
-    * 250-row files: we repartition by the partition columns first so each
-    * partition directory gets one well-sized file, and rely on the commit
-    * protocol instead of the reference's manual temp-dir cleanup (R12). */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.repartition(partitionCols.map(col): _*)
+    * 250-row files: we hash-repartition by the partition columns first so
+    * each partition directory lands in one task and gets one well-sized
+    * file, and rely on the commit protocol instead of the reference's
+    * manual temp-dir cleanup (R12).
+    *
+    * The repartition count is explicit (the session's shuffle partitions,
+    * i.e. its cores): AQE coalesces an unsized repartition of a few
+    * thousand rows into ONE partition, and one task then writes every
+    * partition file in series (the trap [[compactPartitioned]] notes too).
+    * A sized repartition is never coalesced, so the files spread over the
+    * cores. `dynamic` (the daily merge) replaces only the partitions
+    * written; otherwise the whole `path` is overwritten.
+    *
+    * A local `path` is written through [[graft.util.ForklessLocalFileSystem]]:
+    * Hadoop's default local file system starts a `chmod` process for each
+    * directory and file the write creates, four per partition file. With
+    * the files spread over every core those spawns ran concurrently, took
+    * most of the write stage's time and made it follow the host's load. */
+  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
+                       dynamic: Boolean = false): Unit =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        partitionCols.map(col): _*)
       .write.mode("overwrite")
+      .options(ForklessLocalFs.writeOptions)
+      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
       .partitionBy(partitionCols: _*)
       .option("compression", "snappy")
       .parquet(path)

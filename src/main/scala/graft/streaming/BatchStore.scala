@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The per-batch incremental store every streaming operator here keeps:
   * a parquet directory with one `batch=<id>` subdirectory per
@@ -31,7 +31,9 @@ object BatchStore {
   /** One micro-batch against the store at `dir`: materializes `fresh`
     * (the probe and the write both read it), reads every other batch's
     * rows projected to `fresh.columns` (zero rows of `fresh`'s schema when
-    * the store does not exist yet), runs `probe(fresh, stored)`, then
+    * the store does not exist yet) with the store's known schema —
+    * `fresh`'s columns plus the `batch` partition column, so no step runs
+    * a schema-inference job — runs `probe(fresh, stored)`, then
     * writes `fresh` as batch `batchId`. The probe's result is materialized
     * before the write: on replay the overwrite replaces files its lazy
     * plan would still read. */
@@ -41,7 +43,8 @@ object BatchStore {
     val batch = fresh.localCheckpoint()
     val stored =
       if (exists(spark, dir))
-        spark.read.parquet(dir).where(!(col("batch") <=> lit(batchId)))
+        spark.read.schema(fresh.schema.add("batch", LongType)).parquet(dir)
+          .where(!(col("batch") <=> lit(batchId)))
           .select(batch.columns.map(col): _*)
       else batch.limit(0)
     val out = probe(batch, stored).localCheckpoint()

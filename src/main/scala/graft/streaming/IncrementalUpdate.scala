@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.operators.IngestEgress
 
 /** The reference's own stated future: "daily stock data updates"
   * (`README.md:49`). New files of price rows land in an incoming
@@ -13,21 +16,27 @@ import org.apache.spark.sql.types.StructType
   * replaces the old row instead of duplicating it.
   *
   * Effective exactly-once WITHOUT a transactional table format: the
-  * foreachBatch body is IDEMPOTENT. Per batch it (1) restricts the store
-  * read to the partitions the batch touches, (2) upserts new over old
-  * keyed by `keyCols`, (3) rewrites only those partitions via dynamic
-  * partition overwrite. Replaying a batch (failure after a complete or
-  * partial write, before the checkpoint advanced) re-derives byte-identical
+  * foreachBatch body is IDEMPOTENT. Per batch it (1) reads only the
+  * partitions the batch touches, by path, (2) upserts new over old keyed
+  * by `keyCols`, (3) rewrites only those partitions via dynamic partition
+  * overwrite. Replaying a batch (failure after a complete or partial
+  * write, before the checkpoint advanced) re-derives byte-identical
   * partition contents — incoming rows upsert over their own previous merge
   * — so at-least-once delivery converges to exactly-once state. (Contrast
   * a bare `append` in foreachBatch, which duplicates rows on replay; the
   * production-grade alternative is a format with a commit log — see
   * [[StreamOps.sinkPartitioned]] for the append-shaped native file sink.)
   *
+  * The rewrite reads the partitions it replaces, with no lineage break:
+  * dynamic partition overwrite stages its files and deletes and replaces
+  * the target partitions only at job commit, after every task has read
+  * its input.
+  *
   * Scale shape: a daily update touches ~one (company, current-year)
   * partition per symbol, so the per-batch read+rewrite is bounded by the
-  * update's partition footprint, never the store size. The shuffle is one
-  * hash partition on `keyCols` for the upsert window.
+  * update's partition footprint, never the store size. The shuffles are
+  * one hash partition on `keyCols` for the upsert window and the sized
+  * write repartition of [[IngestEgress.writePartitioned]].
   */
 object IncrementalUpdate {
 
@@ -42,14 +51,21 @@ object IncrementalUpdate {
       .where(col("__rn") === 1).drop("__src", "__rn")
   }
 
+  /** The distinct partition tuples of `incoming`: columns 0 until n are
+    * the typed values, columns n until 2n the same values cast to string
+    * as the partitioned writer renders them into directory names. One row
+    * per TOUCHED PARTITION (a daily batch touches ≤ one (company, year) per
+    * symbol) — bounded metadata, the same driver-side partition listing a
+    * metastore does, not a data collect. */
+  private def touchedPartitions(incoming: DataFrame, partitionCols: Seq[String]): Seq[Row] =
+    incoming.select(partitionCols.map(col) ++ partitionCols.map(col(_).cast("string")): _*)
+      .distinct().collect().toSeq
+
   /** Static partition predicate selecting exactly the partitions present
     * in `incoming`, which the scan planner folds into `PartitionFilters`
     * (plan-asserted in the spec). A runtime semi join on the partition key
     * does NOT prune here — DPP declines the shape (no selective predicate
-    * on the build side) and the store scan would read every partition. The
-    * collect is one row per TOUCHED PARTITION (a daily batch touches ≤ one
-    * (company, year) per symbol) — bounded metadata, the same driver-side
-    * partition listing a metastore does, not a data collect.
+    * on the build side) and the store scan would read every partition.
     *
     * Shape matters at wide fan-out: a full-universe batch touches 1k+
     * partitions, and an OR of per-partition AND-equalities builds a
@@ -59,7 +75,7 @@ object IncrementalUpdate {
     * keep the null-safe `<=>` AND form (IN's equality would never match
     * the store's default partition), and those are rare by construction. */
   def touchedPartitionFilter(incoming: DataFrame, partitionCols: Seq[String]): Column = {
-    val touched = incoming.select(partitionCols.map(col): _*).distinct().collect().toSeq
+    val touched = touchedPartitions(incoming, partitionCols)
     val (withNull, noNull) =
       touched.partition(r => partitionCols.indices.exists(r.isNullAt))
     val inClause =
@@ -76,30 +92,38 @@ object IncrementalUpdate {
     (inClause.toSeq ++ nullClauses).reduceOption(_ || _).getOrElse(lit(false))
   }
 
-  /** Merge one batch into the partitioned store at `storeDir`. Reads ONLY
-    * the partitions present in `incoming` ([[touchedPartitionFilter]] →
-    * static `PartitionFilters` on the scan), rewrites ONLY those
-    * partitions (dynamic partition overwrite). Idempotent — see class
-    * doc. */
+  /** Merge one batch into the partitioned store at `storeDir`. Idempotent
+    * — see class doc.
+    *
+    * Reads ONLY the partitions present in `incoming`, by path: each touched
+    * tuple becomes its directory, escaped as the writer escapes it (a null
+    * or empty value is `__HIVE_DEFAULT_PARTITION__`), and only directories
+    * that exist are read (a new company or year has none yet). The read
+    * carries the known schema — `incoming`'s data columns, then the
+    * partition columns, typed as in `incoming` — so it runs no schema
+    * inference and lists no untouched partition. The rewrite goes through
+    * [[IngestEgress.writePartitioned]] with dynamic partition overwrite:
+    * its explicit repartition count spreads the touched partitions over
+    * the cores (AQE would coalesce an unsized one into a single writing
+    * task, see [[IngestEgress.compactPartitioned]]), and its exchange
+    * separates the scan stage from the write stage. */
   def mergeBatch(incoming: DataFrame, storeDir: String,
                  partitionCols: Seq[String], keyCols: Seq[String]): Unit = {
     val spark = incoming.sparkSession
-    val merged = if (BatchStore.exists(spark, storeDir)) {
-      val existing = spark.read.parquet(storeDir)
-        .where(touchedPartitionFilter(incoming, partitionCols))
+    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val n = partitionCols.size
+    val paths = touchedPartitions(incoming, partitionCols)
+      .map(r => partitionCols.indices.map(i =>
+        ExternalCatalogUtils.getPartitionPathString(partitionCols(i), r.getString(n + i)))
+        .mkString(s"$storeDir/", "/", ""))
+      .filter(p => fs.exists(new Path(p)))
+    val merged = if (paths.isEmpty) incoming else {
+      val schema = StructType(incoming.schema.filterNot(f => partitionCols.contains(f.name)) ++
+        partitionCols.map(incoming.schema(_)))
+      val existing = spark.read.schema(schema).option("basePath", storeDir).parquet(paths: _*)
       upsert(existing, incoming, keyCols)
-    } else incoming
-    // The rewrite targets partitions the plan also reads — break lineage so
-    // the write doesn't overwrite its own input mid-job. The touched-
-    // partition slice is bounded (a day's update), so materializing it is
-    // cheap; with a commit-log table format (the cluster-production choice)
-    // this step disappears.
-    merged.localCheckpoint()
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .option("compression", "snappy")
-      .parquet(storeDir)
+    }
+    IngestEgress.writePartitioned(merged, storeDir, partitionCols, dynamic = true)
   }
 
   /** Drain the incoming directory into the store ([[BatchStore.drain]]),

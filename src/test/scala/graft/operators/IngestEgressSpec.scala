@@ -1,9 +1,14 @@
 package graft.operators
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.util.{ForklessLocalFileSystem, ForklessLocalFs, ForklessRawLocalFileSystem}
 
 class IngestEgressSpec extends SparkSpec {
   import spark.implicits._
@@ -149,6 +154,47 @@ class IngestEgressSpec extends SparkSpec {
     val manifest = IngestEgress.partitionManifest(prices, Seq(col("company"), col("year")))
       .as[(String, Int, Long)].collect().toSet
     assert(manifest === Set(("AAPL", 2023, 1L), ("AAPL", 2024, 1L), ("MSFT", 2024, 1L)))
+  }
+
+  test("partitioned write: same file and directory modes as Hadoop's default local file system") {
+    val prices = Seq(("AAPL", 2023, 1.0), ("AAPL", 2024, 2.0), ("MSFT", 2024, 3.0))
+      .toDF("company", "year", "Close")
+    val forkless = Files.createTempDirectory("graft_forkless").toString
+    val default = Files.createTempDirectory("graft_default").toString
+    IngestEgress.writePartitioned(prices, forkless, Seq("company", "year"))
+    prices.repartition(4, col("company"), col("year"))
+      .write.mode("overwrite").partitionBy("company", "year").parquet(default)
+    // unix:mode carries the permission bits and the sticky bit; part file
+    // names differ only by write id and task number
+    def modes(root: String): Map[String, Int] = {
+      val base = Paths.get(root)
+      val s = Files.walk(base)
+      try s.iterator().asScala.map { p =>
+        base.relativize(p).toString.replaceAll("part-[0-9]+-[0-9a-f-]+", "part") ->
+          Files.getAttribute(p, "unix:mode").asInstanceOf[Int]
+      }.toMap
+      finally s.close()
+    }
+    val got = modes(forkless)
+    assert(got.keySet.exists(_.endsWith(".parquet")) && got.keySet.exists(_.endsWith(".crc")))
+    assert(got === modes(default))
+
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    ForklessLocalFs.writeOptions.foreach { case (k, v) => conf.set(k, v) }
+    assert(new Path(forkless).getFileSystem(conf).isInstanceOf[ForklessLocalFileSystem])
+  }
+
+  test("ForklessRawLocalFileSystem.setPermission sets the requested mode, sticky bit included") {
+    val fs = new ForklessRawLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    val dir = Files.createTempDirectory("graft_chmod")
+    val file = Files.createFile(dir.resolve("f"))
+    for ((p, mode) <- Seq(file -> "640", file -> "604", file -> "751", file -> "000",
+                          file -> "777", dir -> "700", dir -> "1777")) {
+      fs.setPermission(new Path(p.toUri), new FsPermission(mode))
+      assert((Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x3ff) ===
+        Integer.parseInt(mode, 8), s"$p $mode")
+    }
   }
 
   test("footerStatsScan pushes COUNT/MIN/MAX into the parquet scan and matches a row-level agg") {

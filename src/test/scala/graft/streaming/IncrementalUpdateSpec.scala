@@ -11,6 +11,12 @@ import graft.pipeline.StockPipeline
 class IncrementalUpdateSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs of one merge into an existing store (measured on local[2]):
+    * the touched-partition distinct collect (2: its shuffle stage and its
+    * result), the upsert window's shuffle stage, the write repartition's
+    * shuffle stage and the write. */
+  private val MergeJobs = 5
+
   test("daily update: new day inserts, late correction replaces, no duplicates") {
     val symbols = Seq("AAA", "BBB").toDF("Symbol")
     def prices(start: String, days: Int) =
@@ -104,6 +110,97 @@ class IncrementalUpdateSpec extends SparkSpec {
     val none = spark.read.parquet(store)
       .where(IncrementalUpdate.touchedPartitionFilter(disjoint, Seq("company", "year")))
     assert(none.count() === 0)
+  }
+
+  private val partCols = Seq("company", "year")
+  private val keys = Seq("company", "Date")
+
+  private def day(d: String) = java.sql.Timestamp.valueOf(s"$d 00:00:00")
+
+  private def priceRows(rows: (String, Int, String, Double)*) =
+    rows.map { case (c, y, d, close) => (day(d), close, c, y) }
+      .toDF("Date", "Close", "company", "year")
+
+  /** Rows as a sorted multiset, in a fixed column order. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("company", "year", "Date", "Close").collect().map(_.toString).toSeq.sorted
+
+  private def storeRows(dir: String): Seq[String] = rowsOf(spark.read.parquet(dir))
+
+  /** company=/year= directory -> its part files' (name, size). */
+  private def partFiles(dir: String): Map[String, Seq[(String, Long)]] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).toSeq.flatMap { c =>
+      c.listFiles().filter(_.isDirectory).toSeq.map { y =>
+        s"${c.getName}/${y.getName}" -> y.listFiles()
+          .filter(f => f.getName.startsWith("part-")).map(f => (f.getName, f.length())).toSeq
+      }
+    }.toMap
+
+  test("mergeBatch path-built read: existing, new company, new year, escaped and null partitions") {
+    val store = Files.createTempDirectory("graft_edge_store").toString + "/s"
+    val old = priceRows(("AAA", 2023, "2023-12-29", 10.0), ("AAA", 2024, "2024-01-02", 11.0),
+      ("BBB", 2024, "2024-01-02", 20.0))
+    IncrementalUpdate.mergeBatch(old, store, partCols, keys)
+    assert(partFiles(store).keySet === Set("company=AAA/year=2023", "company=AAA/year=2024",
+      "company=BBB/year=2024"))
+    val untouched = partFiles(store).filter(_._1 != "company=AAA/year=2024")
+
+    val batch = priceRows(
+      ("AAA", 2024, "2024-01-02", 11.5), // correction in an existing partition
+      ("AAA", 2024, "2024-01-03", 12.0), // new day in the same partition
+      ("CCC", 2024, "2024-01-03", 30.0), // new company
+      ("BBB", 2025, "2025-01-02", 21.0), // new year of an existing company
+      ("BRK/B", 2024, "2024-01-03", 40.0), // needs path escaping
+      (null, 2024, "2024-01-03", 50.0)) // default partition
+    val expected = rowsOf(IncrementalUpdate.upsert(old, batch, keys))
+    IncrementalUpdate.mergeBatch(batch, store, partCols, keys)
+    assert(storeRows(store) === expected)
+    val files = partFiles(store)
+    assert(files.keySet.contains("company=BRK%2FB/year=2024"), files.keySet)
+    assert(files.keySet.contains("company=__HIVE_DEFAULT_PARTITION__/year=2024"), files.keySet)
+    assert(files.size === 7)
+    assert(files.forall(_._2.size == 1), s"one part file per partition dir: $files")
+    assert(untouched.forall { case (d, fs) => files(d) == fs },
+      s"untouched partitions rewritten: $untouched -> $files")
+
+    // replay: the same rows, still one file per directory
+    IncrementalUpdate.mergeBatch(batch, store, partCols, keys)
+    assert(storeRows(store) === expected)
+    assert(partFiles(store).forall(_._2.size == 1))
+
+    // the escaped and the default partition are READ back by path: a next
+    // day there keeps their earlier rows
+    val next = priceRows(("BRK/B", 2024, "2024-01-04", 41.0), (null, 2024, "2024-01-04", 51.0))
+    val expectedNext = rowsOf(IncrementalUpdate.upsert(spark.read.parquet(store), next, keys))
+    IncrementalUpdate.mergeBatch(next, store, partCols, keys)
+    assert(storeRows(store) === expectedNext)
+    assert(storeRows(store).size === expected.size + 2)
+  }
+
+  test("mergeBatch job and write-task guard: no inference or checkpoint job, spread write") {
+    val store = Files.createTempDirectory("graft_guard_store").toString + "/s"
+    IncrementalUpdate.mergeBatch(priceRows(("AAA", 2024, "2024-01-02", 1.0),
+      ("BBB", 2024, "2024-01-02", 2.0), ("CCC", 2024, "2024-01-02", 3.0)), store, partCols, keys)
+    val batch = priceRows(("AAA", 2024, "2024-01-03", 1.5), ("BBB", 2024, "2024-01-03", 2.5),
+      ("CCC", 2024, "2024-01-03", 3.5))
+    // tasks of every stage, keyed by stage id: the write stage is the last
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.put(s.stageInfo.stageId, s.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (jobs, _) = try countingJobs(IncrementalUpdate.mergeBatch(batch, store, partCols, keys))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs <= MergeJobs, s"a merge into an existing store ran $jobs jobs, expected " +
+      s"$MergeJobs: distinct collect 2, window stage 1, write repartition stage 1, write 1 (a " +
+      "merge that infers the store schema and checkpoints the upsert ran 6: the inference " +
+      "and checkpoint jobs more, no write repartition stage)")
+    import scala.jdk.CollectionConverters._
+    val writeStage = stageTasks.asScala.maxBy(_._1)
+    assert(writeStage._2 > 1, s"write stage ran in one task: $stageTasks")
+    assert(storeRows(store).size === 6)
+    assert(partFiles(store).forall(_._2.size == 1))
   }
 
   test("upsert is last-writer-wins and passes unmatched rows through") {

@@ -10,6 +10,10 @@ import graft.SparkSpec
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs of one warm [[StreamingDedup.processBatch]] step on an existing
+    * band store (measured on local[2]). */
+  private val StepJobs = 8
+
   private val base =
     "the quick brown fox jumps over the lazy dog and runs far away " * 4
 
@@ -146,5 +150,17 @@ class StreamingDedupSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((5L, 7L)),
       s"new doc must pair with the STORED version of the recurring id, got $pairs")
+  }
+
+  test("a warm dedup step on an existing band store reads it without schema inference") {
+    val bands = Files.createTempDirectory("graft_sdedup_jobs").toString + "/b"
+    def docs(id: Long, text: String) = Seq((id, text * 4)).toDF("doc_id", "text")
+    StreamingDedup.processBatch(docs(0L, base), bands, 0L)
+    StreamingDedup.processBatch(docs(1L, "another body of text entirely apart "), bands, 1L)
+    val (jobs, out) = countingJobs(
+      StreamingDedup.processBatch(docs(2L, base), bands, 2L))
+    assert(out.select("id_a", "id_b").as[(Long, Long)].collect().toSet === Set((0L, 2L)))
+    assert(jobs <= StepJobs, s"a warm step ran $jobs jobs, expected $StepJobs (a step that " +
+      s"infers the stored schema ran ${StepJobs + 1})")
   }
 }

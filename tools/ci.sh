@@ -7,31 +7,40 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft_ci.XXXXXX)"
 
-echo "== 1/7 compile + tests"
+echo "== 1/8 compile + tests"
 sbt -batch test
 
-echo "== 2/7 perfbench arithmetic tests + regression-tool tests"
+echo "== 2/8 perfbench arithmetic tests + regression-tool tests"
 python3 -m unittest discover -s perfbench -p 'test_*.py'
 python3 -m unittest discover -s tools -p 'test_*.py'
 
-echo "== 3/7 perfbench harness: compile against the engine API + ChecksumSpec"
+echo "== 3/8 perfbench harness: compile against the engine API + ChecksumSpec"
 (cd perfbench/harness && sbt -batch harness/test)
 
-echo "== 4/7 verify dump @ $SF"
+echo "== 4/8 perfbench daily_merge: backfill + merge correctness checks against the engine"
+# the benchmark's untimed checks (backfill rows/partitions/checksum, merge
+# content, unique keys, idempotent replay) are the only end-to-end check of
+# the company/year store's write and merge path
+python3 perfbench/run.py --workload daily_merge --seed 1 --seconds 3 --trace 0 \
+  | tail -1 | tee "$OUT/daily_merge.json"
+python3 -c 'import json, sys; r = json.load(open(sys.argv[1])); sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$OUT/daily_merge.json" \
+  || { echo "DAILY_MERGE CHECKS FAILED"; exit 1; }
+
+echo "== 5/8 verify dump @ $SF"
 sbt -batch "runMain graft.Verify $SF $OUT"
 
-echo "== 5/7 DuckDB oracle compare"
+echo "== 6/8 DuckDB oracle compare"
 # one compare (~14 min, ~11 GB RSS over the full dump): keep its output
 # and grep the kept file for the summary
 python3 tools/check.py "$SF" "$OUT" | tee "$OUT/check.txt" | tail -5
 grep -q " 0 failing" "$OUT/check.txt" \
   || { echo "ORACLE FAILURES"; exit 1; }
 
-echo "== 6/7 oracle fragility audit (r7 cross-engine-round failure class)"
+echo "== 7/8 oracle fragility audit (r7 cross-engine-round failure class)"
 python3 tools/fragility.py "$SF" "$OUT" | tail -12 \
   || { echo "FRAGILE ORACLE ROUNDS"; exit 1; }
 
-echo "== 7/7 bench (sf0.1)"
+echo "== 8/8 bench (sf0.1)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
   | grep -oE '\{"metric".*' | tee "$OUT/bench.json"
 # a query that throws lands in the Bench line's "failed" list, not in the
