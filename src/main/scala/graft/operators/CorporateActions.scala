@@ -76,7 +76,7 @@ object CorporateActions {
     * ingredient is a lag-1 over the same window, so the event filter and
     * both exact quantized returns fold into one pass. Output is
     * IDENTICAL to the composition — same detection cross-multiplication,
-    * same rhaDiv return quantization and null-preserving clamp, column
+    * same `TechnicalIndicators.exactReturn` quantization and clamp, column
     * for column (law-spec'd in CorporateActionsSpec; q_ca3's DuckDB
     * oracle is unchanged and stays hash-exact). Returns
     * (keyCols..., ordCol, raw_ret_micro, adj_ret_micro,
@@ -85,17 +85,6 @@ object CorporateActions {
                         rawCol: String, adjCol: String,
                         clampMicro: Long = 0L): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(ordCol))
-    // the exact returnsMicro expression tree over (unit col u, lag col p)
-    def ret(u: String, p: String): Column = {
-      val a = (col(u) - col(p)) * lit(1000000L)
-      val base = when(col(p).isNull, lit(null).cast("long"))
-        .when(a >= 0, expr(s"(2 * (($u - $p) * 1000000) + $p) div (2 * $p)"))
-        .otherwise(-expr(s"(-2 * (($u - $p) * 1000000) + $p) div (2 * $p)"))
-      if (clampMicro > 0)
-        when(base.isNull, lit(null).cast("long"))
-          .otherwise(least(greatest(base, lit(-clampMicro)), lit(clampMicro)))
-      else base
-    }
     df.select(keyCols.map(col) :+ col(ordCol) :+
         col(rawCol).cast("long").as("__r") :+
         col(adjCol).cast("long").as("__a"): _*)
@@ -103,8 +92,10 @@ object CorporateActions {
       .withColumn("__ap", lag(col("__a"), 1).over(w))
       .where(col("__rp").isNotNull &&
         col("__r") * col("__ap") =!= col("__rp") * col("__a"))
-      .withColumn("raw_ret_micro", ret("__r", "__rp"))
-      .withColumn("adj_ret_micro", ret("__a", "__ap"))
+      .withColumn("raw_ret_micro",
+        TechnicalIndicators.exactReturn("__r", "__rp", clampMicro))
+      .withColumn("adj_ret_micro",
+        TechnicalIndicators.exactReturn("__a", "__ap", clampMicro))
       .withColumn("distortion_micro",
         col("adj_ret_micro") - col("raw_ret_micro"))
       .select(keyCols.map(col) :+ col(ordCol) :+ col("raw_ret_micro") :+

@@ -1,29 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-
-/** Output row of [[TechnicalIndicators.ema]]. Top-level (not nested in the
-  * object) so the generated `UnsafeProjection` serializer can reference it:
-  * Janino cannot resolve inner-class methods like
-  * `TechnicalIndicators$EmaRow.key()` and falls back to interpreted
-  * projection on every row when the class is nested. */
-case class EmaRow(key: Long, ord: Long, value: Double, ema: Double)
-
-/** Output row of [[TechnicalIndicators.emaMicro]] — same top-level-class
-  * rule as [[EmaRow]]. `emaMicro` is the state in exact micro-units of
-  * the value (value·1e6). */
-case class EmaMicroRow(key: Long, ord: Long, valueUnits: Long, emaMicro: Long)
-
-case class HoltMicroRow(key: Long, ord: Long, valueUnits: Long,
-                        levelMicro: Long, trendMicro: Long)
-
-case class CusumRow(key: Long, ord: Long, x: Long,
-                    spMicro: Long, snMicro: Long, alarm: Option[String])
-
-case class SarMicroRow(key: Long, ord: Long, valueUnits: Long,
-                       sarMicro: Long, dir: Long)
 
 /** Technical indicators over per-key price series — the feature
   * engineering the reference's partitioned OHLCV layout exists to feed
@@ -33,10 +12,21 @@ case class SarMicroRow(key: Long, ord: Long, valueUnits: Long,
   * window sums (sum, sum-of-squares, count are exact longs; the final
   * double formula is the same op sequence on both engines), so Bollinger
   * and RSI are bit-deterministic and DuckDB-oracle-checkable with no
-  * rounding. EMA is genuinely recursive — no window built-in exists — so
-  * it runs as a per-key streaming pass after repartition +
-  * sortWithinPartitions: one shuffle, constant memory per series, the
-  * scalable shape for recursive state at 100 TB.
+  * rounding.
+  *
+  * The serial recurrences (EMA, Holt, CUSUM, parabolic SAR) have no
+  * window built-in, so all of them run through ONE keyed serial pass,
+  * [[serialPass]]: the key, ord and input columns are cast to long, ONE
+  * hash exchange on the key plus a sort on (key, ord) makes every key's
+  * rows contiguous and ordered, and one fold over each partition carries
+  * a fixed-width long state. An operator's `reset` seeds the state on a
+  * key's first row and its `step` advances it on every later row; the
+  * leading state slots are emitted under the operator's output names.
+  * A key's first row is told by an explicit started flag, never a
+  * key sentinel: a generic key column may hold any long, Long.MinValue
+  * included. One shuffle, constant memory per series, serial per key and
+  * never across keys — the scalable shape for recursive state at 100 TB.
+  * Each operator below names only its state and step.
   */
 object TechnicalIndicators {
 
@@ -79,34 +69,42 @@ object TechnicalIndicators {
       .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))
   }
 
-  /** Exponential moving average per key: recursive
-    * ema_t = alpha*x_t + (1-alpha)*ema_{t-1}, seeded with the first value.
-    * Implemented as repartition(key) + sortWithinPartitions + one
-    * streaming pass per partition (keys are contiguous after the sort, so
-    * state is a single (key, ema) pair at a time). */
-  def ema(df: DataFrame, keyCol: String, ordCol: String, valueCol: String,
-          alpha: Double): DataFrame = {
+  /** The one keyed serial pass (see the object doc). `inputs` pairs each
+    * source column with its output name; per row the fold hands `reset`
+    * (a key's first row) or `step` (every later row) the row's inputs as
+    * longs and the `stateWidth`-slot state, whose first `outputs.size`
+    * slots are emitted as `outputs`. Output: (keyCol, ordCol, inputs...,
+    * outputs...), all non-nullable longs. */
+  private def serialPass(df: DataFrame, keyCol: String, ordCol: String,
+                         inputs: Seq[(String, String)], outputs: Seq[String],
+                         stateWidth: Int)
+                        (reset: (Array[Long], Array[Long]) => Unit,
+                         step: (Array[Long], Array[Long]) => Unit): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val prepared = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(valueCol).cast("double").as("value"))
+    val nOut = outputs.size
+    // every slot is present, but an array read is nullable by type: the
+    // coalesce keeps the emitted longs non-nullable
+    def slot(arr: String, i: Int) = coalesce(col(arr)(i), lit(0L))
+    df.select(col(keyCol).cast("long").as("key"), col(ordCol).cast("long").as("ord"),
+        array(inputs.map { case (c, _) => col(c).cast("long") }: _*).as("in"))
       .repartition(col("key"))
       .sortWithinPartitions(col("key"), col("ord"))
-    prepared.as[(Long, Long, Double)].mapPartitions { it =>
-      var curKey = Long.MinValue
-      var curEma = 0.0
-      it.map { case (k, o, v) =>
-        curEma = if (k != curKey) v else alpha * v + (1 - alpha) * curEma
-        curKey = k
-        EmaRow(k, o, v, curEma)
+      .as[(Long, Long, Array[Long])]
+      .mapPartitions { it =>
+        var started = false
+        var curKey = 0L
+        val st = new Array[Long](stateWidth)
+        it.map { case (k, o, in) =>
+          if (!started || k != curKey) reset(in, st) else step(in, st)
+          started = true
+          curKey = k
+          (k, o, in, java.util.Arrays.copyOf(st, nOut))
+        }
       }
-    }(Encoders.product[EmaRow])
-      .toDF("key", "ord", "value", "ema")
-      .withColumnRenamed("key", keyCol)
-      .withColumnRenamed("ord", ordCol)
-      .withColumnRenamed("value", valueCol)
+      .select(Seq(col("_1").as(keyCol), col("_2").as(ordCol)) ++
+        inputs.zipWithIndex.map { case ((_, name), i) => slot("_3", i).as(name) } ++
+        outputs.zipWithIndex.map { case (name, i) => slot("_4", i).as(name) }: _*)
   }
 
   /** In-memory reference EMA for tests. */
@@ -118,6 +116,34 @@ object TechnicalIndicators {
     * CTEs (CASE on sign + nonnegative floor division on both engines). */
   def rhaDiv(a: Long, b: Long): Long =
     if (a >= 0) (2 * a + b) / (2 * b) else -((-2 * a + b) / (2 * b))
+
+  /** The one Holt level/trend step over micro-unit state (see
+    * [[holtMicro]]): folds the observation `xMicro` into (level, trend). */
+  private[graft] def holtStep(level: Long, trend: Long, xMicro: Long,
+                              alphaNum: Long, alphaDen: Long,
+                              betaNum: Long, betaDen: Long): (Long, Long) = {
+    val l = rhaDiv(alphaNum * xMicro + (alphaDen - alphaNum) * (level + trend), alphaDen)
+    (l, rhaDiv(betaNum * (l - level) + (betaDen - betaNum) * trend, betaDen))
+  }
+
+  /** The one exact micro-unit return of unit column `u` over its lag `p`
+    * (plain column names): rhaDiv((u − p)·1e6, p) as a Column, null where
+    * `p` is null (a key's first row). Both rounding branches divide
+    * non-negative operands, so floor == truncate on any engine (the
+    * emaMicro oracle convention). `clampMicro > 0` clips the return to
+    * ±clampMicro, null-preserving — Spark's greatest/least SKIP nulls, so
+    * the clamp must branch explicitly or a first-row null would collapse
+    * to -clampMicro and survive downstream null filters. */
+  private[operators] def exactReturn(u: String, p: String, clampMicro: Long): Column = {
+    val r = when(col(p).isNull, lit(null).cast("long"))
+      .when((col(u) - col(p)) * lit(1000000L) >= 0,
+        expr(s"(2 * (($u - $p) * 1000000) + $p) div (2 * $p)"))
+      .otherwise(-expr(s"(-2 * (($u - $p) * 1000000) + $p) div (2 * $p)"))
+    if (clampMicro > 0)
+      when(r.isNull, lit(null).cast("long"))
+        .otherwise(least(greatest(r, lit(-clampMicro)), lit(clampMicro)))
+    else r
+  }
 
   /** ENGINE-VERSION-EXACT exponential moving average (round-8 hardening;
     * the fragility audit measured the double-recurrence q_ta3/q_ta4
@@ -138,55 +164,23 @@ object TechnicalIndicators {
     * precision, and DETERMINISTIC: every engine computes the identical
     * integers).
     *
-    * Same distributed shape as [[ema]]: repartition(key) +
-    * sortWithinPartitions + one constant-memory streaming pass — the
-    * scalable plan for serial per-key state at 100 TB. Overflow: needs
+    * The one-column case of [[emaMicroMulti]]. Overflow: needs
     * aDen·|value|·1e6 < 2^63, i.e. |value| < 9.2e12/aDen — widen the
     * state to BigInt past that (same recurrence, wider carrier).
     *
     * Output: (key, ord, value_units = c_t, ema_micro = e_t). */
   def emaMicro(df: DataFrame, keyCol: String, ordCol: String,
                unitsCol: String, unitsScale: Int,
-               alphaNum: Long, alphaDen: Long): DataFrame = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      s"alpha must be in (0,1]: $alphaNum/$alphaDen")
-    require(unitsScale >= 0 && unitsScale <= 6,
-      s"unitsScale must be in [0,6], got $unitsScale")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val up = math.pow(10.0, 6 - unitsScale).toLong
-    val prepared = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(unitsCol).cast("long").as("units"))
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("ord"))
-    prepared.as[(Long, Long, Long)].mapPartitions { it =>
-      // explicit started flag, not a key sentinel: a key column may hold
-      // ANY long (including Long.MinValue) in this generic operator
-      var started = false
-      var curKey = 0L
-      var curEma = 0L
-      it.map { case (k, o, c) =>
-        curEma =
-          if (!started || k != curKey) c * up
-          else rhaDiv(alphaNum * c * up + (alphaDen - alphaNum) * curEma, alphaDen)
-        started = true
-        curKey = k
-        EmaMicroRow(k, o, c, curEma)
-      }
-    }(Encoders.product[EmaMicroRow])
-      .toDF("key", "ord", "value_units", "ema_micro")
-      .withColumnRenamed("key", keyCol)
-      .withColumnRenamed("ord", ordCol)
-  }
+               alphaNum: Long, alphaDen: Long): DataFrame =
+    emaMicroMulti(df, keyCol, ordCol, Seq(unitsCol), unitsScale, alphaNum, alphaDen)
+      .toDF(keyCol, ordCol, "value_units", "ema_micro")
 
   /** Multi-column [[emaMicro]]: the IDENTICAL per-column recurrence run
-    * over several unit columns in ONE repartition + sort + streaming
-    * pass (r15 — q_ta17's Wilder system smoothed +DM, −DM and TR as
-    * three separate emaMicro passes and paid two extra exchanges plus
-    * two joins to put the results back side-by-side; the recurrences
-    * are per-column independent, so one fold carries all the state).
+    * over several unit columns in ONE serial pass (r15 — q_ta17's Wilder
+    * system smoothed +DM, −DM and TR as three separate emaMicro passes
+    * and paid two extra exchanges plus two joins to put the results back
+    * side-by-side; the recurrences are per-column independent, so one
+    * fold carries all the state). State: one micro EMA per column.
     * Output: (key, ord, <c> = input units, <c>_s = ema micro) per
     * column. */
   def emaMicroMulti(df: DataFrame, keyCol: String, ordCol: String,
@@ -197,38 +191,18 @@ object TechnicalIndicators {
       s"alpha must be in (0,1]: $alphaNum/$alphaDen")
     require(unitsScale >= 0 && unitsScale <= 6,
       s"unitsScale must be in [0,6], got $unitsScale")
-    val spark = df.sparkSession
-    import spark.implicits._
     val up = math.pow(10.0, 6 - unitsScale).toLong
     val n = unitsCols.length
-    val prepared = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      array(unitsCols.map(c => col(c).cast("long")): _*).as("units"))
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("ord"))
-    prepared.as[(Long, Long, Array[Long])].mapPartitions { it =>
-      var started = false
-      var curKey = 0L
-      val curEmas = new Array[Long](n)
-      it.map { case (k, o, cs) =>
-        val fresh = !started || k != curKey
+    serialPass(df, keyCol, ordCol, unitsCols.map(c => c -> c),
+        unitsCols.map(c => s"${c}_s"), n)(
+      (cs, e) => { var i = 0; while (i < n) { e(i) = cs(i) * up; i += 1 } },
+      (cs, e) => {
         var i = 0
         while (i < n) {
-          curEmas(i) =
-            if (fresh) cs(i) * up
-            else rhaDiv(alphaNum * cs(i) * up +
-              (alphaDen - alphaNum) * curEmas(i), alphaDen)
+          e(i) = rhaDiv(alphaNum * cs(i) * up + (alphaDen - alphaNum) * e(i), alphaDen)
           i += 1
         }
-        started = true
-        curKey = k
-        (k, o, cs.clone(), curEmas.clone())
-      }
-    }.toDF("key", "ord", "__units", "__emas")
-      .select(Seq(col("key").as(keyCol), col("ord").as(ordCol)) ++
-        unitsCols.zipWithIndex.map { case (c, i) => col("__units")(i).as(c) } ++
-        unitsCols.zipWithIndex.map { case (c, i) => col("__emas")(i).as(s"${c}_s") }: _*)
+      })
   }
 
   /** ENGINE-VERSION-EXACT Holt double-exponential smoothing (level +
@@ -241,10 +215,9 @@ object TechnicalIndicators {
     *   l_t = rhaDiv(aNum·c_t·10^(6−uS) + (aDen−aNum)·(l_{t−1} + b_{t−1}), aDen)
     *   b_t = rhaDiv(bNum·(l_t − l_{t−1}) + (bDen−bNum)·b_{t−1}, bDen)
     *
-    * Same distributed shape: repartition(key) + sortWithinPartitions +
-    * one constant-memory streaming pass — serial per key by nature, never
-    * serial across keys. Both state values can be negative (a falling
-    * level drives trend below zero); rhaDiv carries both sign branches.
+    * State: (level, trend), stepped by [[holtStep]]. Both values can be
+    * negative (a falling level drives trend below zero); rhaDiv carries
+    * both sign branches.
     *
     * Output: (key, ord, value_units, level_micro, trend_micro). */
   def holtMicro(df: DataFrame, keyCol: String, ordCol: String,
@@ -256,37 +229,14 @@ object TechnicalIndicators {
       s"alpha/beta must be in (0,1]: $alphaNum/$alphaDen, $betaNum/$betaDen")
     require(unitsScale >= 0 && unitsScale <= 6,
       s"unitsScale must be in [0,6], got $unitsScale")
-    val spark = df.sparkSession
-    import spark.implicits._
     val up = math.pow(10.0, 6 - unitsScale).toLong
-    val prepared = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(unitsCol).cast("long").as("units"))
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("ord"))
-    prepared.as[(Long, Long, Long)].mapPartitions { it =>
-      // started flag, not a key sentinel (a key may be Long.MinValue)
-      var started = false
-      var curKey = 0L
-      var lvl = 0L
-      var trd = 0L
-      it.map { case (k, o, c) =>
-        if (!started || k != curKey) { started = true; lvl = c * up; trd = 0L }
-        else {
-          val prevLvl = lvl
-          lvl = rhaDiv(alphaNum * c * up + (alphaDen - alphaNum) * (lvl + trd),
-            alphaDen)
-          trd = rhaDiv(betaNum * (lvl - prevLvl) + (betaDen - betaNum) * trd,
-            betaDen)
-        }
-        curKey = k
-        HoltMicroRow(k, o, c, lvl, trd)
-      }
-    }(Encoders.product[HoltMicroRow])
-      .toDF("key", "ord", "value_units", "level_micro", "trend_micro")
-      .withColumnRenamed("key", keyCol)
-      .withColumnRenamed("ord", ordCol)
+    serialPass(df, keyCol, ordCol, Seq(unitsCol -> "value_units"),
+        Seq("level_micro", "trend_micro"), 2)(
+      (c, lb) => { lb(0) = c(0) * up; lb(1) = 0L },
+      (c, lb) => {
+        val (l, b) = holtStep(lb(0), lb(1), c(0) * up, alphaNum, alphaDen, betaNum, betaDen)
+        lb(0) = l; lb(1) = b
+      })
   }
 
   /** Page CUSUM change-point detector over an EXACT integer micro series
@@ -301,44 +251,21 @@ object TechnicalIndicators {
     * two alarms are mutually exclusive per step (up needs x > k, down
     * needs x < −k). Pure integer arithmetic — engine-exact; emitted
     * s⁺/s⁻ are the PRE-reset values (what the alarm fired on).
-    * Same distributed shape as [[emaMicro]]: serial per key, never
-    * across keys. */
+    * State: the emitted pre-reset (s⁺, s⁻); each step first applies the
+    * previous row's post-alarm reset, and a key starts from (0, 0). The
+    * alarm is a Column over the emitted values. */
   def cusumMicro(df: DataFrame, keyCol: String, ordCol: String,
                  microCol: String, kMicro: Long, hMicro: Long): DataFrame = {
     require(kMicro >= 0 && hMicro > 0, s"need k >= 0 < h: $kMicro, $hMicro")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val prepared = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(microCol).cast("long").as("x"))
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("ord"))
-    prepared.as[(Long, Long, Long)].mapPartitions { it =>
-      // started flag, not a key sentinel (a key may be Long.MinValue);
-      // the reset state is 0/0 so the seed is the same either way, but
-      // the pattern stays uniform with emaMicro/holtMicro
-      var started = false
-      var curKey = 0L
-      var sp = 0L
-      var sn = 0L
-      it.map { case (k, o, x) =>
-        if (!started || k != curKey) { started = true; sp = 0L; sn = 0L }
-        sp = math.max(0L, sp + x - kMicro)
-        sn = math.min(0L, sn + x + kMicro)
-        val alarm =
-          if (sp > hMicro) Some("up")
-          else if (sn < -hMicro) Some("down") else None
-        val row = CusumRow(k, o, x, sp, sn, alarm)
-        if (sp > hMicro) sp = 0L
-        if (sn < -hMicro) sn = 0L
-        curKey = k
-        row
-      }
-    }(Encoders.product[CusumRow])
-      .toDF("key", "ord", "x", "sp_micro", "sn_micro", "alarm")
-      .withColumnRenamed("key", keyCol)
-      .withColumnRenamed("ord", ordCol)
+    val step: (Array[Long], Array[Long]) => Unit = (x, s) => {
+      s(0) = math.max(0L, (if (s(0) > hMicro) 0L else s(0)) + x(0) - kMicro)
+      s(1) = math.min(0L, (if (s(1) < -hMicro) 0L else s(1)) + x(0) + kMicro)
+    }
+    serialPass(df, keyCol, ordCol, Seq(microCol -> "x"),
+        Seq("sp_micro", "sn_micro"), 2)(
+      (x, s) => { s(0) = 0L; s(1) = 0L; step(x, s) }, step)
+      .withColumn("alarm", when(col("sp_micro") > hMicro, lit("up"))
+        .when(col("sn_micro") < -hMicro, lit("down")))
   }
 
   /** In-memory reference of [[cusumMicro]] for tests. */
@@ -376,7 +303,7 @@ object TechnicalIndicators {
   /** Rolling volatility over EXACT micro-unit returns (round 9 — the
     * flagship risk feature of the reference's domain, in the q_ta1/q_ta3
     * numeric discipline): per key, the period-over-period return is
-    * quantized ONCE to exact integer micro
+    * quantized ONCE to exact integer micro by [[returnsMicro]]
     * (r_micro = rhaDiv((c_t − c_{t−1})·1e6, c_{t−1}), the emaMicro
     * rounding rule — no IEEE division survives into state), then the
     * rolling sample standard deviation comes from exact BIGINT window
@@ -398,64 +325,35 @@ object TechnicalIndicators {
   def rollingVolMicro(df: DataFrame, keyCol: String, ordCol: String,
                       unitsCol: String, window: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(ordCol))
     val wv = Window.partitionBy(col(keyCol)).orderBy(col(ordCol))
       .rowsBetween(-(window - 1), 0)
-    val c = col(unitsCol).cast("long")
-    // rhaDiv as a Column: round-half-away integer division, both
-    // branches routed through non-negative operands so floor == truncate
-    // on any engine (the emaMicro oracle convention)
-    val withR = df.select(col(keyCol), col(ordCol), c.as("__u"))
-      .withColumn("__prev", lag(col("__u"), 1).over(w))
-      .withColumn("__a", (col("__u") - col("__prev")) * lit(1000000L))
-      .withColumn("r_micro",
-        when(col("__prev").isNull, lit(null).cast("long"))
-          .when(col("__a") >= 0, expr("(2 * __a + __prev) div (2 * __prev)"))
-          .otherwise(-expr("(-2 * __a + __prev) div (2 * __prev)")))
     val n = count(col("r_micro")).over(wv).cast("double")
     val s = sum(col("r_micro")).over(wv).cast("double")
     val sq = sum(col("r_micro") * col("r_micro")).over(wv).cast("double")
-    withR
+    returnsMicro(df, Seq(keyCol), ordCol, unitsCol)
       .withColumn("vol_micro",
         when(n > 1.0, sqrt(greatest((sq - s * s / n) / (n - lit(1.0)), lit(0.0))))
           .otherwise(lit(0.0)))
-      .select(col(keyCol), col(ordCol), col("__u").as("value_units"),
-        col("r_micro"), col("vol_micro"))
   }
 
   /** Per-key exact micro-unit returns — the r_micro quantization step of
-    * [[rollingVolMicro]] factored out for the CROSS-series features
-    * (rolling beta q_ta12, lead-lag correlation q_corr2). Emits
-    * (keyCols..., ordCol, value_units, r_micro) with r_micro null on each
-    * key's first row; `keyCols` may be empty for a single global series
-    * (the market index — one row per period, so the unpartitioned window
-    * is a non-issue). `clampMicro > 0` clips the return to ±clampMicro
-    * (null-preserving — Spark's greatest/least SKIP nulls, so the clamp
-    * must branch explicitly or a first-row null would collapse to
-    * -clampMicro and survive downstream null filters). The clip is both
-    * the robust-feature practice for ratio features and the OVERFLOW
-    * BOUND for downstream sums of products: with |r| ≤ C and window n,
+    * [[rollingVolMicro]], also serving the CROSS-series features (rolling
+    * beta q_ta12, lead-lag correlation q_corr2). Emits
+    * (keyCols..., ordCol, value_units, r_micro) with r_micro the
+    * [[exactReturn]] expression, null on each key's first row; `keyCols`
+    * may be empty for a single global series (the market index — one row
+    * per period, so the unpartitioned window is a non-issue).
+    * `clampMicro > 0` clips the return to ±clampMicro — both the
+    * robust-feature practice for ratio features and the OVERFLOW BOUND
+    * for downstream sums of products: with |r| ≤ C and window n,
     * Σr² ≤ n·C² must stay under 2^63 (C = 1e7, n = 2500 ⇒ 2.5e17 ✓). */
   def returnsMicro(df: DataFrame, keyCols: Seq[String], ordCol: String,
                    unitsCol: String, clampMicro: Long = 0L): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(ordCol))
-    val c = col(unitsCol).cast("long")
-    val base = df.select(keyCols.map(col) :+ col(ordCol) :+ c.as("__u"): _*)
+    df.select(keyCols.map(col) :+ col(ordCol) :+ col(unitsCol).cast("long").as("__u"): _*)
       .withColumn("__prev", lag(col("__u"), 1).over(w))
-      .withColumn("__a", (col("__u") - col("__prev")) * lit(1000000L))
-      .withColumn("r_micro",
-        when(col("__prev").isNull, lit(null).cast("long"))
-          .when(col("__a") >= 0, expr("(2 * __a + __prev) div (2 * __prev)"))
-          .otherwise(-expr("(-2 * __a + __prev) div (2 * __prev)")))
-    val clamped =
-      if (clampMicro > 0)
-        base.withColumn("r_micro",
-          when(col("r_micro").isNull, lit(null).cast("long"))
-            .otherwise(least(greatest(col("r_micro"), lit(-clampMicro)),
-              lit(clampMicro))))
-      else base
-    clamped.select(keyCols.map(col) :+ col(ordCol) :+
-      col("__u").as("value_units") :+ col("r_micro"): _*)
+      .select(keyCols.map(col) :+ col(ordCol) :+ col("__u").as("value_units") :+
+        exactReturn("__u", "__prev", clampMicro).as("r_micro"): _*)
   }
 
   /** In-memory reference of [[emaMicro]] for tests (inputs already in
@@ -472,8 +370,8 @@ object TechnicalIndicators {
     * toward the extreme point (EP) of the current trend and REVERSES when
     * price crosses it. Close-only adaptation (the daily frame carries no
     * intraday high/low; close stands in for both — documented, not
-    * hidden). Four-field integer state per key, the [[emaMicro]]
-    * discipline (no IEEE result ever enters state):
+    * hidden). Four-field integer state (sar, dir, ep, af) per key, the
+    * [[emaMicro]] discipline (no IEEE result ever enters state):
     *
     *   init (first bar):    dir = +1, sar = ep = c₀·10^(6−uS), af = afStart
     *   each later bar:      sar += rhaDiv(af·(ep − sar), afDen)
@@ -482,10 +380,8 @@ object TechnicalIndicators {
     *                        ep and af (af = min(af + afStep, afMax))
     *     short (dir = −1):  mirror image.
     *
-    * Same distributed shape as every serial recurrence here:
-    * repartition(key) + sortWithinPartitions + one constant-memory
-    * streaming pass. Overflow: af·|ep − sar| ≤ afMax·2·maxMicro — at
-    * cents scale and afMax 20 that is ~1.6e13 « 2^63.
+    * Overflow: af·|ep − sar| ≤ afMax·2·maxMicro — at cents scale and
+    * afMax 20 that is ~1.6e13 « 2^63.
     * Output: (key, ord, value_units, sar_micro, dir ∈ {−1, +1}). */
   def sarMicro(df: DataFrame, keyCol: String, ordCol: String,
                unitsCol: String, unitsScale: Int,
@@ -495,43 +391,22 @@ object TechnicalIndicators {
       afMax <= afDen, s"af ladder out of range: $afStart/$afStep/$afMax/$afDen")
     require(unitsScale >= 0 && unitsScale <= 6,
       s"unitsScale must be in [0,6], got $unitsScale")
-    val spark = df.sparkSession
-    import spark.implicits._
     val up = math.pow(10.0, 6 - unitsScale).toLong
-    val prepared = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(unitsCol).cast("long").as("units"))
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("ord"))
-    prepared.as[(Long, Long, Long)].mapPartitions { it =>
-      // started flag, not a key sentinel (a key may be Long.MinValue)
-      var started = false
-      var curKey = 0L
-      var dir = 1L
-      var sar = 0L
-      var ep = 0L
-      var af = afStart
-      it.map { case (k, o, c) =>
-        val cm = c * up
-        if (!started || k != curKey) {
-          started = true; dir = 1L; sar = cm; ep = cm; af = afStart
+    serialPass(df, keyCol, ordCol, Seq(unitsCol -> "value_units"),
+        Seq("sar_micro", "dir"), 4)(
+      (c, s) => { s(0) = c(0) * up; s(1) = 1L; s(2) = s(0); s(3) = afStart },
+      (c, s) => {
+        val cm = c(0) * up
+        var sar = s(0) + rhaDiv(s(3) * (s(2) - s(0)), afDen)
+        var dir = s(1); var ep = s(2); var af = s(3)
+        if (dir == 1L) {
+          if (cm < sar) { dir = -1L; sar = ep; ep = cm; af = afStart }
+          else if (cm > ep) { ep = cm; af = math.min(af + afStep, afMax) }
         } else {
-          sar += rhaDiv(af * (ep - sar), afDen)
-          if (dir == 1L) {
-            if (cm < sar) { dir = -1L; sar = ep; ep = cm; af = afStart }
-            else if (cm > ep) { ep = cm; af = math.min(af + afStep, afMax) }
-          } else {
-            if (cm > sar) { dir = 1L; sar = ep; ep = cm; af = afStart }
-            else if (cm < ep) { ep = cm; af = math.min(af + afStep, afMax) }
-          }
+          if (cm > sar) { dir = 1L; sar = ep; ep = cm; af = afStart }
+          else if (cm < ep) { ep = cm; af = math.min(af + afStep, afMax) }
         }
-        curKey = k
-        SarMicroRow(k, o, c, sar, dir)
-      }
-    }(Encoders.product[SarMicroRow])
-      .toDF("key", "ord", "value_units", "sar_micro", "dir")
-      .withColumnRenamed("key", keyCol)
-      .withColumnRenamed("ord", ordCol)
+        s(0) = sar; s(1) = dir; s(2) = ep; s(3) = af
+      })
   }
 }

@@ -670,7 +670,6 @@ object TechQueries extends QueryModule {
         .withColumn("tr", greatest(col("hi") - col("lo"),
           abs(col("hi") - col("__cp")), abs(col("lo") - col("__cp"))))
         .select("l_suppkey", "w_ord", "pdm", "mdm", "tr")
-        .localCheckpoint() // feeds three smoothing passes
       // one repartition+sort+fold smooths all three Wilder series (r15:
       // was three emaMicro passes + two joins to re-align them)
       val di = TechnicalIndicators.emaMicroMulti(dm, "l_suppkey", "w_ord",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructType}
+import graft.util.ForklessLocalFs
 
 /** The per-batch incremental store every streaming operator here keeps:
   * a parquet directory with one `batch=<id>` subdirectory per
@@ -24,9 +25,12 @@ object BatchStore {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(new Path(dir))
 
-  /** Overwrite `dir/batch=<batchId>` with `rows`. */
+  /** Overwrite `dir/batch=<batchId>` with `rows`, through the local file
+    * system that sets file modes without a `chmod` process per file and
+    * directory ([[ForklessLocalFs]]). */
   def write(rows: DataFrame, dir: String, batchId: Long): Unit =
-    rows.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+    rows.write.options(ForklessLocalFs.writeOptions).mode("overwrite")
+      .parquet(s"$dir/batch=$batchId")
 
   /** One micro-batch against the store at `dir`: materializes `fresh`
     * (the probe and the write both read it), reads every other batch's

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,10 +56,14 @@ object IncrementalUpdate {
     * as the partitioned writer renders them into directory names. One row
     * per TOUCHED PARTITION (a daily batch touches ≤ one (company, year) per
     * symbol) — bounded metadata, the same driver-side partition listing a
-    * metastore does, not a data collect. */
-  private def touchedPartitions(incoming: DataFrame, partitionCols: Seq[String]): Seq[Row] =
-    incoming.select(partitionCols.map(col) ++ partitionCols.map(col(_).cast("string")): _*)
-      .distinct().collect().toSeq
+    * metastore does, not a data collect. One job and no exchange: each
+    * task deduplicates its own tuples, so the driver receives at most
+    * (input partitions × touched tuples) rows and deduplicates those. */
+  private def touchedPartitions(incoming: DataFrame, partitionCols: Seq[String]): Seq[Row] = {
+    val tuples = incoming.select(
+      partitionCols.map(col) ++ partitionCols.map(col(_).cast("string")): _*)
+    tuples.mapPartitions(_.distinct)(Encoders.row(tuples.schema)).collect().toSeq.distinct
+  }
 
   /** Static partition predicate selecting exactly the partitions present
     * in `incoming`, which the scan planner folds into `PartitionFilters`

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-import graft.operators.TechnicalIndicators.rhaDiv
+import graft.operators.TechnicalIndicators.holtStep
 
 /** One (key, ord, units) observation's indicator row as maintained by the
   * stream: the Holt level/trend state AFTER folding this observation. */
@@ -26,9 +26,10 @@ case class IndicatorState(started: Boolean, lastOrd: Long,
   * [[StreamingDedup]]): provided per-key observations arrive in ord order
   * ACROSS batches (within a batch any order — the fold sorts), the emitted
   * rows equal `TechnicalIndicators.holtMicro` run as one batch over the
-  * union of all batches, row for row. The recurrences are the identical
-  * exact-integer micro steps — no IEEE result enters state, so streaming
-  * vs batch can never drift by representation.
+  * union of all batches, row for row. Both fold with the one
+  * `TechnicalIndicators.holtStep` over exact-integer micro state — no IEEE
+  * result enters state, so streaming vs batch can never drift by
+  * representation.
   *
   * Replay/late-data rule: an observation at ord <= the key's lastOrd is
   * DROPPED (emitting nothing) — a serial recurrence cannot splice history
@@ -70,12 +71,8 @@ object StreamingIndicators {
                 if (!st.started)
                   IndicatorState(started = true, ord, units * up, 0L)
                 else {
-                  val prevLvl = st.levelMicro
-                  val lvl = rhaDiv(alphaNum * units * up +
-                    (alphaDen - alphaNum) * (st.levelMicro + st.trendMicro),
-                    alphaDen)
-                  val trd = rhaDiv(betaNum * (lvl - prevLvl) +
-                    (betaDen - betaNum) * st.trendMicro, betaDen)
+                  val (lvl, trd) = holtStep(st.levelMicro, st.trendMicro,
+                    units * up, alphaNum, alphaDen, betaNum, betaDen)
                   IndicatorState(started = true, ord, lvl, trd)
                 }
               out += IndicatorRow(key, ord, units, st.levelMicro, st.trendMicro)

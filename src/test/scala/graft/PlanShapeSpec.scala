@@ -19,15 +19,20 @@ class PlanShapeSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, 0L, 100L), (1L, 1L, 110L), (2L, 0L, 50L))
       .toDF("k", "ord", "c")
-    val p1 = graft.operators.TechnicalIndicators.holtMicro(df, "k", "ord", "c",
-        unitsScale = 2, alphaNum = 1, alphaDen = 5, betaNum = 1, betaDen = 10)
-      .queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(p1).length === 1, p1.take(1200))
-    assert(p1.contains("MapPartitions"), p1.take(1200))
-    val p2 = graft.operators.TechnicalIndicators.cusumMicro(df, "k", "ord", "c",
-        kMicro = 0L, hMicro = 5L)
-      .queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(p2).length === 1, p2.take(1200))
+    val ti = graft.operators.TechnicalIndicators
+    val passes = Seq(
+      "holtMicro" -> ti.holtMicro(df, "k", "ord", "c",
+        unitsScale = 2, alphaNum = 1, alphaDen = 5, betaNum = 1, betaDen = 10),
+      "cusumMicro" -> ti.cusumMicro(df, "k", "ord", "c", kMicro = 0L, hMicro = 5L),
+      "emaMicro" -> ti.emaMicro(df, "k", "ord", "c", unitsScale = 2, alphaNum = 1, alphaDen = 5),
+      "emaMicroMulti" -> ti.emaMicroMulti(df.withColumn("d", col("c") + 1), "k", "ord",
+        Seq("c", "d"), unitsScale = 2, alphaNum = 1, alphaDen = 14),
+      "sarMicro" -> ti.sarMicro(df, "k", "ord", "c", unitsScale = 2))
+    for ((name, out) <- passes) {
+      val p = out.queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(p).length === 1, s"$name:\n" + p.take(1200))
+      assert(p.contains("MapPartitions"), s"$name:\n" + p.take(1200))
+    }
   }
 
   test("q_evt1/q_corr3/q_ta12: dimension sides broadcast, never nested-loop") {

@@ -159,11 +159,6 @@ class IngestEgressSpec extends SparkSpec {
   test("partitioned write: same file and directory modes as Hadoop's default local file system") {
     val prices = Seq(("AAPL", 2023, 1.0), ("AAPL", 2024, 2.0), ("MSFT", 2024, 3.0))
       .toDF("company", "year", "Close")
-    val forkless = Files.createTempDirectory("graft_forkless").toString
-    val default = Files.createTempDirectory("graft_default").toString
-    IngestEgress.writePartitioned(prices, forkless, Seq("company", "year"))
-    prices.repartition(4, col("company"), col("year"))
-      .write.mode("overwrite").partitionBy("company", "year").parquet(default)
     // unix:mode carries the permission bits and the sticky bit; part file
     // names differ only by write id and task number
     def modes(root: String): Map[String, Int] = {
@@ -175,13 +170,31 @@ class IngestEgressSpec extends SparkSpec {
       }.toMap
       finally s.close()
     }
-    val got = modes(forkless)
-    assert(got.keySet.exists(_.endsWith(".parquet")) && got.keySet.exists(_.endsWith(".crc")))
-    assert(got === modes(default))
+    // each forkless writer against the same write through the default
+    // local file system
+    val writers: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("IngestEgress.writePartitioned",
+        dir => IngestEgress.writePartitioned(prices, dir, Seq("company", "year")),
+        dir => prices.repartition(4, col("company"), col("year"))
+          .write.mode("overwrite").partitionBy("company", "year").parquet(dir)),
+      ("BatchStore.write",
+        dir => graft.streaming.BatchStore.write(prices, dir, 7L),
+        dir => prices.write.mode("overwrite").parquet(s"$dir/batch=7")))
+    for ((name, forklessWrite, defaultWrite) <- writers) {
+      val forkless = Files.createTempDirectory("graft_forkless").toString
+      val default = Files.createTempDirectory("graft_default").toString
+      forklessWrite(forkless)
+      defaultWrite(default)
+      val got = modes(forkless)
+      assert(got.keySet.exists(_.endsWith(".parquet")) && got.keySet.exists(_.endsWith(".crc")),
+        name)
+      assert(got === modes(default), name)
+    }
 
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     ForklessLocalFs.writeOptions.foreach { case (k, v) => conf.set(k, v) }
-    assert(new Path(forkless).getFileSystem(conf).isInstanceOf[ForklessLocalFileSystem])
+    assert(new Path(Files.createTempDirectory("graft_forkless").toString)
+      .getFileSystem(conf).isInstanceOf[ForklessLocalFileSystem])
   }
 
   test("ForklessRawLocalFileSystem.setPermission sets the requested mode, sticky bit included") {

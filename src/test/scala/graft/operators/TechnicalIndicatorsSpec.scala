@@ -6,19 +6,66 @@ import graft.SparkSpec
 class TechnicalIndicatorsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("EMA matches the sequential reference per key and is partition-invariant") {
-    val vals = Seq(10.0, 12.0, 11.0, 15.0, 14.0, 13.0)
-    val rows = for {
-      k <- Seq(1L, 2L); (v, i) <- vals.zipWithIndex
-    } yield (k, i.toLong, v + k) // distinct series per key
-    val df = rows.toDF("k", "ord", "v")
-    for (parts <- Seq(1, 3)) {
-      val out = TechnicalIndicators.ema(df.repartition(parts), "k", "ord", "v", 0.3)
-        .orderBy("k", "ord").select("k", "ema").as[(Long, Double)].collect()
-      for (k <- Seq(1L, 2L)) {
-        val expected = TechnicalIndicators.emaReference(vals.map(_ + k), 0.3)
-        val got = out.filter(_._1 == k).map(_._2).toSeq
-        got.zip(expected).foreach { case (g, e) => assert(math.abs(g - e) < 1e-12) }
+  test("serial pass: a key's first row resets the state for any key value, " +
+    "Long.MinValue and 0 included, at 1 and 4 partitions") {
+    // each key set puts a different key first in its partition: a key
+    // sentinel (Long.MinValue) or a zero-initialised current key without
+    // the started flag would carry state into that key's first row
+    val keySets = Seq(Seq(0L), Seq(Long.MinValue), Seq(Long.MinValue, 0L, 7L))
+    val units = Seq(1000L, 1250L, 1100L, 1575L, 1425L, 1300L, 900L, 1800L)
+    def series(k: Long) = units.map(_ + (k % 97).abs)
+    // operator name -> (run over a frame, per-key reference rows or None)
+    type Run = org.apache.spark.sql.DataFrame => Seq[(Long, Seq[Long])]
+    def rows(out: org.apache.spark.sql.DataFrame, cols: String*): Seq[(Long, Seq[Long])] =
+      out.orderBy("k", "ord").select((Seq("k") ++ cols).map(col): _*).collect().toSeq
+        .map(r => (r.getLong(0), cols.indices.map(i => r.getLong(i + 1))))
+    val ops: Seq[(String, Run, Option[Long => Seq[Seq[Long]]])] = Seq(
+      ("emaMicro",
+        df => rows(TechnicalIndicators.emaMicro(df, "k", "ord", "c", 2, 1, 5), "ema_micro"),
+        Some(k => TechnicalIndicators.emaMicroReference(series(k), 1, 5, 2).map(Seq(_)))),
+      ("emaMicroMulti",
+        df => rows(TechnicalIndicators.emaMicroMulti(df.withColumn("d", col("c") * 3),
+          "k", "ord", Seq("c", "d"), 2, 1, 14), "c_s", "d_s"),
+        Some(k => TechnicalIndicators.emaMicroReference(series(k), 1, 14, 2)
+          .zip(TechnicalIndicators.emaMicroReference(series(k).map(_ * 3), 1, 14, 2))
+          .map { case (a, b) => Seq(a, b) })),
+      ("holtMicro",
+        df => rows(TechnicalIndicators.holtMicro(df, "k", "ord", "c", 2, 1, 5, 1, 10),
+          "level_micro", "trend_micro"),
+        Some(k => TechnicalIndicators.holtMicroReference(series(k), 1, 5, 1, 10, 2)
+          .map { case (l, b) => Seq(l, b) })),
+      ("cusumMicro",
+        df => rows(TechnicalIndicators.cusumMicro(df.withColumn("c", col("c") - 1300L),
+            "k", "ord", "c", kMicro = 20L, hMicro = 300L)
+          .withColumn("alarm_code", coalesce(
+            when(col("alarm") === "up", 1L).when(col("alarm") === "down", -1L), lit(0L))),
+          "sp_micro", "sn_micro", "alarm_code"),
+        Some(k => TechnicalIndicators.cusumReference(series(k).map(_ - 1300L), 20L, 300L)
+          .map { case (sp, sn, a) =>
+            Seq(sp, sn, a.map(x => if (x == "up") 1L else -1L).getOrElse(0L)) })),
+      ("sarMicro",
+        df => rows(TechnicalIndicators.sarMicro(df, "k", "ord", "c", 2), "sar_micro", "dir"),
+        None))
+    for (keys <- keySets; (name, run, reference) <- ops) {
+      val df = keys.flatMap(k => series(k).zipWithIndex.map { case (c, i) => (k, i.toLong, c) })
+        .toDF("k", "ord", "c")
+      val single = run(df.repartition(1))
+      for (parts <- Seq(1, 4)) {
+        val got = run(df.repartition(parts))
+        reference match {
+          case Some(ref) =>
+            for (k <- keys)
+              assert(got.filter(_._1 == k).map(_._2) === ref(k), s"$name key $k at $parts parts")
+          case None =>
+            assert(got === single, s"$name at $parts parts")
+            // with no reference, a key's rows must equal its series run
+            // alone under key 1, which no reset rule can mistake for a
+            // continuation
+            for (k <- keys) {
+              val alone = run(df.where(col("k") === k).withColumn("k", lit(1L)))
+              assert(got.filter(_._1 == k).map(_._2) === alone.map(_._2), s"$name key $k")
+            }
+        }
       }
     }
   }

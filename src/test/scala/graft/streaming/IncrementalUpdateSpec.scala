@@ -12,10 +12,10 @@ class IncrementalUpdateSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs of one merge into an existing store (measured on local[2]):
-    * the touched-partition distinct collect (2: its shuffle stage and its
-    * result), the upsert window's shuffle stage, the write repartition's
+    * the touched-partition collect (1: per-task deduplication, no
+    * shuffle), the upsert window's shuffle stage, the write repartition's
     * shuffle stage and the write. */
-  private val MergeJobs = 5
+  private val MergeJobs = 4
 
   test("daily update: new day inserts, late correction replaces, no duplicates") {
     val symbols = Seq("AAA", "BBB").toDF("Symbol")
@@ -193,9 +193,9 @@ class IncrementalUpdateSpec extends SparkSpec {
     val (jobs, _) = try countingJobs(IncrementalUpdate.mergeBatch(batch, store, partCols, keys))
       finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs <= MergeJobs, s"a merge into an existing store ran $jobs jobs, expected " +
-      s"$MergeJobs: distinct collect 2, window stage 1, write repartition stage 1, write 1 (a " +
-      "merge that infers the store schema and checkpoints the upsert ran 6: the inference " +
-      "and checkpoint jobs more, no write repartition stage)")
+      s"$MergeJobs: touched-partition collect 1, window stage 1, write repartition stage 1, " +
+      "write 1 (a distinct() collect of the touched partitions ran 2: a shuffle stage and its " +
+      "result; a merge that infers the store schema and checkpoints the upsert ran 6)")
     import scala.jdk.CollectionConverters._
     val writeStage = stageTasks.asScala.maxBy(_._1)
     assert(writeStage._2 > 1, s"write stage ran in one task: $stageTasks")

@@ -17,14 +17,17 @@ python3 -m unittest discover -s tools -p 'test_*.py'
 echo "== 3/8 perfbench harness: compile against the engine API + ChecksumSpec"
 (cd perfbench/harness && sbt -batch harness/test)
 
-echo "== 4/8 perfbench daily_merge: backfill + merge correctness checks against the engine"
-# the benchmark's untimed checks (backfill rows/partitions/checksum, merge
+echo "== 4/8 perfbench daily_merge + query_mix: correctness checks against the engine"
+# daily_merge's untimed checks (backfill rows/partitions/checksum, merge
 # content, unique keys, idempotent replay) are the only end-to-end check of
-# the company/year store's write and merge path
-python3 perfbench/run.py --workload daily_merge --seed 1 --seconds 3 --trace 0 \
-  | tail -1 | tee "$OUT/daily_merge.json"
-python3 -c 'import json, sys; r = json.load(open(sys.argv[1])); sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$OUT/daily_merge.json" \
-  || { echo "DAILY_MERGE CHECKS FAILED"; exit 1; }
+# the company/year store's write and merge path; query_mix's are its
+# DuckDB oracles and rows-only floors over the engine's registered queries
+for W in daily_merge query_mix; do
+  python3 perfbench/run.py --workload "$W" --seed 1 --seconds 3 --trace 0 \
+    | tail -1 | tee "$OUT/$W.json"
+  python3 -c 'import json, sys; r = json.load(open(sys.argv[1])); sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$OUT/$W.json" \
+    || { echo "${W^^} CHECKS FAILED"; exit 1; }
+done
 
 echo "== 5/8 verify dump @ $SF"
 sbt -batch "runMain graft.Verify $SF $OUT"
