@@ -258,7 +258,7 @@ object AcidTable {
 
   /** Data-file length: from the manifest (`sz:` — O(manifest), the
     * cluster-scale path) when recorded, one getFileStatus otherwise. */
-  private def entryBytes(f: FileSystem, root: String, e: Entry): Long =
+  private[graft] def entryBytes(f: FileSystem, root: String, e: Entry): Long =
     e.bytes.getOrElse(
       f.getFileStatus(new Path(s"$root/${e.path}")).getLen)
 
@@ -303,7 +303,7 @@ object AcidTable {
   /** Manifest-layer file opens (manifests + checkpoints), counted so the
     * O(checkpoint + suffix) bound on token lookup is a TESTABLE fact
     * rather than a doc claim (AcidTableSpec pins it). */
-  private[operators] val manifestOpens =
+  private[graft] val manifestOpens =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The first half of every sealed-file publish (manifest, checkpoint,
@@ -1068,21 +1068,25 @@ object AcidTable {
     header(spark, root, v, "ts").map(_.toLong).getOrElse(throw
       new IllegalStateException(s"manifest v$v at $root carries no #ts header"))
 
-  /** Time travel by WALL CLOCK: the table as of `tsMillis` — the latest
-    * version whose commit time is at-or-before it (the form users
+  /** The version a WALL-CLOCK time travel to `tsMillis` reads: the
+    * latest one whose commit time is at-or-before it (the form users
     * actually ask for; version numbers are the implementation detail).
     * Commit times are strictly usable because versions are published
     * serially through the rename gate — version order and commit-time
-    * order agree on one table. */
-  def readAsOfTimestamp(spark: SparkSession, root: String,
-                        tsMillis: Long): DataFrame = {
+    * order agree on one table. Every time-travel surface resolves here. */
+  def versionAsOf(spark: SparkSession, root: String, tsMillis: Long): Long = {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"AcidTable at $root has no committed version")
     val at = vs.filter(v => commitTimestamp(spark, root, v) <= tsMillis)
     require(at.nonEmpty,
       s"AcidTable at $root has no version committed at or before $tsMillis")
-    readAsOf(spark, root, at.last)
+    at.last
   }
+
+  /** The table as of wall-clock `tsMillis` ([[versionAsOf]]). */
+  def readAsOfTimestamp(spark: SparkSession, root: String,
+                        tsMillis: Long): DataFrame =
+    readAsOf(spark, root, versionAsOf(spark, root, tsMillis))
 
   private val MaxCommitRetries = 10
 

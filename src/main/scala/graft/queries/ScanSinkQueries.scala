@@ -1213,7 +1213,7 @@ object ScanSinkQueries extends QueryModule {
     // over the z-bucketed base version answered from the MANIFEST (file
     // row counts + min/max stats fold on the driver; the scan is one
     // constant row). metadata_only=1 is derived from the EXECUTED plan
-    // (the AcidAggScan marker) and oracle-pinned, so the gate fails if
+    // (the AcidRowsScan description) and oracle-pinned, so the gate fails if
     // the pushdown ever silently stops serving; the values replay from
     // orders. At 100 TB this is O(manifest) vs a full table read for
     // the first question anyone asks a table.

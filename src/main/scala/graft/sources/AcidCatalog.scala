@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -86,53 +88,41 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
       .map(Identifier.of(namespace, _))
   }
 
-  private def tableFor(root: String, extra: Map[String, String]): Table = {
+  /** The table at `root` — at the head, or pinned to version `asOf`
+    * under THAT version's schema. */
+  private def tableFor(root: String, asOf: Option[Long] = None): Table = {
     val opts = new util.HashMap[String, String]()
     opts.put("root", root)
-    extra.foreach { case (k, v) => opts.put(k, v) }
-    val cis = new CaseInsensitiveStringMap(opts)
-    new AcidSourceTable(AcidSource.tableSchema(spark, root), cis)
+    asOf.foreach(v => opts.put("asOfVersion", v.toString))
+    new AcidSourceTable(AcidSource.tableSchema(spark, root, asOf),
+      new CaseInsensitiveStringMap(opts))
   }
 
   override def loadTable(ident: Identifier): Table = {
     val segs = ident.namespace().toSeq :+ ident.name()
     val root = rootOf(segs)
-    if (isTable(root)) tableFor(root, Map.empty)
-    // `acid.t.history` / `acid.t.detail`: the commit log and the
-    // physical summary of table `t` as metadata tables
-    else if (ident.name() == "history" && segs.length >= 2 &&
-        isTable(rootOf(segs.dropRight(1))))
-      new AcidHistoryTable(rootOf(segs.dropRight(1)))
-    else if (ident.name() == "detail" && segs.length >= 2 &&
-        isTable(rootOf(segs.dropRight(1))))
-      new AcidDetailTable(rootOf(segs.dropRight(1)))
-    else throw new org.apache.spark.sql.catalyst.analysis
-      .NoSuchTableException(ident)
+    if (isTable(root)) tableFor(root)
+    else {
+      // `acid.t.history` / `acid.t.detail`: the commit log and the
+      // physical summary of table `t` as metadata tables
+      val parent = rootOf(segs.dropRight(1))
+      (if (segs.length < 2) None
+       else AcidMetadataTable(ident.name(), parent).filter(_ => isTable(parent)))
+        .getOrElse(throw new org.apache.spark.sql.catalyst.analysis
+          .NoSuchTableException(ident))
+    }
   }
 
   /** `VERSION AS OF v` — Spark hands the version literal through. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val root = rootOf(ident.namespace().toSeq :+ ident.name())
-    if (!isTable(root))
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchTableException(ident)
-    tableFor(root, Map("asOfVersion" -> version))
-  }
+  override def loadTable(ident: Identifier, version: String): Table =
+    tableFor(tableRoot(ident), Some(version.toLong))
 
-  /** `TIMESTAMP AS OF ts` — Spark hands MICROS since epoch; resolve to
-    * the latest version committed at-or-before it (the readAsOfTimestamp
-    * contract) and pin that version. */
+  /** `TIMESTAMP AS OF ts` — Spark hands MICROS since epoch; pin the
+    * latest version committed at-or-before it ([[AcidTable.versionAsOf]]). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val root = rootOf(ident.namespace().toSeq :+ ident.name())
-    if (!isTable(root))
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchTableException(ident)
-    val tsMillis = Math.floorDiv(timestampMicros, 1000L)
-    val vs = AcidTable.versions(spark, root)
-      .filter(v => AcidTable.commitTimestamp(spark, root, v) <= tsMillis)
-    require(vs.nonEmpty,
-      s"$root has no version committed at or before $tsMillis")
-    tableFor(root, Map("asOfVersion" -> vs.last.toString))
+    val root = tableRoot(ident)
+    tableFor(root, Some(AcidTable.versionAsOf(spark, root,
+      Math.floorDiv(timestampMicros, 1000L))))
   }
 
   private def ddlUnsupported(what: String): Nothing =
@@ -149,7 +139,6 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
 
   private def userProps(properties: util.Map[String, String])
       : Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     properties.asScala.toMap.filterNot { case (k, _) =>
       ReservedProps.contains(k) || k.startsWith(TableCatalog.OPTION_PREFIX)
     }
@@ -157,6 +146,15 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
 
   private def rootFor(ident: Identifier): String =
     rootOf(ident.namespace().toSeq :+ ident.name())
+
+  /** The root of the existing table `ident` names. */
+  private def tableRoot(ident: Identifier): String = {
+    val root = rootFor(ident)
+    if (!isTable(root))
+      throw new org.apache.spark.sql.catalyst.analysis
+        .NoSuchTableException(ident)
+    root
+  }
 
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
@@ -169,23 +167,16 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(ident)
     AcidWrite.parquetSchemaOf(schema) // fail fast on exotic types
-    val spark2 = spark
     // v1 = one driver-written schema-bearing empty file: the table is
     // readable from birth (a zero-file manifest has no schema source)
-    val msg = AcidWrite.driverEmptyFile(root,
-      s"data/ddl-${java.util.UUID.randomUUID()}", schema)
-    try {
-      AcidTable.commitInitial(spark2, root,
-        AcidTable.entriesForFiles(spark2, root, Seq(msg.relPath), Nil))
-    } catch {
-      case _: AcidTable.Conflict =>
-        AcidWrite.deleteFiles(root, Seq(msg.relPath))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(ident)
-    }
+    val entries = AcidWrite.entriesOfMessages(spark, root,
+      s"data/ddl-${java.util.UUID.randomUUID()}", schema, Array.empty, Nil,
+      replacesAll = true)
+    AcidCatalog.publishFirst(ident, root, entries)(
+      AcidTable.commitInitial(spark, root, entries))
     val props = userProps(properties)
-    if (props.nonEmpty) AcidTable.setTableProperties(spark2, root, props)
-    tableFor(root, Map.empty)
+    if (props.nonEmpty) AcidTable.setTableProperties(spark, root, props)
+    tableFor(root)
   }
 
   override def stageCreate(ident: Identifier, schema: StructType,
@@ -197,9 +188,7 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
   override def stageReplace(ident: Identifier, schema: StructType,
                             partitions: Array[Transform],
                             properties: util.Map[String, String]): StagedTable = {
-    if (!isTable(rootFor(ident)))
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchTableException(ident)
+    tableRoot(ident)
     staged(ident, schema, partitions, properties, replace = true,
       orCreate = false)
   }
@@ -232,10 +221,7 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
     * operations old files cannot honor) fails fast. */
   override def alterTable(ident: Identifier,
                           changes: TableChange*): Table = {
-    val root = rootFor(ident)
-    if (!isTable(root))
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchTableException(ident)
+    val root = tableRoot(ident)
     var schema = AcidTable.currentSchema(spark, root)
     var schemaChanged = false
     changes.foreach {
@@ -260,7 +246,7 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
         s"ALTER TABLE change ${other.getClass.getSimpleName}")
     }
     if (schemaChanged) AcidTable.evolveSchema(spark, root, schema)
-    tableFor(root, Map.empty)
+    tableFor(root)
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -296,6 +282,20 @@ class AcidCatalog extends TableCatalog with StagingTableCatalog {
   }
 }
 
+object AcidCatalog {
+  /** Run a table's first publish; a lost first-version race deletes the
+    * entries' files and surfaces TableAlreadyExists. */
+  private[sources] def publishFirst(ident: Identifier, root: String,
+                                    entries: Seq[AcidTable.Entry])
+                                   (publish: => Any): Unit =
+    try { publish; () } catch {
+      case _: AcidTable.Conflict =>
+        AcidWrite.deleteFiles(root, entries.map(_.path))
+        throw new org.apache.spark.sql.catalyst.analysis
+          .TableAlreadyExistsException(ident)
+    }
+}
+
 /** A CTAS/RTAS target between `stageCreate` and `commitStagedChanges`:
   * the write lands task files under the (future) table root with NO
   * manifest — invisible to every reader — and the staged commit
@@ -312,74 +312,46 @@ class AcidStagedTable(ident: Identifier, root: String,
   private val writeDir = s"data/ctas-${java.util.UUID.randomUUID()}"
   // the staged write's committed task messages (set at most once — the
   // CTAS plan runs ONE batch write before commitStagedChanges)
-  @volatile private var written: Array[AcidWriteMessage] = Array.empty
-  @volatile private var wroteBatch = false
+  @volatile private var written: Array[WriterCommitMessage] = Array.empty
 
   override def name(): String = s"graft-acid staged $root"
   override def schema(): StructType = stagedSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-        with org.apache.spark.sql.connector.write.SupportsTruncate {
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder with SupportsTruncate {
       // RTAS "truncates" the staged target — the staged commit IS the
       // replace, so the builder just accepts the call
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder =
-        this
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch
-              : org.apache.spark.sql.connector.write.BatchWrite =
-            new org.apache.spark.sql.connector.write.BatchWrite {
-              override def createBatchWriterFactory(
-                  p: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-                  : org.apache.spark.sql.connector.write.DataWriterFactory =
-                new AcidDataWriterFactory(root, writeDir, info.schema())
-              override def commit(
-                  messages: Array[org.apache.spark.sql.connector.write
-                    .WriterCommitMessage]): Unit = {
-                written = messages.collect { case m: AcidWriteMessage => m }
-                wroteBatch = true
-              }
-              override def abort(
-                  messages: Array[org.apache.spark.sql.connector.write
-                    .WriterCommitMessage]): Unit =
-                AcidWrite.deleteFiles(root, messages.collect {
-                  case m: AcidWriteMessage => m.relPath }.toSeq)
-            }
-        }
+      override def truncate(): WriteBuilder = this
+      override def build(): Write = new Write {
+        override def toBatch: BatchWrite =
+          new AcidTaskFileWrite(root, writeDir, info.schema()) {
+            override def commit(messages: Array[WriterCommitMessage]): Unit =
+              written = messages
+          }
+      }
     }
 
   override def commitStagedChanges(): Unit = {
-    val statsCols = props.get("statsCols").toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     // plain CREATE (no AS SELECT) or an all-empty query: the driver
     // writes the one schema-bearing empty file v1 needs
-    val msgs: Array[org.apache.spark.sql.connector.write.WriterCommitMessage] =
-      if (written.nonEmpty) written.toArray
-      else Array(AcidWrite.driverEmptyFile(root, writeDir, stagedSchema))
-    val entries = AcidWrite.entriesOfMessages(spark, root, msgs, statsCols,
-      keepOneIfAllEmpty = true)
-    try {
+    val entries = AcidWrite.entriesOfMessages(spark, root, writeDir,
+      stagedSchema, written,
+      AcidWrite.statsColsOf(new CaseInsensitiveStringMap(props.asJava)),
+      replacesAll = true)
+    AcidCatalog.publishFirst(ident, root, entries) {
       if (replace && AcidTable.versions(spark, root).nonEmpty)
         AcidTable.commitRebase(spark, root, "overwrite", Nil, entries,
           replaceAll = true)
       else AcidTable.commitInitial(spark, root, entries)
-    } catch {
-      case _: AcidTable.Conflict =>
-        AcidWrite.deleteFiles(root, entries.map(_.path))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(ident)
     }
     if (props.nonEmpty) AcidTable.setTableProperties(spark, root, props)
     ()
   }
 
   override def abortStagedChanges(): Unit = {
-    AcidWrite.deleteFiles(root, written.map(_.relPath).toSeq)
+    AcidWrite.dropTaskFiles(root, written)
     // remove the now-empty staging dir; harmless if files remain
     val p = new Path(s"$root/$writeDir")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -388,117 +360,58 @@ class AcidStagedTable(ident: Identifier, root: String,
   }
 }
 
-/** `acid.t.history` — the commit log as a read-only metadata table:
-  * (version, action, n_files, ts_millis), one row per published
-  * version, O(manifest) to serve (the DESCRIBE HISTORY surface). */
-class AcidHistoryTable(root: String) extends Table with SupportsRead {
-  private val tableSchema = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("action", StringType, nullable = false),
-    StructField("n_files", IntegerType, nullable = false),
-    StructField("ts_millis", LongType, nullable = false)))
-
-  override def name(): String = s"graft-acid history $root"
+/** A read-only metadata table of the table at `root`, its rows folded
+  * on the DRIVER at plan time, O(manifest), and served by the one
+  * [[AcidRowsScan]]. */
+class AcidMetadataTable(tableName: String, tableSchema: StructType,
+                        rows: () => Seq[InternalRow])
+  extends Table with SupportsRead {
+  override def name(): String = tableName
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        override def readSchema(): StructType = tableSchema
-        override def toBatch: Batch = this
-        override def planInputPartitions(): Array[InputPartition] = {
+    () => new AcidRowsScan(tableSchema, tableName, rows)
+}
+
+object AcidMetadataTable {
+  private def row(values: Any*): InternalRow = new GenericInternalRow(
+    values.map {
+      case s: String => UTF8String.fromString(s)
+      case v => v
+    }.toArray)
+
+  private def fields(fs: (String, DataType)*): StructType =
+    StructType(fs.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  /** `acid.t.<kind>` over the table at `root`, when `kind` names one:
+    *  - `history`: the commit log, one (version, action, n_files,
+    *    ts_millis) row per published version (DESCRIBE HISTORY);
+    *  - `detail`: DESCRIBE DETAIL as one row — the
+    *    [[graft.operators.AcidTable.detail]] gauges through SQL, sizes
+    *    from the manifest's `sz:` segments where recorded. */
+  def apply(kind: String, root: String): Option[AcidMetadataTable] =
+    kind match {
+      case "history" => Some(new AcidMetadataTable(
+        s"graft-acid history $root",
+        fields("version" -> LongType, "action" -> StringType,
+          "n_files" -> IntegerType, "ts_millis" -> LongType),
+        () => {
           val spark = SparkSession.active
-          val rows = AcidTable.history(spark, root).map { case (v, a, n) =>
-            (v, a, n, AcidTable.commitTimestamp(spark, root, v))
+          AcidTable.history(spark, root).map { case (v, a, n) =>
+            row(v, a, n, AcidTable.commitTimestamp(spark, root, v))
           }
-          Array(AcidHistoryPartition(rows))
-        }
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val rows = p.asInstanceOf[AcidHistoryPartition].rows
-              new PartitionReader[InternalRow] {
-                private var i = -1
-                override def next(): Boolean = { i += 1; i < rows.length }
-                override def get(): InternalRow = {
-                  val (v, a, n, ts) = rows(i)
-                  new GenericInternalRow(Array[Any](v,
-                    UTF8String.fromString(a), n, ts))
-                }
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
+        }))
+      case "detail" => Some(new AcidMetadataTable(
+        s"graft-acid detail $root",
+        fields("version" -> LongType, "last_action" -> StringType,
+          "n_versions" -> LongType, "n_files" -> LongType,
+          "n_masked_files" -> LongType, "n_masks" -> LongType,
+          "data_bytes" -> LongType, "mask_bytes" -> LongType,
+          "last_checkpoint" -> LongType, "stats_cols" -> StringType,
+          "merge_key" -> StringType),
+        () => Seq(row(AcidTable.detail(SparkSession.active, root)
+          .head().toSeq: _*))))
+      case _ => None
     }
 }
-
-case class AcidHistoryPartition(rows: Seq[(Long, String, Int, Long)])
-  extends InputPartition
-
-/** `acid.t.detail` — DESCRIBE DETAIL as a one-row metadata table (the
-  * [[graft.operators.AcidTable.detail]] gauges through SQL). The row is
-  * folded on the DRIVER at plan time — O(manifest), sizes from the
-  * manifest's `sz:` segments where recorded. */
-class AcidDetailTable(root: String) extends Table with SupportsRead {
-  private val tableSchema = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("last_action", StringType, nullable = false),
-    StructField("n_versions", LongType, nullable = false),
-    StructField("n_files", LongType, nullable = false),
-    StructField("n_masked_files", LongType, nullable = false),
-    StructField("n_masks", LongType, nullable = false),
-    StructField("data_bytes", LongType, nullable = false),
-    StructField("mask_bytes", LongType, nullable = false),
-    StructField("last_checkpoint", LongType, nullable = false),
-    StructField("stats_cols", StringType, nullable = false),
-    StructField("merge_key", StringType, nullable = false)))
-
-  override def name(): String = s"graft-acid detail $root"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        override def readSchema(): StructType = tableSchema
-        override def toBatch: Batch = this
-        override def planInputPartitions(): Array[InputPartition] = {
-          val r = AcidTable.detail(SparkSession.active, root).head()
-          Array(AcidDetailPartition((r.getLong(0), r.getString(1),
-            r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-            r.getLong(6), r.getLong(7), r.getLong(8)),
-            (r.getString(9), r.getString(10))))
-        }
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val dp = p.asInstanceOf[AcidDetailPartition]
-              val t = dp.row
-              new PartitionReader[InternalRow] {
-                private var served = false
-                override def next(): Boolean = {
-                  val n = !served; served = true; n
-                }
-                override def get(): InternalRow = new GenericInternalRow(
-                  Array[Any](t._1, UTF8String.fromString(t._2), t._3,
-                    t._4, t._5, t._6, t._7, t._8, t._9,
-                    UTF8String.fromString(dp.props._1),
-                    UTF8String.fromString(dp.props._2)))
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-case class AcidDetailPartition(
-    row: (Long, String, Long, Long, Long, Long, Long, Long, Long),
-    props: (String, String))
-  extends InputPartition

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -44,64 +42,22 @@ import graft.operators.AcidTable
   * which is the unique-key invariant speaking. CDC-stamped tables get
   * the keyed logical delta published with the commit
   * ([[AcidTable.cdcForDeltaCommit]]). */
-class AcidDeltaOperationBuilder(tableOptions: CaseInsensitiveStringMap,
-                                info: RowLevelOperationInfo, keyCol: String)
-  extends RowLevelOperationBuilder {
-  override def build(): RowLevelOperation =
-    new AcidDeltaOperation(tableOptions, info.command(), keyCol)
-}
-
 class AcidDeltaOperation(tableOptions: CaseInsensitiveStringMap,
                          cmd: RowLevelOperation.Command, keyCol: String)
-  extends RowLevelOperation with SupportsDelta {
-
-  private val root = AcidSource.rootOf(tableOptions)
+  // record-level filtering stays ON (groupRewrite = false): a delta
+  // plan touches only matching rows, never whole groups
+  extends AcidOperationBase(tableOptions, cmd, groupRewrite = false)
+  with SupportsDelta {
 
   // a foreign-column DV cannot compose with a mask on the merge key —
   // fold it clean BEFORE pinning the snapshot (the mergeMor contract)
-  private lazy val pinnedVersion: Long = {
-    val spark = SparkSession.active
+  override protected def resolveVersion(spark: SparkSession): Long = {
     AcidTable.foldConflictingDvs(spark, root, keyCol)
-    AcidTable.currentVersion(spark, root)
+    super.resolveVersion(spark)
   }
-
-  @volatile private var operationScan: AcidScan = _
-
-  override def command(): RowLevelOperation.Command = cmd
 
   override def rowId(): Array[NamedReference] =
     Array(Expressions.column(keyCol))
-
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](
-      tableOptions.asCaseSensitiveMap())
-    merged.putAll(o.asCaseSensitiveMap())
-    val opts = new CaseInsensitiveStringMap(merged)
-    val tableSchema = AcidSource.tableSchema(SparkSession.active, root)
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters {
-      private var required = tableSchema
-      private var pushed = Array.empty[org.apache.spark.sql.sources.Filter]
-      private var ranges = Seq.empty[AcidTable.ScanRange]
-      override def pruneColumns(r: StructType): Unit = required = r
-      override def pushFilters(
-          filters: Array[org.apache.spark.sql.sources.Filter])
-          : Array[org.apache.spark.sql.sources.Filter] = {
-        val (rs, accepted) = AcidSource.toScanRanges(filters)
-        ranges = rs; pushed = accepted
-        filters
-      }
-      override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-        pushed
-      override def build(): Scan = {
-        // record-level filtering stays ON (rowLevel = false): a delta
-        // plan touches only matching rows, never whole groups
-        val s = new AcidScan(required, opts, pinnedVersion, ranges)
-        operationScan = s
-        s
-      }
-    }
-  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -110,13 +66,8 @@ class AcidDeltaOperation(tableOptions: CaseInsensitiveStringMap,
         new DeltaWrite {
           override def toBatch: DeltaBatchWrite = new AcidDeltaBatchWrite(
             root, pinnedVersion, info.schema(), keyCol,
-            cmd == RowLevelOperation.Command.DELETE,
-            AcidWrite.statsColsOf(tableOptions), info.queryId(),
-            () => Option(operationScan).map(_.finalScannedPaths)
-              .getOrElse(throw new IllegalStateException(
-                "graft-acid delta write committed without its " +
-                  "operation scan — the rewrite plan never configured " +
-                  "the scan this operation instance captured")))
+            cmd == RowLevelOperation.Command.DELETE, statsCols,
+            info.queryId(), scannedPaths)
         }
       }
     }
@@ -139,7 +90,8 @@ class AcidDeltaBatchWrite(root: String, scanVersion: Long,
       info: PhysicalWriteInfo): DeltaWriterFactory = {
     // the key's type comes from the TABLE, not the row schema — a pure
     // DELETE writes no rows and its row schema is empty
-    val keyField = AcidSource.tableSchema(SparkSession.active, root)
+    val keyField = AcidSource.tableSchema(SparkSession.active, root,
+      Some(scanVersion))
       .fields.find(_.name == keyCol).getOrElse(
         throw new IllegalStateException(
           s"table at $root carries no merge key column '$keyCol'"))
@@ -191,9 +143,7 @@ class AcidDeltaBatchWrite(root: String, scanVersion: Long,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    AcidWrite.deleteFiles(root,
-      messages.collect { case m: AcidDeltaMessage => m }.toSeq
-        .flatMap(m => m.dataPath.toSeq ++ m.maskPath.toSeq))
+    AcidWrite.dropTaskFiles(root, messages)
 }
 
 class AcidDeltaWriterFactory(root: String, dir: String,

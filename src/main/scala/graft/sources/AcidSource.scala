@@ -56,17 +56,19 @@ import graft.operators.AcidTable
   * API against the table schema (primitive columns — the ACID surface's
   * contract; appends must share the table schema, drifted histories are
   * the batch-side [[AcidTable.readReconciled]]'s job). Executors open
-  * files with a fresh Hadoop `Configuration` — correct for local/HDFS
-  * default-config clusters; an object-store deployment would thread the
-  * serialized conf through the partition, a plumbing (not design)
-  * change. */
+  * files with the one configuration [[AcidSource.executorConf]] builds: a
+  * fresh default Hadoop `Configuration` with `file://` resolved to the
+  * forkless local file system — correct for local/HDFS default-config
+  * clusters; an object-store deployment would thread the serialized conf
+  * through the partition, a plumbing (not design) change. */
 class AcidDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-acid"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val root = AcidSource.rootOf(options)
+    val spark = SparkSession.active
     // a time-traveled load reads under THAT version's schema
-    val base = AcidSource.tableSchema(SparkSession.active, root,
-      Option(options.get("asOfVersion")).map(_.toLong))
+    val base = AcidSource.tableSchema(spark, root,
+      AcidSource.timeTravelVersion(spark, root, options))
     // CDC mode (round 14): the feed is full rows + the change kind
     if (options.getBoolean("readChangeFeed", false))
       StructType(base.fields :+
@@ -141,6 +143,49 @@ object AcidSource {
     root
   }
 
+  /** The table's options with a scan's or write's own laid over them: a
+    * catalog-resolved read or INSERT INTO carries only the TABLE's
+    * options, the save()/load() path carries its own. */
+  private[sources] def mergedOptions(table: CaseInsensitiveStringMap,
+                                     over: CaseInsensitiveStringMap)
+      : CaseInsensitiveStringMap = {
+    val m = new util.HashMap[String, String](table.asCaseSensitiveMap())
+    m.putAll(over.asCaseSensitiveMap())
+    new CaseInsensitiveStringMap(m)
+  }
+
+  /** A wall-clock option (`asOfTimestamp`, `startingTimestamp`): epoch
+    * millis, or 'yyyy-MM-dd[ HH:mm:ss]' ('T' accepted as the separator). */
+  private[sources] def parseMillis(raw: String): Long =
+    scala.util.Try(raw.toLong).getOrElse {
+      val norm = if (raw.contains(" ") || raw.contains("T")) raw
+        else raw + " 00:00:00"
+      java.sql.Timestamp.valueOf(norm.replace("T", " ")).getTime
+    }
+
+  /** The version a time-travel option names: `asOfVersion`, or the
+    * latest version committed at or before `asOfTimestamp`; None reads
+    * the head. Schema and snapshot both resolve through this. */
+  private[sources] def timeTravelVersion(spark: SparkSession, root: String,
+                                         options: CaseInsensitiveStringMap)
+      : Option[Long] =
+    Option(options.get("asOfVersion")).map(_.toLong)
+      .orElse(Option(options.get("asOfTimestamp")).map(raw =>
+        AcidTable.versionAsOf(spark, root, parseMillis(raw))))
+
+  /** The one Hadoop configuration the connector opens its task-side
+    * files with (the reader's data files, the writer's task files and
+    * their deletes): a fresh default configuration with `file://`
+    * resolved to [[graft.util.ForklessLocalFileSystem]], so a task file
+    * costs no `chmod` child process and keeps Hadoop's modes. Fresh per
+    * call: the reader sets its projection on it. */
+  private[sources] def executorConf(): Configuration = {
+    val conf = new Configuration()
+    graft.util.ForklessLocalFs.writeOptions.foreach { case (k, v) =>
+      conf.set(k, v) }
+    conf
+  }
+
   /** The table schema, read from the CURRENT version's first data file
     * footer (kilobytes — never a data scan). Append-only consumption
     * assumes one schema across versions; reconcile drifted histories
@@ -167,35 +212,33 @@ object AcidSource {
     }
   }
 
+  /** The deletion-vector key `col` holds in one decoded row: a Long for
+    * int32/int64 (widened), a String for UTF-8 binary, null when the row
+    * holds none. Mask files and masked data files decode through it. */
+  private[sources] def dvKey(g: Group, col: String): AnyRef =
+    if (!g.getType.containsField(col) || g.getFieldRepetitionCount(col) == 0)
+      null
+    else {
+      import PrimitiveType.PrimitiveTypeName._
+      g.getType.getType(col).asPrimitiveType().getPrimitiveTypeName match {
+        case INT64 => java.lang.Long.valueOf(g.getLong(col, 0))
+        case INT32 => java.lang.Long.valueOf(g.getInteger(col, 0).toLong)
+        case BINARY => g.getBinary(col, 0).toStringUsingUTF8
+        case other => throw new IllegalArgumentException(
+          s"graft-acid: unsupported deletion-vector key type $other")
+      }
+    }
+
   /** Driver-side load of one deletion-vector mask parquet (single
-    * `__dvk` column): Longs for int32/int64 keys (widened), Strings for
-    * UTF-8 binary keys. Masks are kilobytes by the MOR contract — the
+    * `__dvk` column). Masks are kilobytes by the MOR contract — the
     * batch planner ships them inside the partitions. */
   private[sources] def readMaskKeys(conf: Configuration,
                                     path: String): Seq[AnyRef] = {
     val reader = ParquetReader.builder(new GroupReadSupport(), new Path(path))
       .withConf(conf).build()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
-    try {
-      var g = reader.read()
-      while (g != null) {
-        if (g.getType.containsField("__dvk") &&
-            g.getFieldRepetitionCount("__dvk") > 0) {
-          import PrimitiveType.PrimitiveTypeName._
-          g.getType.getType("__dvk").asPrimitiveType()
-            .getPrimitiveTypeName match {
-            case INT64 => buf += java.lang.Long.valueOf(g.getLong("__dvk", 0))
-            case INT32 =>
-              buf += java.lang.Long.valueOf(g.getInteger("__dvk", 0).toLong)
-            case BINARY => buf += g.getBinary("__dvk", 0).toStringUsingUTF8
-            case other => throw new IllegalArgumentException(
-              s"graft-acid: unsupported deletion-vector key type $other")
-          }
-        }
-        g = reader.read()
-      }
-    } finally reader.close()
-    buf.toSeq
+    try Iterator.continually(reader.read()).takeWhile(_ != null)
+      .map(dvKey(_, "__dvk")).filter(_ != null).toSeq
+    finally reader.close()
   }
 
   /** Translate Spark's pushed filters into the manifest's inclusive
@@ -410,8 +453,8 @@ class AcidSourceTable(tableSchema: StructType,
     AcidTable.mergeKeyProperty(SparkSession.active, root)
       .filter(k => tableSchema.fields.exists(f =>
         f.name == k && maskable.contains(f.dataType))) match {
-      case Some(k) => new AcidDeltaOperationBuilder(options, info, k)
-      case None => new AcidRowLevelOperationBuilder(options, info)
+      case Some(k) => () => new AcidDeltaOperation(options, info.command(), k)
+      case None => () => new AcidRowLevelOperation(options, info.command())
     }
   }
   override def name(): String = s"graft-acid ${AcidSource.rootOf(options)}"
@@ -443,177 +486,178 @@ class AcidSourceTable(tableSchema: StructType,
   // between (Delta pins its snapshot the same way; a fresh `load()` sees
   // the new head). Lazy so a pure readStream never resolves it — the
   // streaming source tracks versions through its own offsets.
-  // `asOfTimestamp` (epoch millis or 'yyyy-MM-dd[ HH:mm:ss]', round 14)
-  // resolves to the latest version committed at-or-before — the
-  // readAsOfTimestamp contract through the option surface.
+  // `asOfVersion` / `asOfTimestamp` pin the time-traveled version.
   private lazy val pinnedVersion: Long = {
-    val root = AcidSource.rootOf(options)
     val spark = SparkSession.active
-    Option(options.get("asOfVersion")).map(_.toLong)
-      .orElse(Option(options.get("asOfTimestamp")).map { raw =>
-        val millis = scala.util.Try(raw.toLong).getOrElse {
-          val norm = if (raw.contains(" ") || raw.contains("T")) raw
-            else raw + " 00:00:00"
-          java.sql.Timestamp.valueOf(norm.replace("T", " ")).getTime
-        }
-        val vs = AcidTable.versions(spark, root)
-          .filter(v => AcidTable.commitTimestamp(spark, root, v) <= millis)
-        require(vs.nonEmpty,
-          s"$root has no version committed at or before $raw")
-        vs.last
-      })
+    val root = AcidSource.rootOf(options)
+    AcidSource.timeTravelVersion(spark, root, options)
       .getOrElse(AcidTable.currentVersion(spark, root))
   }
 
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.putAll(o.asCaseSensitiveMap())
-    val opts = new CaseInsensitiveStringMap(merged)
-    // column pruning reaches the parquet decode: the reader projects the
-    // file schema down to the required fields (parquet.read.schema), so a
-    // 2-column select over a 50-column table never materializes the rest.
-    // FILTER pushdown (round 14 — VERDICT r13 #1) reaches BOTH skipping
-    // layers: eq/range/in predicates on stats columns become ScanRanges
-    // that prune manifest ENTRIES at planning ([[AcidTable.pruneEntries]],
-    // the readWhere prune through the standard API), and each surviving
-    // file's reader turns them into a parquet FilterPredicate so the
-    // footer's per-block stats skip ROW GROUPS inside the kept files.
-    // Every filter stays residual (Spark re-applies it) — the prune is a
-    // superset by contract, so the decision can never change an answer.
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters
-        with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-      private var required = tableSchema
-      private var pushed = Array.empty[org.apache.spark.sql.sources.Filter]
-      private var ranges = Seq.empty[AcidTable.ScanRange]
-      private var aggScan: Option[AcidAggScan] = None
-      override def pruneColumns(r: StructType): Unit = required = r
-      override def pushFilters(
-          filters: Array[org.apache.spark.sql.sources.Filter])
-          : Array[org.apache.spark.sql.sources.Filter] = {
-        val (rs, accepted) = AcidSource.toScanRanges(filters)
-        ranges = rs
-        pushed = accepted
-        filters // all residual: pruning is a superset, never exact
-      }
-      override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-        pushed
-      // METADATA-ONLY AGGREGATES (round 14): an un-filtered, un-grouped
-      // COUNT(*)/MIN/MAX over a mask-free snapshot is answered from the
-      // MANIFEST — file row counts and min/max stats fold on the driver,
-      // and the "scan" is one constant row. At 100 TB this is the
-      // difference between O(manifest) and a full table read for the
-      // first question anyone asks a table (Delta/Iceberg serve
-      // SELECT count(*) the same way). Declined (→ ordinary scan)
-      // whenever exactness would be at risk: pushed filters, GROUP BY,
-      // any deletion vector (physical counts over-count masked rows),
-      // a file without a recorded row count, a MIN/MAX column without
-      // stats on every file, or a string/float column (string footer
-      // bounds may be truncated; floats carry NaN-ordering hazards).
-      override def supportCompletePushDown(
-          agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-          : Boolean = translateAgg(agg).isDefined
-      override def pushAggregation(
-          agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-          : Boolean = translateAgg(agg) match {
-        case Some(scan) =>
-          aggScan = Some(scan); AcidSource.metadataAggs.incrementAndGet()
-          true
-        case None => false
-      }
-      private def translateAgg(
-          agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-          : Option[AcidAggScan] = {
-        import org.apache.spark.sql.connector.expressions.aggregate._
-        val root = AcidSource.rootOf(opts)
-        if (agg.groupByExpressions().nonEmpty || ranges.nonEmpty) return None
-        val spark = SparkSession.active
-        val entries = AcidTable.entriesOf(spark, root, pinnedVersion)
-        if (entries.exists(_.dv.isDefined)) return None
-        def longStatCol(e: org.apache.spark.sql.connector.expressions.Expression)
-            : Option[String] = e match {
-          case f: org.apache.spark.sql.connector.expressions.NamedReference
-              if f.fieldNames().length == 1 =>
-            val c = f.fieldNames()(0)
-            val ok = tableSchema.fields.find(_.name == c).exists(f =>
-              f.dataType == LongType || f.dataType == IntegerType ||
-                f.dataType == DateType || f.dataType == TimestampType)
-            if (ok && entries.forall(_.statFor(c).isDefined)) Some(c) else None
-          case _ => None
-        }
-        val fields = scala.collection.mutable.ArrayBuffer.empty[StructField]
-        val values = scala.collection.mutable.ArrayBuffer.empty[Any]
-        def dtOf(c: String) = tableSchema.fields.find(_.name == c).get.dataType
-        def fit(dt: org.apache.spark.sql.types.DataType, v: Long): Any =
-          dt match {
-            case IntegerType | DateType => v.toInt
-            case _ => v
-          }
-        agg.aggregateExpressions().foreach {
-          case _: CountStar =>
-            if (entries.exists(_.rows.isEmpty)) return None
-            fields += StructField("count_star", LongType, nullable = false)
-            values += entries.flatMap(_.rows).sum
-          case c: Count if !c.isDistinct &&
-              (c.column() match {
-                // COUNT(literal) counts every row exactly like COUNT(*)
-                // — but ONLY for a NON-NULL literal: SQL requires
-                // COUNT(NULL) = 0, which the physical row count is not
-                // (ADVICE r14)
-                case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-                  l.value() != null
-                case _ => false
-              }) =>
-            if (entries.exists(_.rows.isEmpty)) return None
-            fields += StructField("count_lit", LongType, nullable = false)
-            values += entries.flatMap(_.rows).sum
-          case m: Min => longStatCol(m.column()) match {
-            case Some(c) =>
-              fields += StructField(s"min_$c", dtOf(c))
-              values += fit(dtOf(c), entries.flatMap(_.statFor(c)).map(_.min).min)
-            case None => return None
-          }
-          case m: Max => longStatCol(m.column()) match {
-            case Some(c) =>
-              fields += StructField(s"max_$c", dtOf(c))
-              values += fit(dtOf(c), entries.flatMap(_.statFor(c)).map(_.max).max)
-            case None => return None
-          }
-          // SUM (round 15 — VERDICT r14 #6): folds from the `sum:`
-          // segments the table's sumCols property had every commit
-          // record. int/long columns only (SQL SUM of both is BIGINT);
-          // declines when any entry lacks the sum or a row count, when
-          // the table is empty (SQL says NULL), or when the grand total
-          // leaves the long range (Spark must apply its own overflow
-          // semantics, not ours).
-          case s0: Sum if !s0.isDistinct =>
-            val c = (s0.column() match {
-              case f: org.apache.spark.sql.connector.expressions.NamedReference
-                  if f.fieldNames().length == 1 => Some(f.fieldNames()(0))
-              case _ => None
-            }).filter(c0 => tableSchema.fields.exists(f =>
-              f.name == c0 &&
-                (f.dataType == LongType || f.dataType == IntegerType)))
-              .getOrElse(return None)
-            if (entries.exists(e => e.sumFor(c).isEmpty || e.rows.isEmpty))
-              return None
-            if (entries.flatMap(_.rows).sum == 0L) return None
-            val total = entries.flatMap(_.sumFor(c))
-              .foldLeft(BigInt(0))(_ + _)
-            if (!total.isValidLong) return None
-            fields += StructField(s"sum_$c", LongType)
-            values += total.toLong
-          case _ => return None
-        }
-        Some(new AcidAggScan(root, StructType(fields.toSeq),
-          values.toSeq))
-      }
-      override def build(): Scan = aggScan.getOrElse(
-        new AcidScan(required, opts, pinnedVersion, ranges))
-    }
-  }
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new AcidScanBuilder(tableSchema, AcidSource.mergedOptions(options, o),
+      pinnedVersion)
 }
 
+/** The one pushdown scan builder, for the table's reads and for both
+  * row-level operations' scans. Column pruning reaches the parquet
+  * decode: the reader projects the file schema down to the required
+  * fields (parquet.read.schema), so a 2-column select over a 50-column
+  * table never materializes the rest. FILTER pushdown (round 14 —
+  * VERDICT r13 #1) reaches BOTH skipping layers: eq/range/in predicates
+  * on stats columns become ScanRanges that prune manifest ENTRIES at
+  * planning ([[AcidTable.pruneEntries]], the readWhere prune through the
+  * standard API), and each surviving file's reader turns them into a
+  * parquet FilterPredicate so the footer's per-block stats skip ROW
+  * GROUPS inside the kept files. Every filter stays residual (Spark
+  * re-applies it) — the prune is a superset by contract, so the decision
+  * can never change an answer.
+  *
+  * `capture` receives an operation's built scan: the file set it finally
+  * plans is the set the operation's commit replaces. */
+class AcidScanBuilder(tableSchema: StructType,
+                      options: CaseInsensitiveStringMap,
+                      version: => Long, rowLevel: Boolean = false,
+                      capture: Option[AcidScan => Unit] = None)
+  extends ScanBuilder with SupportsPushDownRequiredColumns
+  with SupportsPushDownFilters with SupportsPushDownAggregates {
+  private var required = tableSchema
+  private var pushed = Array.empty[org.apache.spark.sql.sources.Filter]
+  private var ranges = Seq.empty[AcidTable.ScanRange]
+  private var aggScan: Option[AcidRowsScan] = None
+  override def pruneColumns(r: StructType): Unit = required = r
+  override def pushFilters(
+      filters: Array[org.apache.spark.sql.sources.Filter])
+      : Array[org.apache.spark.sql.sources.Filter] = {
+    val (rs, accepted) = AcidSource.toScanRanges(filters)
+    ranges = rs
+    pushed = accepted
+    filters // all residual: pruning is a superset, never exact
+  }
+  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
+    pushed
+  // METADATA-ONLY AGGREGATES (round 14): an un-filtered, un-grouped
+  // COUNT(*)/MIN/MAX over a mask-free snapshot is answered from the
+  // MANIFEST — file row counts and min/max stats fold on the driver,
+  // and the "scan" is one constant row. At 100 TB this is the
+  // difference between O(manifest) and a full table read for the
+  // first question anyone asks a table (Delta/Iceberg serve
+  // SELECT count(*) the same way). Declined (→ ordinary scan)
+  // whenever exactness would be at risk: pushed filters, GROUP BY,
+  // any deletion vector (physical counts over-count masked rows),
+  // a file without a recorded row count, a MIN/MAX column without
+  // stats on every file, or a string/float column (string footer
+  // bounds may be truncated; floats carry NaN-ordering hazards) — and
+  // always for an operation's scan, which must plan the files its
+  // commit replaces.
+  override def supportCompletePushDown(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+      : Boolean = translateAgg(agg).isDefined
+  override def pushAggregation(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+      : Boolean = translateAgg(agg) match {
+    case Some(scan) =>
+      aggScan = Some(scan); AcidSource.metadataAggs.incrementAndGet()
+      true
+    case None => false
+  }
+  private def translateAgg(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+      : Option[AcidRowsScan] = {
+    import org.apache.spark.sql.connector.expressions.aggregate._
+    val root = AcidSource.rootOf(options)
+    if (capture.isDefined || agg.groupByExpressions().nonEmpty ||
+        ranges.nonEmpty) return None
+    val spark = SparkSession.active
+    val entries = AcidTable.entriesOf(spark, root, version)
+    if (entries.exists(_.dv.isDefined)) return None
+    def longStatCol(e: org.apache.spark.sql.connector.expressions.Expression)
+        : Option[String] = e match {
+      case f: org.apache.spark.sql.connector.expressions.NamedReference
+          if f.fieldNames().length == 1 =>
+        val c = f.fieldNames()(0)
+        val ok = tableSchema.fields.find(_.name == c).exists(f =>
+          f.dataType == LongType || f.dataType == IntegerType ||
+            f.dataType == DateType || f.dataType == TimestampType)
+        if (ok && entries.forall(_.statFor(c).isDefined)) Some(c) else None
+      case _ => None
+    }
+    val fields = scala.collection.mutable.ArrayBuffer.empty[StructField]
+    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def dtOf(c: String) = tableSchema.fields.find(_.name == c).get.dataType
+    def fit(dt: org.apache.spark.sql.types.DataType, v: Long): Any =
+      dt match {
+        case IntegerType | DateType => v.toInt
+        case _ => v
+      }
+    agg.aggregateExpressions().foreach {
+      case _: CountStar =>
+        if (entries.exists(_.rows.isEmpty)) return None
+        fields += StructField("count_star", LongType, nullable = false)
+        values += entries.flatMap(_.rows).sum
+      case c: Count if !c.isDistinct &&
+          (c.column() match {
+            // COUNT(literal) counts every row exactly like COUNT(*)
+            // — but ONLY for a NON-NULL literal: SQL requires
+            // COUNT(NULL) = 0, which the physical row count is not
+            // (ADVICE r14)
+            case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
+              l.value() != null
+            case _ => false
+          }) =>
+        if (entries.exists(_.rows.isEmpty)) return None
+        fields += StructField("count_lit", LongType, nullable = false)
+        values += entries.flatMap(_.rows).sum
+      case m: Min => longStatCol(m.column()) match {
+        case Some(c) =>
+          fields += StructField(s"min_$c", dtOf(c))
+          values += fit(dtOf(c), entries.flatMap(_.statFor(c)).map(_.min).min)
+        case None => return None
+      }
+      case m: Max => longStatCol(m.column()) match {
+        case Some(c) =>
+          fields += StructField(s"max_$c", dtOf(c))
+          values += fit(dtOf(c), entries.flatMap(_.statFor(c)).map(_.max).max)
+        case None => return None
+      }
+      // SUM (round 15 — VERDICT r14 #6): folds from the `sum:`
+      // segments the table's sumCols property had every commit
+      // record. int/long columns only (SQL SUM of both is BIGINT);
+      // declines when any entry lacks the sum or a row count, when
+      // the table is empty (SQL says NULL), or when the grand total
+      // leaves the long range (Spark must apply its own overflow
+      // semantics, not ours).
+      case s0: Sum if !s0.isDistinct =>
+        val c = (s0.column() match {
+          case f: org.apache.spark.sql.connector.expressions.NamedReference
+              if f.fieldNames().length == 1 => Some(f.fieldNames()(0))
+          case _ => None
+        }).filter(c0 => tableSchema.fields.exists(f =>
+          f.name == c0 &&
+            (f.dataType == LongType || f.dataType == IntegerType)))
+          .getOrElse(return None)
+        if (entries.exists(e => e.sumFor(c).isEmpty || e.rows.isEmpty))
+          return None
+        if (entries.flatMap(_.rows).sum == 0L) return None
+        val total = entries.flatMap(_.sumFor(c))
+          .foldLeft(BigInt(0))(_ + _)
+        if (!total.isValidLong) return None
+        fields += StructField(s"sum_$c", LongType)
+        values += total.toLong
+      case _ => return None
+    }
+    val aggSchema = StructType(fields.toSeq)
+    val row: InternalRow = new GenericInternalRow(values.toArray)
+    Some(new AcidRowsScan(aggSchema,
+      s"graft-acid root=$root metadata-only aggregate " +
+        aggSchema.fieldNames.mkString(","), () => Seq(row)))
+  }
+  override def build(): Scan = aggScan.getOrElse {
+    val s = new AcidScan(required, options, version, ranges, rowLevel)
+    capture.foreach(_(s))
+    s
+  }
+}
 /** `rowLevel = true` (round 14): the scan serves a DELETE/UPDATE/MERGE
   * rewrite — pushed and runtime ranges prune FILES ONLY, never records
   * or row groups, because the pushed predicate selects which GROUPS are
@@ -680,12 +724,8 @@ class AcidScan(tableSchema: StructType, options: CaseInsensitiveStringMap,
     val entries = AcidTable.pruneEntries(
       AcidTable.entriesOf(spark, root, pinnedVersion),
       ranges ++ runtimeRanges)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val size = entries.map { e =>
-      e.bytes.getOrElse(new Path(s"$root/${e.path}")
-        .getFileSystem(conf).getFileStatus(
-          new Path(s"$root/${e.path}")).getLen)
-    }.sum
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val size = entries.map(AcidTable.entryBytes(f, root, _)).sum
     val rows: java.util.OptionalLong =
       if (entries.forall(_.rows.isDefined) &&
           !entries.exists(_.dv.isDefined))
@@ -702,11 +742,7 @@ class AcidScan(tableSchema: StructType, options: CaseInsensitiveStringMap,
     // AT OR AFTER the wall clock — resolved once, at stream start
     val fromTs = Option(options.get("startingTimestamp")).map { raw =>
       val spark = SparkSession.active
-      val millis = scala.util.Try(raw.toLong).getOrElse {
-        val norm = if (raw.contains(" ") || raw.contains("T")) raw
-          else raw + " 00:00:00"
-        java.sql.Timestamp.valueOf(norm.replace("T", " ")).getTime
-      }
+      val millis = AcidSource.parseMillis(raw)
       AcidTable.versions(spark, root)
         .find(v => AcidTable.commitTimestamp(spark, root, v) >= millis)
         .getOrElse(AcidTable.versions(spark, root).lastOption
@@ -794,33 +830,34 @@ class AcidScan(tableSchema: StructType, options: CaseInsensitiveStringMap,
     new AcidReaderFactory(tableSchema, planned.masks)
 }
 
-/** The metadata-only aggregate "scan": ONE constant row, folded from
-  * the manifest on the driver — no data file is opened, which IS the
-  * feature. */
-class AcidAggScan(root: String, aggSchema: StructType, values: Seq[Any])
+/** Rows computed on the DRIVER as a one-partition scan — the
+  * metadata-only aggregate's constant row, the `.history` and `.detail`
+  * metadata tables. `rows` runs when the scan plans its partition; no
+  * data file is opened, which IS the feature. */
+class AcidRowsScan(schema: StructType, desc: String,
+                   rows: () => Seq[InternalRow])
   extends Scan with Batch {
-  override def readSchema(): StructType = aggSchema
-  override def description(): String =
-    s"graft-acid root=$root metadata-only aggregate " +
-      aggSchema.fieldNames.mkString(",")
+  override def readSchema(): StructType = schema
+  override def description(): String = desc
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    Array(AcidAggPartition(values))
+    Array(AcidRowsPartition(rows()))
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(
-          p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private var served = false
-          override def next(): Boolean = { val n = !served; served = true; n }
-          override def get(): InternalRow = new GenericInternalRow(
-            p.asInstanceOf[AcidAggPartition].values.toArray)
-          override def close(): Unit = ()
-        }
-    }
+    AcidRowsReaderFactory
 }
 
-case class AcidAggPartition(values: Seq[Any]) extends InputPartition
+case class AcidRowsPartition(rows: Seq[InternalRow]) extends InputPartition
+
+object AcidRowsReaderFactory extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val it = p.asInstanceOf[AcidRowsPartition].rows.iterator
+      private var cur: InternalRow = _
+      override def next(): Boolean = it.hasNext && { cur = it.next(); true }
+      override def get(): InternalRow = cur
+      override def close(): Unit = ()
+    }
+}
 
 /** Offset = (highest FULLY delivered version, plus the number of that
   * version's successor's scan units already delivered) — file-granular
@@ -870,17 +907,19 @@ class AcidMicroBatchStream(root: String, tableSchema: StructType,
     (if (cdcMode) planCdcVersion(v) else planIncrementVersion(v))
       .map(_.asInstanceOf[AcidFilePartition])
 
-  /** Data-file byte size from the manifest (`sz:`), one getFileStatus
-    * for files predating it (CDC files always stat — they ride no
-    * entry). Admission control only — never correctness. */
-  private def unitBytes(v: Long, u: AcidFilePartition): Long = {
-    val rel = u.path.stripPrefix(s"$root/")
-    AcidTable.entriesOf(spark, root, v)
-      .find(_.path == rel).flatMap(_.bytes).getOrElse {
-        val p = new Path(u.path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p).getLen
-      }
+  /** Byte size of a version `v` unit, from ONE read of its entries
+    * ([[AcidTable.entryBytes]]: the manifest's `sz:`, one getFileStatus
+    * for files predating it; CDC files ride no entry and size as a bare
+    * one). Admission control only — never correctness. */
+  private def unitBytes(v: Long): AcidFilePartition => Long = {
+    val byPath = AcidTable.entriesOf(spark, root, v)
+      .map(e => e.path -> e).toMap
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    u => {
+      val rel = u.path.stripPrefix(s"$root/")
+      AcidTable.entryBytes(f, root,
+        byPath.getOrElse(rel, new AcidTable.Entry(rel, Nil)))
+    }
   }
 
   /** Admission-controlled high watermark: walk versions after the
@@ -913,10 +952,11 @@ class AcidMicroBatchStream(root: String, tableSchema: StructType,
       .filter(v => v > cv && v <= h)
     for (v <- vs if !stop && versionsDone < maxVersionsPerBatch) {
       val units = unitsOf(v)
+      val bytesOf = unitBytes(v)
       val from = if (v == s.version + 1) s.fileIdx else 0L
       var idx = from
       while (idx < units.length && !stop) {
-        val b = unitBytes(v, units(idx.toInt))
+        val b = bytesOf(units(idx.toInt))
         val admitFirst = files == 0L // progress guarantee
         if (!admitFirst && (files + 1 > maxFilesPerBatch ||
             bytes + b > maxBytesPerBatch)) stop = true
@@ -1049,17 +1089,19 @@ class AcidFileReader(p: AcidFilePartition, schema: StructType,
   extends PartitionReader[InternalRow] {
 
   private val path = p.path
-  private val longMask: java.util.HashSet[Long] =
-    if (dvLongKeys.isEmpty) null
-    else { val s = new java.util.HashSet[Long](dvLongKeys.length * 2)
-      dvLongKeys.foreach(s.add); s }
-  private val strMask: java.util.HashSet[String] =
-    if (dvStrKeys.isEmpty) null
-    else { val s = new java.util.HashSet[String](dvStrKeys.length * 2)
-      dvStrKeys.foreach(s.add); s }
+  // the partition's mask keys, in the shape AcidSource.dvKey decodes
+  private val mask: java.util.HashSet[AnyRef] =
+    if (p.dvCol == null || dvLongKeys.isEmpty && dvStrKeys.isEmpty) null
+    else {
+      val s = new java.util.HashSet[AnyRef](
+        (dvLongKeys.length + dvStrKeys.length) * 2)
+      dvLongKeys.foreach(l => s.add(java.lang.Long.valueOf(l)))
+      dvStrKeys.foreach(s.add)
+      s
+    }
 
   private val reader: ParquetReader[Group] = {
-    val conf = new Configuration()
+    val conf = AcidSource.executorConf()
     // project the decode down to the pruned columns (plus the DV column —
     // the mask check must still see the key even when the query did not
     // select it — and the pushed-range columns, which the parquet filter
@@ -1100,21 +1142,9 @@ class AcidFileReader(p: AcidFilePartition, schema: StructType,
     cur != null
   }
 
-  private def masked(g: Group): Boolean = {
-    if (p.dvCol == null) return false
-    if (!g.getType.containsField(p.dvCol) ||
-        g.getFieldRepetitionCount(p.dvCol) == 0) return false
-    import PrimitiveType.PrimitiveTypeName._
-    g.getType.getType(p.dvCol).asPrimitiveType().getPrimitiveTypeName match {
-      case INT64 =>
-        longMask != null && longMask.contains(g.getLong(p.dvCol, 0))
-      case INT32 =>
-        longMask != null && longMask.contains(g.getInteger(p.dvCol, 0).toLong)
-      case BINARY =>
-        strMask != null &&
-          strMask.contains(g.getBinary(p.dvCol, 0).toStringUsingUTF8)
-      case _ => false
-    }
+  private def masked(g: Group): Boolean = mask != null && {
+    val k = AcidSource.dvKey(g, p.dvCol)
+    k != null && mask.contains(k)
   }
 
   override def get(): InternalRow = {

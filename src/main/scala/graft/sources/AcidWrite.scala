@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetFileWriter
@@ -41,9 +40,11 @@ import graft.operators.AcidTable
   * surface the read path decodes (long/int/double/float/boolean/string/
   * binary + DATE/micros-TIMESTAMP) — no Spark parquet sink underneath,
   * so the path works from any DSv2-speaking engine. Executors open
-  * files with a fresh Hadoop Configuration (the read path's documented
-  * local/HDFS contract; an object-store deployment threads the
-  * serialized conf through, a plumbing change).
+  * files with [[AcidSource.executorConf]], the read path's one
+  * configuration: `file://` resolves to the forkless local file system,
+  * so a task file costs no `chmod` child process (the local/HDFS
+  * contract; an object-store deployment threads the serialized conf
+  * through, a plumbing change).
   *
   * Bootstrap contract: the DSv2 surface appends to / overwrites an
   * EXISTING table (schema inference needs a committed version — create
@@ -89,41 +90,43 @@ object AcidWrite {
     Option(options.get("statsCols")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
 
-  private[sources] def deleteFiles(root: String, rels: Seq[String]): Unit = {
-    val conf = new Configuration()
-    rels.foreach { rel =>
-      val p = new Path(s"$root/$rel")
-      val fs = p.getFileSystem(conf)
-      fs.delete(p, false)
-      ()
+  private[sources] def deleteFiles(root: String, rels: Seq[String]): Unit =
+    if (rels.nonEmpty) {
+      val fs = new Path(root).getFileSystem(AcidSource.executorConf())
+      rels.foreach(rel => fs.delete(new Path(s"$root/$rel"), false))
     }
-  }
 
-  /** One schema-bearing EMPTY parquet file, written by the DRIVER
-    * (ADVICE r14): an overwrite of an empty 0-partition DataFrame runs
-    * NO tasks, so `keepOneIfAllEmpty` has no empty task file to keep —
-    * without this, the published zero-file 'overwrite' manifest would
-    * have no schema source and every read of the head would fail until
-    * the next commit. */
-  private[sources] def driverEmptyFile(root: String, dir: String,
-                                       schema: StructType): AcidWriteMessage = {
-    val w = new AcidDataWriter(root, s"$dir/part-driver-empty.parquet", schema)
-    w.commit().asInstanceOf[AcidWriteMessage]
-  }
+  /** Delete every task file a write's messages name — an aborted job, or
+    * a replayed streaming epoch whose token already landed. */
+  private[sources] def dropTaskFiles(root: String,
+                                     messages: Array[WriterCommitMessage])
+      : Unit =
+    deleteFiles(root, messages.toSeq.flatMap {
+      case m: AcidWriteMessage => Seq(m.relPath)
+      case m: AcidDeltaMessage => m.dataPath.toSeq ++ m.maskPath
+      case _ => Nil
+    })
 
-  /** Shared job-commit step: drop zero-row files (deleting them), keep
-    * one schema-bearing empty file when `keepOneIfAllEmpty`, and return
-    * the manifest entries for what survives. */
+  /** The one job-commit step of every file-publishing write: drop
+    * zero-row task files (deleting them) and return the manifest entries
+    * for what survives. `replacesAll` marks a commit whose manifest would
+    * otherwise list no file — it keeps one schema-bearing empty file (a
+    * zero-file version has no schema source), written by the DRIVER when
+    * no task sent a message (ADVICE r14: an overwrite of an empty
+    * 0-partition DataFrame runs NO tasks). */
   private[sources] def entriesOfMessages(
-      spark: SparkSession, root: String,
+      spark: SparkSession, root: String, dir: String, schema: StructType,
       messages: Array[WriterCommitMessage], statsCols: Seq[String],
-      keepOneIfAllEmpty: Boolean): Seq[AcidTable.Entry] = {
-    val msgs = messages.collect { case m: AcidWriteMessage => m }.toSeq
-      .sortBy(_.relPath)
+      replacesAll: Boolean): Seq[AcidTable.Entry] = {
+    val sent = messages.collect { case m: AcidWriteMessage => m }.toSeq
+    val msgs = (if (replacesAll && sent.isEmpty) Seq(
+      new AcidDataWriter(root, s"$dir/part-driver-empty.parquet", schema)
+        .commit().asInstanceOf[AcidWriteMessage])
+      else sent).sortBy(_.relPath)
     val (full, empty) = msgs.partition(_.rows > 0L)
     val kept =
       if (full.nonEmpty) full
-      else if (keepOneIfAllEmpty && empty.nonEmpty) empty.take(1)
+      else if (replacesAll) empty.take(1)
       else Seq.empty
     deleteFiles(root, msgs.diff(kept).map(_.relPath))
     AcidTable.entriesForFiles(spark, root, kept.map(_.relPath), statsCols)
@@ -137,14 +140,7 @@ case class AcidWriteMessage(relPath: String, rows: Long)
 class AcidWriteBuilder(info: LogicalWriteInfo,
                        tableOptions: org.apache.spark.sql.util.CaseInsensitiveStringMap)
   extends WriteBuilder with SupportsTruncate {
-  // the save() path carries root/statsCols in the WRITE options; a
-  // catalog-resolved INSERT INTO carries only the TABLE's options
-  private def merged = {
-    val m = new java.util.HashMap[String, String](
-      tableOptions.asCaseSensitiveMap())
-    m.putAll(info.options().asCaseSensitiveMap())
-    new org.apache.spark.sql.util.CaseInsensitiveStringMap(m)
-  }
+  private val merged = AcidSource.mergedOptions(tableOptions, info.options())
   private val root = AcidSource.rootOf(merged)
   private val statsCols = AcidWrite.statsColsOf(merged)
   private var replaceAll = false
@@ -175,24 +171,37 @@ class AcidWriteBuilder(info: LogicalWriteInfo,
   }
 }
 
+/** What every graft-acid batch write shares: each task writes one file
+  * under `dir` ([[AcidDataWriterFactory]]), an aborted job drops every
+  * file its tasks reported, and the commit turns the messages into
+  * manifest entries through [[AcidWrite.entriesOfMessages]]. */
+abstract class AcidTaskFileWrite(root: String, dir: String,
+                                 schema: StructType,
+                                 alignTrailing: Boolean = false)
+  extends BatchWrite {
+  override def createBatchWriterFactory(
+      info: PhysicalWriteInfo): DataWriterFactory =
+    new AcidDataWriterFactory(root, dir, schema, alignTrailing)
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    AcidWrite.dropTaskFiles(root, messages)
+
+  protected def entriesOf(messages: Array[WriterCommitMessage],
+                          statsCols: Seq[String],
+                          replacesAll: Boolean): Seq[AcidTable.Entry] =
+    AcidWrite.entriesOfMessages(SparkSession.active, root, dir, schema,
+      messages, statsCols, replacesAll)
+}
+
 class AcidBatchWrite(root: String, schema: StructType,
                      statsCols: Seq[String], replaceAll: Boolean,
                      writeId: String,
-                     evolveTo: Option[StructType] = None) extends BatchWrite {
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new AcidDataWriterFactory(root, s"data/dsv2-$writeId", schema)
+                     evolveTo: Option[StructType] = None)
+  extends AcidTaskFileWrite(root, s"data/dsv2-$writeId", schema) {
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    // a 0-partition overwrite ran no tasks at all — the driver writes
-    // the one schema-bearing empty file keepOneIfAllEmpty would keep
-    val withSchema: Array[WriterCommitMessage] =
-      if (replaceAll && !messages.exists(_.isInstanceOf[AcidWriteMessage]))
-        Array(AcidWrite.driverEmptyFile(root, s"data/dsv2-$writeId", schema))
-      else messages
-    val entries = AcidWrite.entriesOfMessages(spark, root, withSchema,
-      statsCols, keepOneIfAllEmpty = replaceAll)
+    val entries = entriesOf(messages, statsCols, replacesAll = replaceAll)
     if (replaceAll)
       AcidTable.commitRebase(spark, root, "overwrite", Nil, entries,
         replaceAll = true)
@@ -206,10 +215,6 @@ class AcidBatchWrite(root: String, schema: StructType,
         schemaHeader = evolveTo)
     () // an all-empty plain append publishes nothing
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    AcidWrite.deleteFiles(root,
-      messages.collect { case m: AcidWriteMessage => m.relPath }.toSeq)
 }
 
 /** Exactly-once streaming sink: the epoch id IS the idempotency token.
@@ -221,9 +226,11 @@ class AcidBatchWrite(root: String, schema: StructType,
 class AcidStreamingWrite(root: String, schema: StructType,
                          statsCols: Seq[String], queryId: String)
   extends StreamingWrite {
+  private val dir = s"data/dsv2-$queryId"
+
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new AcidStreamingDataWriterFactory(root, s"data/dsv2-$queryId", schema)
+    new AcidDataWriterFactory(root, dir, schema)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -231,11 +238,10 @@ class AcidStreamingWrite(root: String, schema: StructType,
     val token = s"stream-$queryId-$epochId"
     AcidTable.tokenVersion(spark, root, token) match {
       case Some(_) => // replayed epoch: drop its re-written files, no-op
-        AcidWrite.deleteFiles(root,
-          messages.collect { case m: AcidWriteMessage => m.relPath }.toSeq)
+        AcidWrite.dropTaskFiles(root, messages)
       case None =>
-        val entries = AcidWrite.entriesOfMessages(spark, root, messages,
-          statsCols, keepOneIfAllEmpty = false)
+        val entries = AcidWrite.entriesOfMessages(spark, root, dir, schema,
+          messages, statsCols, replacesAll = false)
         if (entries.nonEmpty)
           AcidTable.commitRebase(spark, root, "append", Nil, entries,
             token = Some(token))
@@ -245,26 +251,22 @@ class AcidStreamingWrite(root: String, schema: StructType,
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
-    AcidWrite.deleteFiles(root,
-      messages.collect { case m: AcidWriteMessage => m.relPath }.toSeq)
+    AcidWrite.dropTaskFiles(root, messages)
 }
 
+/** The task writers of batch jobs (`part-<partition>-<task>`) and of
+  * streaming epochs (`e<epoch>-part-<partition>-<task>`). */
 class AcidDataWriterFactory(root: String, dir: String, schema: StructType,
                             alignTrailing: Boolean = false)
-  extends DataWriterFactory {
+  extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new AcidDataWriter(root, f"$dir/part-$partitionId%05d-$taskId.parquet",
-      schema, alignTrailing)
-}
-
-class AcidStreamingDataWriterFactory(root: String, dir: String,
-                                     schema: StructType)
-  extends StreamingDataWriterFactory {
+    writer(f"part-$partitionId%05d-$taskId")
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new AcidDataWriter(root,
-      f"$dir/e$epochId-part-$partitionId%05d-$taskId.parquet", schema)
+    writer(f"e$epochId-part-$partitionId%05d-$taskId")
+  private def writer(stem: String) =
+    new AcidDataWriter(root, s"$dir/$stem.parquet", schema, alignTrailing)
 }
 
 /** One task → one parquet file, encoded through the Group API. The
@@ -288,7 +290,7 @@ class AcidDataWriter(root: String, relPath: String, schema: StructType,
   private val groups = new SimpleGroupFactory(msg)
   private val writer = ExampleParquetWriter.builder(
       new Path(s"$root/$relPath"))
-    .withConf(new Configuration())
+    .withConf(AcidSource.executorConf())
     .withType(msg)
     .withWriteMode(ParquetFileWriter.Mode.CREATE)
     .build()
@@ -335,9 +337,7 @@ class AcidDataWriter(root: String, relPath: String, schema: StructType,
 
   override def abort(): Unit = {
     if (open) { writer.close(); open = false }
-    val p = new Path(s"$root/$relPath")
-    p.getFileSystem(new Configuration()).delete(p, false)
-    ()
+    AcidWrite.deleteFiles(root, Seq(relPath))
   }
 
   override def close(): Unit =

@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.SparkSpec
 import graft.util.{ForklessLocalFileSystem, ForklessLocalFs, ForklessRawLocalFileSystem}
 
@@ -170,6 +173,7 @@ class IngestEgressSpec extends SparkSpec {
       }.toMap
       finally s.close()
     }
+    val acidSchema = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
     // each forkless writer against the same write through the default
     // local file system
     val writers: Seq[(String, String => Unit, String => Unit)] = Seq(
@@ -179,7 +183,21 @@ class IngestEgressSpec extends SparkSpec {
           .write.mode("overwrite").partitionBy("company", "year").parquet(dir)),
       ("BatchStore.write",
         dir => graft.streaming.BatchStore.write(prices, dir, 7L),
-        dir => prices.write.mode("overwrite").parquet(s"$dir/batch=7")))
+        dir => prices.write.mode("overwrite").parquet(s"$dir/batch=7")),
+      // the graft-acid DSv2 task writer, against the same parquet-hadoop
+      // writer opened under a default configuration
+      ("graft-acid DSv2 task writer",
+        dir => (0 until 2).foreach { i =>
+          val w = new graft.sources.AcidDataWriterFactory(dir, "data/dsv2-w", acidSchema)
+            .createWriter(i, i.toLong)
+          w.write(InternalRow(i.toLong, i * 10L))
+          w.commit()
+        },
+        dir => (0 until 2).foreach { i =>
+          ExampleParquetWriter.builder(new Path(f"$dir/data/dsv2-w/part-$i%05d-$i.parquet"))
+            .withConf(new Configuration())
+            .withType(graft.sources.AcidWrite.parquetSchemaOf(acidSchema)).build().close()
+        }))
     for ((name, forklessWrite, defaultWrite) <- writers) {
       val forkless = Files.createTempDirectory("graft_forkless").toString
       val default = Files.createTempDirectory("graft_default").toString

@@ -101,6 +101,24 @@ class AcidAdmissionSpec extends SparkSpec {
     assert(batches.flatMap(_._2).toSet === (0L until 4L).toSet)
   }
 
+  test("a capped drain opens as many manifests for a 24-file version " +
+      "as for a 6-file one") {
+    def opens(nFiles: Int): Long = {
+      val root = fresh(s"o$nFiles") + "/tbl"
+      AcidTable.commitAppend(spark.range(0, nFiles, 1, nFiles)
+        .select($"id".as("k"), $"id".as("v")), root, statsCols = Seq("k"))
+      assert(AcidTable.entriesOf(spark, root, 1L).length === nFiles)
+      val before = AcidTable.manifestOpens.get()
+      // a cap far above the file count: one batch either way, but the
+      // admission walk sizes every unit
+      val batches = drain(root, fresh(s"oc$nFiles"),
+        Map("maxFilesPerBatch" -> "1000000"))
+      assert(batches.flatMap(_._2).toSet === (0L until nFiles.toLong).toSet)
+      AcidTable.manifestOpens.get() - before
+    }
+    assert(opens(24) === opens(6))
+  }
+
   test("legacy {version:N} offsets deserialize as (N, 0)") {
     val s = new AcidMicroBatchStream("/tmp/none", null,
       startingVersion = 1L, maxVersionsPerBatch = Long.MaxValue)

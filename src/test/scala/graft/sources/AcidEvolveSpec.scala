@@ -139,6 +139,31 @@ class AcidEvolveSpec extends SparkSpec {
     assert(seen.toSet === Set(1L, 3L))
   }
 
+  test("every time-travel form reads the old version under its own " +
+      "schema: asOfVersion, VERSION AS OF, asOfTimestamp, TIMESTAMP AS OF") {
+    val root = mk("e9")
+    val ts1 = AcidTable.commitTimestamp(spark, root, 1L)
+    // the later commits must be told apart from v1 by wall clock
+    Thread.sleep(5)
+    spark.sql("ALTER TABLE ev.e9 ADD COLUMN note STRING")
+    spark.sql("INSERT INTO ev.e9 VALUES (9, 90, 'new')")
+    assert(AcidTable.commitTimestamp(spark, root, 2L) > ts1)
+    def v1 = spark.read.format("graft-acid").option("root", root)
+    val forms = Seq(
+      "asOfVersion" -> v1.option("asOfVersion", "1").load(),
+      "VERSION AS OF" -> spark.sql("SELECT * FROM ev.e9 VERSION AS OF 1"),
+      "asOfTimestamp" -> v1.option("asOfTimestamp", ts1.toString).load(),
+      "TIMESTAMP AS OF" -> spark.sql(
+        s"SELECT * FROM ev.e9 TIMESTAMP AS OF timestamp_millis($ts1)"))
+    for ((form, df) <- forms) {
+      assert(df.columns.toSeq === Seq("k", "v"), form)
+      assert(df.as[(Int, Int)].collect().toSet ===
+        (1 to 5).map(i => (i, i * 10)).toSet, form)
+    }
+    assert(spark.sql("SELECT * FROM ev.e9").columns.toSeq ===
+      Seq("k", "v", "note"))
+  }
+
   test("commitAppendEvolve is the engine-level mergeSchema twin") {
     val root = mk("e7")
     AcidTable.commitAppendEvolve(

@@ -121,7 +121,7 @@ class AcidWriteSpec extends SparkSpec {
     val sink = new AcidStreamingWrite(root, schema, Nil, "q-replay")
     def writeEpoch(epoch: Long, taskId: Long,
                    rows: Seq[(Long, Long)]): AcidWriteMessage = {
-      val w = new AcidStreamingDataWriterFactory(root, "data/dsv2-q-replay",
+      val w = new AcidDataWriterFactory(root, "data/dsv2-q-replay",
         schema).createWriter(0, taskId, epoch)
       rows.foreach { case (k, v) =>
         w.write(InternalRow(k, v))

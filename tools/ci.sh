@@ -8,6 +8,8 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft_ci.XXXXXX)"
 
 echo "== 1/8 compile + tests"
+# includes graft.util.ForklessWriteSpec: a JFR jdk.ProcessStart recording
+# around each forkless local writer fails the run on any chmod it forks
 sbt -batch test
 
 echo "== 2/8 perfbench arithmetic tests + regression-tool tests"
